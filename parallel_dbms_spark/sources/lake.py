@@ -582,7 +582,9 @@ def read_point_lookup(
 
     cond = F.lit(True)
     for r in probe_rows:
-        word, mask = int(r.bit) // 64, 1 << (int(r.bit) % 64)
+        word, bit = divmod(int(r.bit), 64)
+        # the sparse words are signed longs: bit 63 is the sign bit
+        mask = 1 << bit if bit < 63 else -(1 << 63)
         cond = cond & F.exists(F.col("sparse"), _admits(word, mask))
     files = [r.file for r in man.filter(cond).select("file").collect()]
     n_total = man.count()

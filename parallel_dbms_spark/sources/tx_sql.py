@@ -997,20 +997,11 @@ def tx_sql(
                     })
             else:
                 _parse_upd_or_del(act, cond, matched)
-        plain_upsert = (
-            matched == [{"cond": None, "action": "update", "set": None}]
-            and not_matched == [{"cond": None, "values": None}]
-            and not nmbs
+        v, n = txlog.tx_merge(
+            spark, path, src, keys,
+            matched=matched, not_matched=not_matched,
+            not_matched_by_source=nmbs,
         )
-        if plain_upsert:
-            # the UPDATE SET * / INSERT * fast path (no clause engine)
-            v, n = txlog.tx_merge_upsert(spark, path, src, keys)
-        else:
-            v, n = txlog.tx_merge(
-                spark, path, src, keys,
-                matched=matched, not_matched=not_matched,
-                not_matched_by_source=nmbs,
-            )
         return _result(spark, "merge", path, v, f"{n} files rewritten")
 
     # ---------------- UPDATE / DELETE ----------------
@@ -1584,9 +1575,10 @@ def _explain_dml(
 ) -> DataFrame:
     """Representative read plans for MERGE/UPDATE/DELETE without
     executing the write: phase 1 is the hit-file discovery scan
-    (tx_merge's source-key leftsemi join / the predicate filter for
-    UPDATE-DELETE, `txlog.py` tx_merge/tx_update_where/tx_delete_where),
-    phase 2 the rewrite projection over the hit rows. The frames mirror
+    (tx_merge's source-key leftsemi join / the predicate filter of
+    the copy-on-write kernel behind UPDATE-DELETE, `txlog.py`
+    tx_merge/_cow_rewrite), phase 2 the rewrite projection over the
+    hit rows. The frames mirror
     the write path's shape (same joins, same predicates over the same
     snapshot scan) — broadcast decisions, pushed filters and the
     absence of a cartesian show up exactly as the write would plan

@@ -761,6 +761,19 @@ def _ident_wm_from_stats(
     return out
 
 
+def _ident_meta(
+    table: str, idents: dict, cols: list, stats: dict | None,
+    ident_wm: dict,
+) -> dict:
+    """Commit meta advancing the identity watermark past the values a
+    write assigned to ``cols`` (see :func:`_ident_wm_from_stats`)."""
+    new_wm = _ident_wm_from_stats(
+        table, idents, cols, stats, ident_wm,
+        (_effective_mapping(table) or {}).get,
+    )
+    return {"identity_watermark": {**ident_wm, **new_wm}}
+
+
 def copy_into_sources(table: str, version: int | None = None) -> set:
     """Source paths already loaded by :func:`tx_copy_into` — the
     newest-wins FULL set (each copy commit re-records the cumulative
@@ -882,11 +895,9 @@ def tx_copy_into(
         schema = table_schema(table)
         meta = {"copy_into_sources": sorted(set(loaded) | set(todo))}
         if ident_assigned and added:
-            new_wm = _ident_wm_from_stats(
-                table, idents, ident_assigned, stats, ident_wm,
-                (_effective_mapping(table) or {}).get,
+            meta.update(
+                _ident_meta(table, idents, ident_assigned, stats, ident_wm)
             )
-            meta["identity_watermark"] = {**ident_wm, **new_wm}
         try:
             # parent pinned at PLAN time (when the loaded set was
             # read): a racing COPY INTO claiming a later version is
@@ -1407,6 +1418,25 @@ def _serve_logical(df: DataFrame, table: str,
     return df.select(
         *[F.col(c).alias(p2l.get(c, c)) for c in df.columns]
     )
+
+
+def _live_rows(
+    spark: SparkSession, table: str, schema, files: list[str], dvs: dict
+) -> DataFrame:
+    """The live rows of ``files`` for a layout rewrite: deletion
+    vectors applied and logical names served; under row tracking each
+    row carries its materialized id and commit version, so the
+    rewrite never changes a row's identity or "last modified"."""
+    rt = table_row_tracking(table)
+    reader = _data_reader(spark, table, schema, row_ids=rt)
+    if rt:
+        return _materialize_row_ids(
+            _tagged_scan(reader, table, files, dvs), table
+        ).drop("__rel", "__pos")
+    return _serve_logical(_apply_dvs(
+        reader.parquet(*[os.path.join(table, f) for f in files]),
+        table, dvs,
+    ), table)
 
 
 def _to_physical_df(df: DataFrame, mapping: dict | None) -> DataFrame:
@@ -2879,7 +2909,11 @@ def _stage_distinct_fold(
             c = c.drop_null()
         v = c.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
         pos_based = v >= 1
-        bucket = np.where(pos_based, (v - 1) // 32768 + 1, -((-v) // 32768))
+        # v <= 0 buckets truncate toward zero, ceil(v / 32768), computed
+        # without negating v (-INT64_MIN wraps back to INT64_MIN)
+        bucket = np.where(
+            pos_based, (v - 1) // 32768 + 1, (v + 32767) // 32768
+        )
         pos = np.where(pos_based, (v - 1) % 32768, (-v) % 32768)
         rel = f"{rel_prefix}{pid}.parquet"
         files, buckets, bitsets = [], [], []
@@ -2932,9 +2966,14 @@ def _json_safe(v):
     """Footer statistics values -> JSON-storable, order-preserving
     encodings (ISO timestamps/dates sort lexicographically; Decimal as
     str would not, so it is excluded from skipping — see
-    _footer_stats)."""
+    _footer_stats). A zoned timestamp (a UTC-adjusted footer, or a
+    zoned bound) renders as naive UTC, the session zone naive bounds
+    are read in: a ``+00:00`` suffix would sort a bound equal to a
+    file's min below it and skip the file."""
     import datetime
 
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     if isinstance(v, (datetime.datetime, datetime.date)):
         return v.isoformat()
     if isinstance(v, bytes):
@@ -2984,7 +3023,13 @@ def collect_file_stats(
                 if st is None or not st.has_min_max:
                     ok = False
                     break
-                lo, hi = _json_safe(st.min), _json_safe(st.max)
+                try:
+                    lo, hi = _json_safe(st.min), _json_safe(st.max)
+                except NotImplementedError:
+                    # pyarrow cannot decode INT96 (Spark's default
+                    # timestamp encoding) statistics: record none
+                    ok = False
+                    break
                 if isinstance(lo, decimal.Decimal):
                     ok = False
                     break
@@ -3993,6 +4038,121 @@ def _partition_only_equality(
     return out or None
 
 
+def _pure_split(
+    table: str, files: list[str], pf: dict | None
+) -> tuple[list[str], list[str]]:
+    """Split ``files`` by a :func:`_partition_only_equality` filter into
+    (pure, scan): pure files' RECORDED partition values prove every
+    row matches (droppable metadata-only); the rest must be scanned.
+    No filter = nothing is pure."""
+    if not pf:
+        return [], files
+    pv_map = snapshot_pv(table)
+    pure = [
+        f
+        for f in files
+        if (vals := pv_map.get(f)) is not None
+        and all(c in vals and vals[c] in w for c, w in pf.items())
+    ]
+    pure_set = set(pure)
+    return pure, [f for f in files if f not in pure_set]
+
+
+def _cow_rewrite(
+    spark: SparkSession,
+    table: str,
+    op: str,
+    predicate_sql: str,
+    max_retries: int,
+    image,
+    stats_cols: list[str] | None = None,
+    pure_ok: bool = False,
+    cdc=None,
+    insert=None,
+    read_predicate: str | None = None,
+) -> tuple[int, int]:
+    """The copy-on-write kernel behind DELETE, UPDATE and replaceWhere:
+    snapshot, find the files holding predicate-true rows, rewrite
+    them, and commit (removed = hit files, added = rewrites) against
+    the snapshot parent; on :class:`TxConflict` redo it all from a
+    fresh snapshot. The read uses the RECORDED schema, never footer
+    inference: after an additive merge_schema append the live set is
+    mixed-schema, and one footer would drop evolved columns from the
+    rewrite for good. The commit re-records that schema.
+
+    Callers supply what differs: ``image(src, pred)`` rewrites the hit
+    files' :func:`_live_rows`; ``pure_ok`` drops provably-all-match
+    partition files metadata-only; ``cdc(src, pred)`` is the change
+    frame to stage; ``insert()`` re-plans fresh rows per attempt as
+    :func:`_complete_append_laws`' tuple (the commit then lands even
+    when no row hits); ``read_predicate`` becomes the commit's read
+    set. Returns (new_version, files_removed)."""
+    from pyspark.sql import functions as F
+
+    pf = _partition_only_equality(table, predicate_sql) if pure_ok else None
+    pred = F.coalesce(F.expr(predicate_sql), F.lit(False))
+    for _ in range(max_retries):
+        ins = insert() if insert is not None else None
+        parent, files = snapshot_files(table)
+        if not files and ins is None:
+            return parent, 0
+        schema = table_schema(table)
+        schema_json = schema.json() if schema is not None else None
+        dvs = snapshot_dvs(table)
+        pure, scan_files = _pure_split(table, files, pf)
+        hit_rels = sorted(
+            r["__rel"]
+            for r in _tagged_scan(
+                _data_reader(spark, table, schema), table, scan_files, dvs
+            ).filter(pred).select("__rel").distinct().collect()
+        ) if scan_files else []
+        if not hit_rels and not pure and ins is None:
+            return parent, 0
+        added, pv, cdc_rel = [], {}, None
+        if hit_rels:
+            src = _live_rows(spark, table, schema, hit_rels, dvs)
+            # _stage drops empty part files, so an all-deleted rewrite
+            # stages nothing without a separate emptiness probe
+            added, p = _stage_for(image(src, pred), table)
+            pv.update(p or {})
+            if cdc is not None:
+                cdc_rel = _stage_cdc(cdc(src, pred), table)
+        eff_stats, new_files, assigned = stats_cols, [], []
+        if ins is not None:
+            ins_df, eff_stats, idents, ident_wm, assigned = ins
+            new_files, p = _stage_for(ins_df, table)
+            added += new_files
+            pv.update(p or {})
+        stats = (
+            collect_file_stats(table, added, eff_stats)
+            if eff_stats and added else None
+        )
+        meta = (
+            _ident_meta(table, idents, assigned, stats, ident_wm)
+            if new_files and assigned else None
+        )
+        read_pf = None
+        if read_predicate is not None and pf:
+            # the disjointness exemption compares against commit-
+            # recorded pv (PHYSICAL keys) — translate the parsed
+            # predicate's logical keys so it still fires on
+            # column-mapped tables
+            lm = _effective_mapping(table) or {}
+            read_pf = {lm.get(c, c): w for c, w in pf.items()}
+        removed = sorted(set(pure) | set(hit_rels))
+        try:
+            v = commit(
+                table, op, added, removed, parent,
+                schema_json=schema_json, stats=stats, cdc=cdc_rel,
+                pv=pv or None, meta=meta, read_predicate=read_predicate,
+                read_pf=read_pf,
+            )
+            return v, len(removed)
+        except TxConflict:
+            continue  # fresh snapshot, re-find affected files
+    raise TxConflict(f"{op} on {table} lost {max_retries} straight races")
+
+
 def tx_delete_where(
     spark: SparkSession,
     table: str,
@@ -4033,87 +4193,19 @@ def tx_delete_where(
     """
     from pyspark.sql import functions as F
 
-    pf = _partition_only_equality(table, predicate_sql)
-    for _ in range(max_retries):
-        parent, files = snapshot_files(table)
-        if not files:
-            return parent, 0
-        pure: list[str] = []
-        scan_files = files
-        if pf and not write_cdc:
-            pv_map = snapshot_pv(table)
-            pure = [
-                f
-                for f in files
-                if (vals := pv_map.get(f)) is not None
-                and all(c in vals and vals[c] in w for c, w in pf.items())
-            ]
-            pure_set = set(pure)
-            scan_files = [f for f in files if f not in pure_set]
-        # read with the RECORDED schema, not footer inference: after an
-        # additive merge_schema append the live set is mixed-schema and
-        # inference from one footer would silently drop evolved columns
-        # from the rewrite (permanent data loss once the old files are
-        # removed). Record the schema on our commit too, so it stays
-        # the newest schema-bearing commit.
-        schema = table_schema(table)
-        schema_json = schema.json() if schema is not None else None
-        dvs = snapshot_dvs(table)
-        # row tracking: the rewrite reads the surviving rows' ids and
-        # MATERIALIZES them into the rewritten files — a delete next
-        # door never changes a survivor's identity
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        pred = F.coalesce(F.expr(predicate_sql), F.lit(False))
-        if scan_files:
-            df = _tagged_scan(reader, table, scan_files, dvs)
-            hit_rels = sorted(
-                r["__rel"]
-                for r in df.filter(pred).select("__rel").distinct().collect()
-            )
-        else:
-            hit_rels = []
-        if not hit_rels and not pure:
-            return parent, 0
-        if hit_rels:
-            survivors = (
-                _materialize_row_ids(
-                    _tagged_scan(reader, table, hit_rels, dvs), table
-                )
-                .filter(~F.coalesce(F.expr(predicate_sql), F.lit(False)))
-                .drop("__rel", "__pos")
-            )
-            pv = None
-            if survivors.limit(1).count():
-                added, pv = _stage_for(survivors, table)
-            else:
-                added = []
-        else:
-            added, pv = [], None
-        stats = (
-            collect_file_stats(table, added, stats_cols)
-            if stats_cols and added else None
+    def deleted(src, pred):
+        return (
+            src.filter(pred)
+            .drop(_ROW_ID_COL, _ROW_COMMIT_COL)
+            .withColumn("_change_type", F.lit("delete"))
         )
-        cdc = None
-        if write_cdc:
-            deleted = (
-                _tagged_scan(reader, table, hit_rels, dvs)
-                .filter(pred)
-                .drop("__rel", "__pos", _ROW_ID_COL, _ROW_COMMIT_COL)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            cdc = _stage_cdc(deleted, table)
-        removed = sorted(set(pure) | set(hit_rels))
-        try:
-            v = commit(
-                table, "delete", added, removed, parent,
-                schema_json=schema_json, stats=stats, cdc=cdc,
-                pv=pv or None,
-            )
-            return v, len(removed)
-        except TxConflict:
-            continue  # fresh snapshot, re-find affected files
-    raise TxConflict(f"delete on {table} lost {max_retries} straight races")
+
+    return _cow_rewrite(
+        spark, table, "delete", predicate_sql, max_retries,
+        image=lambda src, pred: src.filter(~pred),
+        stats_cols=stats_cols, pure_ok=not write_cdc,
+        cdc=deleted if write_cdc else None,
+    )
 
 
 def _complete_append_laws(
@@ -4299,102 +4391,31 @@ def tx_replace_where(
     """
     from pyspark.sql import functions as F
 
-    src_df = df
-    pf = _partition_only_equality(table, predicate_sql)
     checked_pred = False
-    for _ in range(max_retries):
+
+    def insert():
         # append laws re-run PER ATTEMPT (mirrors tx_copy_into): the
         # identity watermark is re-read fresh, ids re-assigned, and
         # the commit records {**fresh_wm, **new_wm} — a stale map here
         # would roll a racing generator's reservation back and re-issue
         # its values (silent uniqueness violation)
-        df, eff_stats, idents, ident_wm, ident_assigned = (
-            _complete_append_laws(src_df, table, stats_cols)
-        )
-        pred = F.coalesce(F.expr(predicate_sql), F.lit(False))
+        nonlocal checked_pred
+        laws = _complete_append_laws(df, table, stats_cols)
         if not checked_pred:
-            if df.filter(~pred).limit(1).count():
+            pred = F.coalesce(F.expr(predicate_sql), F.lit(False))
+            if laws[0].filter(~pred).limit(1).count():
                 raise ValueError(
                     "replaceWhere data must satisfy the predicate "
                     f"{predicate_sql!r} (Delta's rule: a replacement "
                     "may not write outside the range it replaces)"
                 )
             checked_pred = True  # law-invariant across attempts
-        parent, files = snapshot_files(table)
-        schema = table_schema(table)
-        schema_json = schema.json() if schema is not None else None
-        dvs = snapshot_dvs(table)
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        pure: list[str] = []
-        scan_files = files
-        if pf:
-            pv_map = snapshot_pv(table)
-            pure = [
-                f
-                for f in files
-                if (vals := pv_map.get(f)) is not None
-                and all(c in vals and vals[c] in w for c, w in pf.items())
-            ]
-            pure_set = set(pure)
-            scan_files = [f for f in files if f not in pure_set]
-        if scan_files:
-            tagged = _tagged_scan(reader, table, scan_files, dvs)
-            hit_rels = sorted(
-                r["__rel"]
-                for r in tagged.filter(pred)
-                .select("__rel").distinct().collect()
-            )
-        else:
-            hit_rels = []
-        added, pv = [], {}
-        if hit_rels:
-            survivors = (
-                _materialize_row_ids(
-                    _tagged_scan(reader, table, hit_rels, dvs), table
-                )
-                .filter(~F.coalesce(F.expr(predicate_sql), F.lit(False)))
-                .drop("__rel", "__pos")
-            )
-            if survivors.limit(1).count():
-                a, p = _stage_for(survivors, table)
-                added += a
-                pv.update(p or {})
-        a, p = _stage_for(df, table)
-        new_files = list(a)
-        added += a
-        pv.update(p or {})
-        stats = (
-            collect_file_stats(table, added, eff_stats)
-            if eff_stats and added else None
-        )
-        eff_meta = None
-        if ident_assigned and new_files:
-            new_wm = _ident_wm_from_stats(
-                table, idents, ident_assigned, stats, ident_wm,
-                (_effective_mapping(table) or {}).get,
-            )
-            eff_meta = {"identity_watermark": {**ident_wm, **new_wm}}
-        removed = sorted(set(pure) | set(hit_rels))
-        # the disjointness exemption compares against commit-recorded
-        # pv (PHYSICAL keys) — translate the parsed predicate's logical
-        # keys so it still fires on column-mapped tables
-        lm = _effective_mapping(table) or {}
-        read_pf = (
-            {lm.get(c, c): w for c, w in pf.items()} if pf else None
-        )
-        try:
-            v = commit(
-                table, "replace_where", added, removed, parent,
-                schema_json=schema_json, stats=stats, pv=pv or None,
-                meta=eff_meta, read_predicate=predicate_sql,
-                read_pf=read_pf,
-            )
-            return v, len(removed)
-        except TxConflict:
-            continue  # fresh snapshot, re-find affected files
-    raise TxConflict(
-        f"replace_where on {table} lost {max_retries} straight races"
+        return laws
+
+    return _cow_rewrite(
+        spark, table, "replace_where", predicate_sql, max_retries,
+        image=lambda src, pred: src.filter(~pred),
+        pure_ok=True, insert=insert, read_predicate=predicate_sql,
     )
 
 
@@ -4429,42 +4450,19 @@ def tx_update_where(
     """
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
-        parent, files = snapshot_files(table)
-        if not files:
-            return parent, 0
-        schema = table_schema(table)
-        schema_json = schema.json() if schema is not None else None
-        dvs = snapshot_dvs(table)
-        # row tracking: the rewrite carries every row's materialized
-        # id; an UPDATED row's materialized commit version is NULLed
-        # so it resolves to THIS commit (the one that produced its new
-        # image) through the base-map fallback
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        df = _tagged_scan(reader, table, files, dvs)
-        pred = F.coalesce(F.expr(predicate_sql), F.lit(False))
-        hit_rels = sorted(
-            r["__rel"]
-            for r in df.filter(pred).select("__rel").distinct().collect()
-        )
-        if not hit_rels:
-            return parent, 0
-        src = _materialize_row_ids(
-            _tagged_scan(reader, table, hit_rels, dvs), table
-        )
-        if rt:
-            src = src.withColumn(
-                _ROW_COMMIT_COL,
-                F.when(pred, F.lit(None).cast("long")).otherwise(
-                    F.col(_ROW_COMMIT_COL)
-                ),
-            )
-        cols = [c for c in src.columns if c not in ("__rel", "__pos")]
-        unknown = sorted(set(assignments) - set(cols))
+    def assigned(src) -> dict:
+        # every expression sees the PRE-update row and casts to its
+        # column's declared type
+        types = {f.name: f.dataType for f in src.schema.fields}
+        return {
+            c: F.expr(e).cast(types[c])
+            for c, e in assignments.items() if c in types
+        }
+
+    def image(src, pred):
+        unknown = sorted(set(assignments) - set(src.columns))
         if unknown:
             raise ValueError(f"UPDATE of unknown columns: {unknown}")
-        types = {f.name: f.dataType for f in src.schema.fields}
         gmap = table_generated_columns(table)
         gen_set = sorted(set(assignments) & set(gmap))
         if gen_set:
@@ -4481,16 +4479,22 @@ def tx_update_where(
                 f"cannot UPDATE GENERATED ALWAYS AS IDENTITY column(s) "
                 f"{id_set} (Delta's rule; declare BY DEFAULT to allow it)"
             )
+        if _ROW_COMMIT_COL in src.columns:
+            # row tracking: an UPDATED row's materialized commit version
+            # is NULLed so it resolves to THIS commit (the one that
+            # produced its new image) through the base-map fallback
+            src = src.withColumn(
+                _ROW_COMMIT_COL,
+                F.when(pred, F.lit(None).cast("long")).otherwise(
+                    F.col(_ROW_COMMIT_COL)
+                ),
+            )
+        new = assigned(src)
         rewritten = src.select(
-            *[
-                F.when(pred, F.expr(assignments[c]).cast(types[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in cols
-            ]
+            *[F.when(pred, new[c]).otherwise(F.col(c)).alias(c)
+              if c in new else F.col(c) for c in src.columns]
         )
+        types = {f.name: f.dataType for f in src.schema.fields}
         # generated columns RECOMPUTE on the updated rows (an update
         # to a source column must never leave a stale derived value)
         for c, expr in gmap.items():
@@ -4505,52 +4509,31 @@ def tx_update_where(
         # write time; validating the whole rewrite is one pass and
         # also catches drift from earlier unconstrained history)
         _enforce_constraints(rewritten, table)
-        added, pv = _stage_for(rewritten, table)
-        stats = (
-            collect_file_stats(table, added, stats_cols)
-            if stats_cols and added else None
+        return rewritten
+
+    def changes(src, pred):
+        # Delta's UPDATE change-data encoding: the predicate rows'
+        # pre-update state as 'update_preimage' and their post-update
+        # state (the same simultaneous-assignment projection) as
+        # 'update_postimage' — consumers that fold signed deltas weight
+        # preimage -1 / postimage +1, and consumers that care WHY a row
+        # changed can tell an update from an unrelated delete+insert
+        hit = src.filter(pred).drop(_ROW_ID_COL, _ROW_COMMIT_COL)
+        new = assigned(hit)
+        post = hit.select(
+            *[new.get(c, F.col(c)).alias(c) for c in hit.columns]
         )
-        cdc = None
-        if write_cdc:
-            # Delta's UPDATE change-data encoding: the predicate rows'
-            # pre-update state as 'update_preimage' and their
-            # post-update state (the same simultaneous-assignment
-            # projection) as 'update_postimage' — consumers that fold
-            # signed deltas weight preimage -1 / postimage +1, and
-            # consumers that care WHY a row changed can tell an update
-            # from an unrelated delete+insert pair
-            cdc_cols = [
-                c for c in cols if c not in (_ROW_ID_COL, _ROW_COMMIT_COL)
-            ]
-            pre = src.filter(pred).select(*cdc_cols)
-            post = src.filter(pred).select(
-                *[
-                    F.expr(assignments[c]).cast(types[c]).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in cdc_cols
-                ]
-            )
-            cdc = _stage_cdc(
-                pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                table,
-            )
-        try:
-            v = commit(
-                table, "update", added, hit_rels, parent,
-                schema_json=schema_json, stats=stats, cdc=cdc,
-                pv=pv or None,
-            )
-            return v, len(hit_rels)
-        except TxConflict:
-            continue  # fresh snapshot, re-find affected files
-    raise TxConflict(f"update on {table} lost {max_retries} straight races")
+        return hit.withColumn(
+            "_change_type", F.lit("update_preimage")
+        ).unionByName(
+            post.withColumn("_change_type", F.lit("update_postimage"))
+        )
+
+    return _cow_rewrite(
+        spark, table, "update", predicate_sql, max_retries,
+        image=image, stats_cols=stats_cols,
+        cdc=changes if write_cdc else None,
+    )
 
 
 def tx_delete_where_mor(
@@ -4594,18 +4577,7 @@ def tx_delete_where_mor(
         if not files:
             return parent, 0
         dvs_now = snapshot_dvs(table)
-        pure: list[str] = []
-        scan_files = files
-        if pf:
-            pv_map = snapshot_pv(table)
-            pure = [
-                f
-                for f in files
-                if (vals := pv_map.get(f)) is not None
-                and all(c in vals and vals[c] in w for c, w in pf.items())
-            ]
-            pure_set = set(pure)
-            scan_files = [f for f in files if f not in pure_set]
+        pure, scan_files = _pure_split(table, files, pf)
         schema = table_schema(table)
         schema_json = schema.json() if schema is not None else None
         reader = _data_reader(spark, table, schema)
@@ -4912,22 +4884,13 @@ def tx_merge_upsert(
 ) -> tuple[int, int]:
     """Transactional MERGE (SCD-1 upsert): ``MERGE INTO table USING
     source ON keys WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED
-    THEN INSERT *`` as one atomic commit.
+    THEN INSERT *`` as one atomic commit — a preset of
+    :func:`tx_merge`, which owns the rewrite, the identity and
+    row-tracking contracts, the CDC encoding and the retry loop.
 
-    Only the files that CONTAIN a source key are rewritten (their
-    non-matched rows survive verbatim); the full deduplicated source
-    stages as fresh files. removed = hit files, added = survivor
-    rewrites + source files — so a merge conflicts with any
-    interleaved delete/compact/merge that rewrote the same files
-    (retry from a fresh snapshot) while appends commute. Source rows
-    are deduplicated on ``keys`` first (one surviving row per key,
-    callers needing last-write-wins pre-reduce by timestamp).
-
-    ``write_cdc``: persist the change set as a sidecar riding the
-    commit — matched rows' PRE-images as 'delete' plus the full
-    deduplicated source as 'insert' (an update therefore appears as
-    its pair, an insert alone) — making the merge streamable by
-    ``readChangeFeed`` and its ``tx_changes`` a plain scan.
+    A source column omitted from the upsert keeps the target's value
+    on matched rows (``SET *`` semantics) and fills like an append on
+    inserts.
 
     Isolation note (Delta's WriteSerializable): a concurrent APPEND
     that lands the same key commutes at the file level — the merge
@@ -4937,278 +4900,13 @@ def tx_merge_upsert(
 
     Returns (new_version, files_rewritten).
     """
-    from pyspark.sql import functions as F
-
-    keys = list(keys)
-    source = source.dropDuplicates(keys)
-    # a merge lands source rows verbatim, so the source obeys the
-    # same generated-column law as an append: omitted -> filled,
-    # supplied -> must equal its expression
-    source, _ = _apply_generated(source, table)
-    # IDENTITY under MERGE (Delta's semantics): the source may not
-    # supply a GENERATED ALWAYS column; an OMITTED identity column is
-    # completed here — matched keys keep the TABLE's existing values
-    # (an upsert must never re-mint a row's id), unmatched keys
-    # generate fresh ones beyond the watermark
-    ids_map = table_identity(table)
-    supplied_always = sorted(
-        c for c in ids_map
-        if c in source.columns and ids_map[c]["always"]
+    return tx_merge(
+        spark, table, source, keys,
+        matched=[{"cond": None, "action": "update", "set": None}],
+        not_matched=[{"cond": None, "values": None}],
+        max_retries=max_retries, stats_cols=stats_cols, meta=meta,
+        write_cdc=write_cdc,
     )
-    if supplied_always:
-        raise ValueError(
-            f"merge source supplies GENERATED ALWAYS AS IDENTITY "
-            f"column(s) {supplied_always}; omit them (matched rows "
-            "keep the table's values, inserts generate) or declare "
-            "BY DEFAULT"
-        )
-    for _ in range(max_retries):
-        parent, files = snapshot_files(table)
-        schema = table_schema(table)
-        schema_json = schema.json() if schema is not None else None
-        if table_identity(table) != ids_map:
-            # a set/drop-identity raced the merge (the identity-vs-
-            # identity conflict class sent us back here): regenerating
-            # under the stale declaration would resurrect a dropped
-            # generator or miss a new one — same guard as tx_append
-            raise ValueError(
-                f"identity declarations on {table} changed while this "
-                "merge ran; re-run the merge"
-            )
-        ident_wm = identity_watermark(table)
-        tbl_cols = {f.name for f in schema.fields} if schema else set()
-        gen_cols = sorted(
-            c for c in ids_map
-            if c not in source.columns and c in tbl_cols
-        )
-        eff_stats_cols = (
-            sorted(set(stats_cols or []) | set(gen_cols))
-            if gen_cols else stats_cols
-        )
-        if not files:
-            eff_source = source
-            for c in gen_cols:
-                spec = ids_map[c]
-                step = int(spec["step"])
-                base = _ident_next_base(
-                    int(spec["start"]), step,
-                    int(ident_wm.get(c, int(spec["start"]) - step)),
-                )
-                eff_source = eff_source.withColumn(
-                    c,
-                    (
-                        F.lit(base)
-                        + F.monotonically_increasing_id() * F.lit(step)
-                    ).cast("long"),
-                )
-            if gen_cols:
-                # pin ONE evaluation of the nondeterministic assignment
-                # — constraint validation, staging, and the CDC image
-                # are separate jobs and must all see the same ids
-                eff_source = eff_source.localCheckpoint()
-            # CHECK constraints validate the COMPLETED source (they may
-            # reference the identity column), re-run per attempt so a
-            # constraint commit winning a race never lets
-            # stale-validated rows land
-            _enforce_constraints(eff_source, table)
-            added = _stage(eff_source, table)
-            stats = (
-                collect_file_stats(table, added, eff_stats_cols)
-                if eff_stats_cols else None
-            )
-            eff_meta = meta
-            if gen_cols and added:
-                new_wm = _ident_wm_from_stats(
-                    table, ids_map, gen_cols, stats, ident_wm,
-                    (_effective_mapping(table) or {}).get,
-                )
-                eff_meta = {
-                    **(meta or {}),
-                    "identity_watermark": {**ident_wm, **new_wm},
-                }
-            cdc = (
-                _stage_cdc(
-                    eff_source.withColumn("_change_type", F.lit("insert")),
-                    table,
-                )
-                if write_cdc
-                else None
-            )
-            try:
-                v = commit(
-                    table, "merge", added, [], parent,
-                    schema_json=schema_json or eff_source.schema.json(),
-                    stats=stats, meta=eff_meta, cdc=cdc,
-                )
-                return v, 0
-            except TxConflict:
-                continue
-        # row tracking: survivor rows of rewritten files carry their
-        # materialized ids; matched rows KEEP the target row's id
-        # (joined in by merge key at staging below — an upsert is an
-        # UPDATE of the same logical row) with __row_commit re-stamped
-        # to this commit; only unmatched inserts mint fresh ids
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        dvs = snapshot_dvs(table)
-        df = _tagged_scan(reader, table, files, dvs)
-        src_keys = source.select(*keys).distinct()
-        hit_rels = sorted(
-            r["__rel"]
-            for r in df.join(src_keys, keys, "leftsemi")
-            .select("__rel")
-            .distinct()
-            .collect()
-        )
-        eff_source = source
-        if gen_cols:
-            # matched keys keep the table's identity values: one
-            # key->id lookup bounded by the HIT files (the only places
-            # a matched key can live); unmatched keys coalesce to a
-            # fresh generated value beyond the watermark
-            if hit_rels:
-                matched_ids = (
-                    _tagged_scan(reader, table, hit_rels, dvs)
-                    .join(src_keys, keys, "left_semi")
-                    .groupBy(*keys)
-                    .agg(*[
-                        F.max(c).alias(f"__tgt_{c}") for c in gen_cols
-                    ])
-                )
-                eff_source = eff_source.join(matched_ids, keys, "left")
-            else:
-                for c in gen_cols:
-                    eff_source = eff_source.withColumn(
-                        f"__tgt_{c}", F.lit(None).cast("long")
-                    )
-            for c in gen_cols:
-                spec = ids_map[c]
-                step = int(spec["step"])
-                base = _ident_next_base(
-                    int(spec["start"]), step,
-                    int(ident_wm.get(c, int(spec["start"]) - step)),
-                )
-                eff_source = eff_source.withColumn(
-                    c,
-                    F.coalesce(
-                        F.col(f"__tgt_{c}"),
-                        (
-                            F.lit(base)
-                            + F.monotonically_increasing_id()
-                            * F.lit(step)
-                        ).cast("long"),
-                    ),
-                ).drop(f"__tgt_{c}")
-            # pin ONE evaluation of the nondeterministic assignment —
-            # constraint validation, data staging, and the CDC image
-            # are separate jobs and must all see the same ids
-            eff_source = eff_source.localCheckpoint()
-        # CHECK constraints validate the COMPLETED source, re-run per
-        # attempt so a constraint commit winning a race never lets
-        # stale-validated rows land
-        _enforce_constraints(eff_source, table)
-        added, pv = [], {}
-        if hit_rels:
-            survivors = (
-                _materialize_row_ids(
-                    _tagged_scan(reader, table, hit_rels, dvs), table
-                )
-                .drop("__rel", "__pos")
-                .join(src_keys, keys, "left_anti")
-            )
-            if survivors.limit(1).count():
-                a, p = _stage_for(survivors, table)
-                added += a
-                pv.update(p or {})
-        tgt_cols = (
-            [f.name for f in schema.fields] if schema is not None
-            else eff_source.columns
-        )
-        stage_src = eff_source.select(*tgt_cols)
-        if rt and hit_rels:
-            # row tracking under MERGE (Delta's stable-id contract): a
-            # matched key's upsert UPDATES the same logical row, so the
-            # source row inherits the target's materialized _row_id —
-            # one key->id lookup bounded by the hit files, the same
-            # pattern as the __tgt_ identity lookup above. __row_commit
-            # stages as NULL so the read path re-stamps it from this
-            # commit's base map (the merge IS the row's current image).
-            # Unmatched inserts stay NULL/NULL and resolve to fresh
-            # base+pos ids like any appended row.
-            tgt_ids = (
-                _materialize_row_ids(
-                    _tagged_scan(reader, table, hit_rels, dvs), table
-                )
-                .join(src_keys, keys, "left_semi")
-                .groupBy(*keys)
-                .agg(F.max(_ROW_ID_COL).alias("__tgt_rid"))
-            )
-            stage_src = (
-                stage_src.join(tgt_ids, keys, "left")
-                .withColumn(_ROW_ID_COL, F.col("__tgt_rid").cast("long"))
-                .withColumn(_ROW_COMMIT_COL, F.lit(None).cast("long"))
-                .drop("__tgt_rid")
-            )
-        a, p = _stage_for(stage_src, table)
-        added += a
-        pv.update(p or {})
-        stats = (
-            collect_file_stats(table, added, eff_stats_cols)
-            if eff_stats_cols and added else None
-        )
-        eff_meta = meta
-        if gen_cols and added:
-            new_wm = _ident_wm_from_stats(
-                table, ids_map, gen_cols, stats, ident_wm,
-                (_effective_mapping(table) or {}).get,
-            )
-            eff_meta = {
-                **(meta or {}),
-                "identity_watermark": {**ident_wm, **new_wm},
-            }
-        cdc = None
-        if write_cdc:
-            # Delta's MERGE change-data encoding: matched keys emit
-            # their pre/post images ('update_preimage' =
-            # the target rows being replaced, 'update_postimage' =
-            # the source rows replacing them); unmatched source keys
-            # emit plain 'insert'. Splitting the source needs the
-            # matched-key set, which is bounded by the hit files.
-            srcd = eff_source.select(*tgt_cols)
-            if hit_rels:
-                matched = (
-                    _tagged_scan(reader, table, hit_rels, dvs)
-                    .drop("__rel", "__pos", _ROW_ID_COL, _ROW_COMMIT_COL)
-                    .join(src_keys, keys, "left_semi")
-                )
-                matched_keys = matched.select(*keys).distinct()
-                pre = matched.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-                post = srcd.join(matched_keys, keys, "left_semi").select(
-                    *tgt_cols
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                ins = srcd.join(matched_keys, keys, "left_anti").select(
-                    *tgt_cols
-                ).withColumn("_change_type", F.lit("insert"))
-                cdc = _stage_cdc(
-                    pre.unionByName(post).unionByName(ins), table
-                )
-            else:
-                cdc = _stage_cdc(
-                    srcd.withColumn("_change_type", F.lit("insert")),
-                    table,
-                )
-        try:
-            v = commit(
-                table, "merge", added, hit_rels, parent,
-                schema_json=schema_json, stats=stats, meta=eff_meta,
-                cdc=cdc, pv=pv or None,
-            )
-            return v, len(hit_rels)
-        except TxConflict:
-            continue  # fresh snapshot, re-find affected files
-    raise TxConflict(f"merge on {table} lost {max_retries} straight races")
 
 
 def tx_merge(
@@ -5224,9 +4922,9 @@ def tx_merge(
     meta: dict | None = None,
     write_cdc: bool = False,
 ) -> tuple[int, int]:
-    """GENERAL transactional MERGE — Delta's full clause model, which
-    :func:`tx_merge_upsert` (the plain ``UPDATE SET * / INSERT *``
-    fast path) cannot express:
+    """Transactional MERGE — Delta's full clause model; the plain
+    ``UPDATE SET * / INSERT *`` upsert (:func:`tx_merge_upsert`) is a
+    preset of it:
 
         MERGE INTO t USING s ON <keys>
           WHEN MATCHED [AND cond] THEN UPDATE SET c = expr, ...
@@ -5252,13 +4950,16 @@ def tx_merge(
     Semantics (Delta's): clauses evaluate IN ORDER per row, first
     satisfied one applies; a matched row satisfying none survives
     verbatim; a source row satisfying no NOT MATCHED clause is
-    dropped. The source is deduplicated on ``keys`` first (same
-    contract as tx_merge_upsert). Unspecified INSERT columns fill
+    dropped. The source is deduplicated on ``keys`` first (one
+    surviving row per key; callers needing last-write-wins pre-reduce
+    by timestamp). Unspecified INSERT columns fill
     like an append: DEFAULTs apply, omitted identity generates
     (fresh watermark per attempt), GENERATED columns compute, CHECK
     constraints validate — and updated images re-compute their
     GENERATED columns and re-validate constraints too. ``SET`` may
-    not target an identity or generated column (Delta rejects both).
+    not target an identity or generated column (Delta rejects both),
+    and under ``SET *`` a source-supplied generated value must equal
+    its expression.
 
     Scope note: NOT MATCHED BY SOURCE widens the rewrite beyond
     source-hit files — by definition it predicates over rows the
@@ -5267,14 +4968,16 @@ def tx_merge(
     clauses' conditions join the rewrite (an unconditional clause is
     a whole-table sync and reads everything, exactly as in Delta).
 
-    Scale shape = tx_merge_upsert's: only files CONTAINING a source
-    key are read or rewritten (removed = hit files); everything else
-    is untouched metadata. The clause engine is one joined projection
-    over the hit rows — no extra shuffle beyond the upsert path.
+    Scale shape: only files CONTAINING a source key are read or
+    rewritten (removed = hit files; their non-matched rows survive
+    verbatim); everything else is untouched metadata, so a merge
+    conflicts with any interleaved rewrite of the same files while
+    appends commute. The clause engine is one joined projection over
+    the hit rows.
 
     ``write_cdc``: stage the change set (update pre/post images,
     'delete' pre-images, 'insert' rows) as a sidecar riding the
-    commit, CDF-streamable like the upsert's.
+    commit, making the merge streamable by ``readChangeFeed``.
 
     Row tracking: updated rows keep the target row's ``_row_id`` with
     ``__row_commit`` re-stamped to this commit; untouched survivors
@@ -5315,6 +5018,13 @@ def tx_merge(
                     f"MERGE may not SET generated column {c!r} "
                     f"(it computes as {gmap[c]!r})"
                 )
+    if gmap and any(
+        cl["action"] == "update" and cl.get("set") is None for cl in matched
+    ):
+        # SET * lands the source's columns verbatim, so a supplied
+        # GENERATED value must equal its expression (the append law)
+        # instead of being silently recomputed on the updated image
+        _apply_generated(source, table)
     supplied_always = sorted(
         c for c in ids_map
         if ids_map[c]["always"] and (
@@ -5607,13 +5317,11 @@ def tx_merge(
             if eff_stats and added else None
         )
         if ident_assigned and added:
-            new_wm = _ident_wm_from_stats(
-                table, idents, ident_assigned, stats, ident_wm,
-                (_effective_mapping(table) or {}).get,
-            )
             eff_meta = {
                 **(meta or {}),
-                "identity_watermark": {**ident_wm, **new_wm},
+                **_ident_meta(
+                    table, idents, ident_assigned, stats, ident_wm
+                ),
             }
         cdc = None
         if write_cdc:
@@ -5750,18 +5458,7 @@ def tx_compact(
         # row tracking: the bin-pack carries every row's materialized
         # id and commit version — compaction is pure layout, a row's
         # identity and "last modified" commit must not change
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        if rt:
-            live_df = _materialize_row_ids(
-                _tagged_scan(reader, table, files, snapshot_dvs(table)),
-                table,
-            ).drop("__rel", "__pos")
-        else:
-            live_df = _serve_logical(_apply_dvs(
-                reader.parquet(*[os.path.join(table, f) for f in files]),
-                table, snapshot_dvs(table),
-            ), table)
+        live_df = _live_rows(spark, table, schema, files, snapshot_dvs(table))
         if zorder_by:
             from .lake import z_cluster
 
@@ -5856,17 +5553,7 @@ def tx_reorg_purge(
             {c for f in hit for c in prior.get(f, {}).get("c", {})}
             | set(table_cluster_by(table))
         )
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        if rt:
-            live_df = _materialize_row_ids(
-                _tagged_scan(reader, table, hit, dvs), table
-            ).drop("__rel", "__pos")
-        else:
-            live_df = _serve_logical(_apply_dvs(
-                reader.parquet(*[os.path.join(table, f) for f in hit]),
-                table, dvs,
-            ), table)
+        live_df = _live_rows(spark, table, schema, hit, dvs)
         # output sizing from the HIT bytes (upper bound on survivors)
         total = sum(os.path.getsize(os.path.join(table, f)) for f in hit)
         eff = max(1, -(-total // target_file_bytes))  # ceil
@@ -5936,18 +5623,7 @@ def tx_repartition_table(
                     f"partition column(s) {missing} not in table schema"
                 )
         schema_json = schema.json() if schema is not None else None
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        if rt:
-            live_df = _materialize_row_ids(
-                _tagged_scan(reader, table, files, snapshot_dvs(table)),
-                table,
-            ).drop("__rel", "__pos")
-        else:
-            live_df = _serve_logical(_apply_dvs(
-                reader.parquet(*[os.path.join(table, f) for f in files]),
-                table, snapshot_dvs(table),
-            ), table)
+        live_df = _live_rows(spark, table, schema, files, snapshot_dvs(table))
         added, pv = _stage_partitioned(live_df, table, list(partition_by))
         stats = (
             collect_file_stats(table, added, stats_cols)
@@ -6129,22 +5805,10 @@ def tx_optimize(
         n_out = max(1, -(-total // target_file_bytes))  # ceil
         schema = table_schema(table)
         schema_json = schema.json() if schema is not None else None
-        rt = table_row_tracking(table)
-        reader = _data_reader(spark, table, schema, row_ids=rt)
-        if rt:
-            live_df = _materialize_row_ids(
-                _tagged_scan(
-                    reader, table, small,
-                    {f: p for f, p in dvs.items() if f in set(small)},
-                ),
-                table,
-            ).drop("__rel", "__pos")
-        else:
-            live_df = _serve_logical(_apply_dvs(
-                reader.parquet(*[os.path.join(table, f) for f in small]),
-                table,
-                {f: p for f, p in dvs.items() if f in set(small)},
-            ), table)
+        live_df = _live_rows(
+            spark, table, schema, small,
+            {f: p for f, p in dvs.items() if f in set(small)},
+        )
         if cluster_by:
             from .lake import z_cluster
 
@@ -6753,11 +6417,9 @@ def tx_overwrite(
         )
         meta = None
         if not overwrite_schema and ident_assigned and added:
-            new_wm = _ident_wm_from_stats(
-                table, idents, ident_assigned, stats, ident_wm,
-                (_effective_mapping(table) or {}).get,
+            meta = _ident_meta(
+                table, idents, ident_assigned, stats, ident_wm
             )
-            meta = {"identity_watermark": {**ident_wm, **new_wm}}
         try:
             # read_predicate='true': the overwrite's read-set is the
             # WHOLE live file list — an interleaved add must conflict,

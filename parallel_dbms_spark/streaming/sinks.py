@@ -513,8 +513,8 @@ def stream_tx_merge(
     not_matched_by_source: list[dict] | None = None,
 ):
     """Stream a change feed into a TRANSACTIONAL table as exactly-once
-    MERGE commits — the streaming face of ``txlog.tx_merge_upsert``
-    and the ACID upgrade of :func:`stream_upsert_sink` (which rewrites
+    MERGE commits — the streaming face of ``txlog.tx_merge`` and the
+    ACID upgrade of :func:`stream_upsert_sink` (which rewrites
     a plain parquet table wholesale; here only the files containing a
     batch's keys rewrite, atomically, and concurrent batch writers
     stay safe under the commit protocol).
@@ -532,11 +532,10 @@ def stream_tx_merge(
     global latest-wins matters.
 
     ``matched``/``not_matched``/``not_matched_by_source``: Delta's
-    full CLAUSE model per micro-batch (the streaming face of
-    :func:`txlog.tx_merge` — a CDC feed carrying an op column can
-    delete, conditionally update column-by-column, and conditionally
-    insert, exactly-once). Omit all three for the plain
-    ``UPDATE SET * / INSERT *`` upsert fast path. NOT MATCHED BY
+    full CLAUSE model per micro-batch — a CDC feed carrying an op
+    column can delete, conditionally update column-by-column, and
+    conditionally insert, exactly-once. Omit all three for the plain
+    ``UPDATE SET * / INSERT *`` upsert. NOT MATCHED BY
     SOURCE applies per BATCH (target rows the batch doesn't carry) —
     an unconditional clause in a streaming sink is almost never what
     you want; condition it.
@@ -545,6 +544,10 @@ def stream_tx_merge(
     from pyspark.sql import functions as F
 
     from ..sources import txlog
+
+    if not (matched or not_matched or not_matched_by_source):
+        matched = [{"cond": None, "action": "update", "set": None}]
+        not_matched = [{"cond": None, "values": None}]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if txlog.txn_seen(table, app, batch_id):
@@ -561,25 +564,16 @@ def stream_tx_merge(
                 .drop("__rn")
             )
         ident = {"txn_app": app, "txn_batch": batch_id}
-        if matched or not_matched or not_matched_by_source:
-            txlog.tx_merge(
-                batch_df.sparkSession,
-                table,
-                batch_df,
-                keys=keys,
-                matched=matched,
-                not_matched=not_matched,
-                not_matched_by_source=not_matched_by_source,
-                meta=ident,
-            )
-        else:
-            txlog.tx_merge_upsert(
-                batch_df.sparkSession,
-                table,
-                batch_df,
-                keys=keys,
-                meta=ident,
-            )
+        txlog.tx_merge(
+            batch_df.sparkSession,
+            table,
+            batch_df,
+            keys=keys,
+            matched=matched,
+            not_matched=not_matched,
+            not_matched_by_source=not_matched_by_source,
+            meta=ident,
+        )
 
     w = (
         streaming_df.writeStream.foreachBatch(apply_batch)

@@ -333,6 +333,40 @@ def test_bloom_manifest_point_lookup_prunes_and_matches(spark, tmp_path):
     assert n_read2 <= max(2, n_total // 3)  # generous fp headroom
 
 
+def test_bloom_point_lookup_finds_every_key(spark, tmp_path):
+    """Every key of a small bloom-manifest table is found, including
+    keys whose probe lands on bit 63 of a word — the sign bit of the
+    signed-long sparse words, whose mask is not a positive long."""
+    from parallel_dbms_spark.sources.lake import (
+        read_point_lookup,
+        write_bloom_manifest,
+    )
+
+    t = str(tmp_path / "bloom")
+    spark.range(0, 12).repartition(2).write.parquet(t)
+    write_bloom_manifest(spark, t, "id")
+    man = spark.read.parquet(t + "/_bloom_id").head()
+    bit63 = (
+        spark.range(0, 12)
+        .select(
+            F.exists(
+                F.array(*[
+                    F.pmod(F.xxhash64("id", F.lit(i)), F.lit(man.n_bits))
+                    for i in range(man.n_hashes)
+                ]),
+                lambda b: b % 64 == 63,
+            ).alias("hit")
+        )
+        .filter("hit")
+        .count()
+    )
+    assert bit63 > 0  # the fixture exercises the sign-bit probe
+    for k in range(12):
+        got, n_read, _ = read_point_lookup(spark, t, "id", k)
+        assert [r.id for r in got.collect()] == [k]
+        assert n_read >= 1
+
+
 def test_bloom_autosize_prevents_saturation_on_big_files(spark, tmp_path):
     # The scale cliff this guards: a FIXED bitset saturates once
     # rows/file outgrows it (every bit set -> zero pruning). Auto-size

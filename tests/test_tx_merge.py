@@ -1,9 +1,8 @@
 """Generalized transactional MERGE (txlog.tx_merge): Delta's full
 clause model — conditional matched UPDATE/DELETE, column-level SET,
 conditional INSERT — on the hit-file rewrite machinery. The plain
-``UPDATE SET * / INSERT *`` upsert stays tx_merge_upsert's job
-(tested in test_txlog.py); these tests cover what only the clause
-engine can express."""
+``UPDATE SET * / INSERT *`` upsert (tx_merge_upsert) is a preset of
+it; its contract is pinned here and in test_txlog.py."""
 
 from __future__ import annotations
 
@@ -313,3 +312,60 @@ def test_null_condition_does_not_block_later_clauses(spark, tmp_path):
     )
     ks = sorted(r.k for r in txlog.read_snapshot(spark, t).collect())
     assert ks == [1, 9]
+
+
+def test_upsert_preset_cdc_postimage_is_landed_row(spark, tmp_path):
+    """Duplicate source keys reduce to ONE surviving row per key, and
+    that same row is what lands AND what the change feed reports: the
+    source is pinned once, so the tie-break cannot differ between the
+    staging job and the CDC job."""
+    t = str(tmp_path / "t")
+    txlog.tx_append(
+        _df(spark, [(1, "a", 10), (2, "b", 20), (3, "c", 30)]).coalesce(1),
+        t,
+    )
+    src = _df(
+        spark,
+        [(1, f"x{i}", i) for i in range(8)]
+        + [(2, f"y{i}", i) for i in range(8)]
+        + [(9, f"z{i}", i) for i in range(8)],
+    ).repartition(4)
+    v, n = txlog.tx_merge_upsert(spark, t, src, ["k"], write_cdc=True)
+    assert n == 1
+    landed = {
+        r.k: (r.v, r.amt) for r in txlog.read_snapshot(spark, t).collect()
+    }
+    assert sorted(landed) == [1, 2, 3, 9] and landed[3] == ("c", 30)
+    ch = txlog.tx_changes(spark, t, v - 1, v).collect()
+    post = {
+        r.k: (r.v, r.amt) for r in ch
+        if r._change_type in ("update_postimage", "insert")
+    }
+    assert post == {k: landed[k] for k in (1, 2, 9)}
+    pre = {r.k: (r.v, r.amt) for r in ch
+           if r._change_type == "update_preimage"}
+    assert pre == {1: ("a", 10), 2: ("b", 20)}
+
+
+def test_upsert_preset_rejects_mismatched_generated_value(spark, tmp_path):
+    """The upsert lands source rows verbatim, so a supplied GENERATED
+    value must equal its expression — on a MATCHED row too, whose
+    updated image would otherwise recompute it silently."""
+    t = str(tmp_path / "t")
+    txlog.tx_append(
+        spark.createDataFrame(
+            [(1, 10, 20), (2, 7, 14)], "k long, amt long, dbl long"
+        ).coalesce(1),
+        t,
+    )
+    txlog.tx_set_generated(spark, t, "dbl", "amt * 2")
+    before = txlog.log_versions(t)
+    bad = spark.createDataFrame([(1, 50, 99)], "k long, amt long, dbl long")
+    with pytest.raises(ValueError, match="GENERATED column violation"):
+        txlog.tx_merge_upsert(spark, t, bad, ["k"])
+    assert txlog.log_versions(t) == before  # nothing committed
+    ok = spark.createDataFrame([(1, 50, 100)], "k long, amt long, dbl long")
+    txlog.tx_merge_upsert(spark, t, ok, ["k"])
+    rows = {r.k: (r.amt, r.dbl)
+            for r in txlog.read_snapshot(spark, t).collect()}
+    assert rows == {1: (50, 100), 2: (7, 14)}

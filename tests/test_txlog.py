@@ -3583,7 +3583,7 @@ def test_folded_bitmap_layout_matches_jvm_aggregate(spark, table):
     from pyspark.sql import functions as F
 
     ids = [1, 2, 7, 32767, 32768, 32769, 65536, 0, -1, -32767, -32768,
-           -32769, 10**12, -(10**12), None]
+           -32769, 10**12, -(10**12), -(2**63), None]
     rows = [(i, "x") for i in ids]
     v = txlog.tx_append(
         _df(spark, rows).coalesce(1), table, distinct_cols=["k"]
@@ -3612,6 +3612,87 @@ def test_folded_bitmap_layout_matches_jvm_aggregate(spark, table):
         )
     }
     assert folded == jvm
+
+
+def test_folded_append_payload_types_match_classic(spark, tmp_path):
+    """The fold writes data files with pyarrow, the classic path with
+    Spark: timestamp, decimal and nested payloads must read back
+    identically and record the same footer min/max. Whole-second
+    timestamps are the sharp edge: a UTC-adjusted footer decodes
+    zoned, and a ``+00:00`` suffix would sort a bound equal to a
+    file's min below it and skip the file."""
+    import datetime
+    import decimal
+
+    schema = (
+        "id long, ts timestamp, amt decimal(12,2), "
+        "st struct<a:int,b:string>, arr array<long>, mp map<string,int>"
+    )
+    rows = [
+        (
+            i,
+            datetime.datetime(2024, 1, 1)
+            + datetime.timedelta(hours=7 * i, microseconds=i),
+            decimal.Decimal(i * 3) / 4,
+            (i, f"s{i}"),
+            [i, i + 1],
+            {"k": i},
+        )
+        for i in range(24)
+    ] + [(None,) * 6]
+    stats_cols = ["id", "ts", "amt"]
+    fold, classic = str(tmp_path / "fold"), str(tmp_path / "classic")
+    txlog.tx_append(
+        spark.createDataFrame(rows, schema).coalesce(2), fold,
+        distinct_cols=["id"], stats_cols=stats_cols,
+    )
+    assert txlog.snapshot_distinct_map(fold)["id"]  # took the fold path
+    # Spark writes UTC-adjusted INT64 timestamps only when asked; its
+    # default INT96 footers carry statistics pyarrow cannot decode
+    spark.conf.set("spark.sql.parquet.outputTimestampType",
+                   "TIMESTAMP_MICROS")
+    try:
+        txlog.tx_append(
+            spark.createDataFrame(rows, schema).coalesce(2), classic,
+            stats_cols=stats_cols,
+        )
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+
+    def _key(r):
+        return (r.id is None, r.id)
+
+    assert sorted(txlog.read_snapshot(spark, fold).collect(), key=_key) == (
+        sorted(txlog.read_snapshot(spark, classic).collect(), key=_key)
+    )
+
+    def _ranges(t):
+        return sorted(
+            tuple(sorted((c, tuple(v)) for c, v in e["c"].items()))
+            for e in txlog.snapshot_stats(t).values()
+        )
+
+    assert _ranges(fold) == _ranges(classic)
+    assert all(
+        set(e["c"]) == {"id", "ts"}  # decimal stats are never recorded
+        for e in txlog.snapshot_stats(fold).values()
+    )
+    for t in (fold, classic):
+        df, _, _ = txlog.tx_read_skipping(
+            spark, t, "ts", hi=datetime.datetime(2024, 1, 1)
+        )
+        assert [r.id for r in df.collect()] == [0]
+    df, _, _ = txlog.tx_instant_distinct(spark, fold, "id")
+    assert df.collect()[0].n_distinct == 24
+    # the INT96 default records no timestamp stats instead of failing
+    int96 = str(tmp_path / "int96")
+    txlog.tx_append(
+        spark.createDataFrame(rows, schema).coalesce(1), int96,
+        stats_cols=stats_cols,
+    )
+    assert [set(e["c"]) for e in txlog.snapshot_stats(int96).values()] == [
+        {"id"}
+    ]
 
 
 def test_folded_and_jvm_sidecars_merge_exactly(spark, table):
