@@ -526,6 +526,43 @@ def write_bloom_manifest(
     return spark.read.parquet(out).count()
 
 
+def bloom_probe_bits(
+    spark: SparkSession, value, typ: str, cfgs
+) -> dict:
+    """Bloom probe bit positions of ``value`` for each ``(n_bits,
+    n_hashes)`` config in ``cfgs``: ``{cfg: [pmod(xxhash64(CAST(value
+    AS typ), i), n_bits) for i < n_hashes]}``, the positions
+    :func:`write_bloom_manifest` and the txlog Bloom build set.
+
+    Every config's hashes are projected over a one-row ``VALUES``
+    relation and collected once. The optimizer folds the projection
+    into a local relation, so Spark's own xxhash64 runs on the driver
+    and no job starts."""
+    from pyspark.sql import functions as F
+
+    cfgs = sorted(set(cfgs))
+    if not cfgs:
+        return {}
+    lit = F.lit(value).cast(typ)
+    row = (
+        spark.sql("SELECT * FROM VALUES (0) AS t(__z)")
+        .select(
+            *[
+                F.pmod(F.xxhash64(lit, F.lit(i)), F.lit(nb)).alias(
+                    f"b{j}_{i}"
+                )
+                for j, (nb, nh) in enumerate(cfgs)
+                for i in range(nh)
+            ]
+        )
+        .collect()[0]
+    )
+    return {
+        (nb, nh): [int(row[f"b{j}_{i}"]) for i in range(nh)]
+        for j, (nb, nh) in enumerate(cfgs)
+    }
+
+
 def read_point_lookup(
     spark: SparkSession,
     path: str,
@@ -538,11 +575,12 @@ def read_point_lookup(
     correctness). Returns (DataFrame, n_files_read, n_files_total).
 
     The probe hashes must be bit-identical to the build hashes, so
-    they are computed by Spark's own xxhash64 over a one-row frame
-    typed like the data column (a driver-side reimplementation would
-    silently diverge on type widths). The sidecar membership test is
-    a sparse-word lookup: every probe bit's word must be present with
-    that bit set.
+    they are Spark's own xxhash64 over the value cast to the data
+    column's type, folded on the driver from a one-row ``VALUES``
+    projection (:func:`bloom_probe_bits`; a driver-side
+    reimplementation would silently diverge on type widths). The
+    sidecar membership test is a sparse-word lookup: every probe bit's
+    word must be present with that bit set.
     """
     from pyspark.sql import functions as F
 
@@ -554,21 +592,8 @@ def read_point_lookup(
 
     schema = spark.read.parquet(path).schema
     typ = schema[col].dataType.simpleString()
-    lit = F.lit(value).cast(typ)
-    probe_rows = (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64(lit, F.lit(i)), F.lit(n_bits))
-                        for i in range(n_hashes)
-                    ]
-                )
-            ).alias("bit")
-        )
-        .collect()
-    )
+    cfg = (n_bits, n_hashes)
+    probe = bloom_probe_bits(spark, value, typ, [cfg])[cfg]
     def _admits(word: int, mask: int):
         # single-arg lambda on purpose: PySpark binds higher-order-
         # function callbacks by arity, so default-arg captures would
@@ -581,8 +606,8 @@ def read_point_lookup(
         return check
 
     cond = F.lit(True)
-    for r in probe_rows:
-        word, bit = divmod(int(r.bit), 64)
+    for b in probe:
+        word, bit = divmod(b, 64)
         # the sparse words are signed longs: bit 63 is the sign bit
         mask = 1 << bit if bit < 63 else -(1 << 63)
         cond = cond & F.exists(F.col("sparse"), _admits(word, mask))

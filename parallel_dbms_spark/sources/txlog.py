@@ -275,36 +275,81 @@ def snapshot_dvs(table: str, version: int | None = None) -> dict:
 
 def _rel_expr(table: str):
     """Scan-side expression turning ``_metadata.file_path`` (a URI,
-    %-escaped) back into the table-relative path the log records."""
+    %-escaped) back into the table-relative path the log records. The
+    URI leaves ``+`` bare, and ``url_decode`` (form decoding) reads a
+    bare ``+`` as a space, so it is escaped first."""
     from pyspark.sql import functions as F
 
     prefix = "file:" + os.path.abspath(table) + "/"
+    uri = F.replace(F.col("_metadata.file_path"), F.lit("+"), F.lit("%2B"))
     return F.replace(
-        F.url_decode(F.col("_metadata.file_path")),
+        F.url_decode(uri),
         F.lit(prefix),
         F.lit(""),
     )
 
 
+def _rel_frame(spark: SparkSession, rels: list[str], **longs) -> DataFrame:
+    """Driver-side provenance rows as a frame: a ``__rel`` string
+    column plus one int64 column per keyword. It is built from a
+    ``pyarrow.Table``, so the rows reach the JVM as a local relation;
+    a frame built from a Python list is a Python RDD, and joining it
+    starts a Python-worker job on every read."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "__rel": pa.array(rels, pa.string()),
+                **{k: pa.array(v, pa.int64()) for k, v in longs.items()},
+            }
+        )
+    )
+
+
+def _empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty frame of ``schema``. ``limit(0)`` lets the optimizer
+    replace the list-built Python RDD with an empty local relation, so
+    collecting a read that pruned every file starts no job."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def _dv_frame(spark: SparkSession, dvs: dict) -> DataFrame:
+    """``(__rel, __pos)`` rows of the deletion vectors ``dvs``."""
+    return _rel_frame(
+        spark,
+        [f for f, pos in dvs.items() for _ in pos],
+        __pos=[int(p) for pos in dvs.values() for p in pos],
+    )
+
+
+def _exclude_dvs(tagged: DataFrame, dvs: dict) -> DataFrame:
+    """Drop the deletion-vector rows of a scan tagged with
+    ``__rel``/``__pos``: a left-anti join against the broadcast
+    exclusion rows."""
+    from pyspark.sql import functions as F
+
+    excl = _dv_frame(tagged.sparkSession, dvs)
+    return tagged.join(F.broadcast(excl), ["__rel", "__pos"], "left_anti")
+
+
 def _apply_dvs(df: DataFrame, table: str, dvs: dict) -> DataFrame:
     """Filter out deletion-vector rows: anti-join the scan (tagged with
     its file-relative path and row index) against the broadcast
-    exclusion set. DV size is bounded at write time
-    (``max_dv_rows``), so the broadcast is driver-safe by contract."""
+    exclusion set. ``max_dv_rows`` bounds each delete's vector at
+    write time, but :func:`snapshot_dvs` unions the vectors of every
+    delete since a file's last rewrite, so the broadcast grows with
+    the MOR deletes a file has taken until a rewrite of the file
+    (compaction, purge, copy-on-write DML) drops its vector."""
     if not dvs:
         return df
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-    pairs = [(f, int(p)) for f, pos in dvs.items() for p in pos]
-    excl = spark.createDataFrame(pairs, "__rel string, __pos long")
     cols = df.columns
     tagged = df.withColumn("__rel", _rel_expr(table)).withColumn(
         "__pos", F.col("_metadata.row_index")
     )
-    return tagged.join(
-        F.broadcast(excl), ["__rel", "__pos"], "left_anti"
-    ).select(*cols)
+    return _exclude_dvs(tagged, dvs).select(*cols)
 
 
 def _tagged_scan(reader, table: str, files: list[str], dvs: dict,
@@ -323,10 +368,7 @@ def _tagged_scan(reader, table: str, files: list[str], dvs: dict,
     rel_set = set(files)
     dv = {f: p for f, p in dvs.items() if f in rel_set}
     if dv:
-        spark = df.sparkSession
-        pairs = [(f, int(p)) for f, pos in dv.items() for p in pos]
-        excl = spark.createDataFrame(pairs, "__rel string, __pos long")
-        df = df.join(F.broadcast(excl), ["__rel", "__pos"], "left_anti")
+        df = _exclude_dvs(df, dv)
     return _serve_logical(df, table, serve_version)
 
 
@@ -1372,12 +1414,13 @@ def _materialize_row_ids(
         return df
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
     base = snapshot_base_row_ids(table, version)
-    rows = [(f, int(b), int(cv)) for f, (b, cv) in base.items()]
-    if rows:
-        bdf = spark.createDataFrame(
-            rows, "__rel string, __rt_base long, __rt_cv long"
+    if base:
+        bdf = _rel_frame(
+            df.sparkSession,
+            list(base),
+            __rt_base=[int(b) for b, _ in base.values()],
+            __rt_cv=[int(cv) for _, cv in base.values()],
         )
         df = df.join(F.broadcast(bdf), ["__rel"], "left")
     else:
@@ -2382,11 +2425,14 @@ def tx_point_lookup(
     pushed-down file scan each, never a wrong answer (the residual
     equality filter still applies, as do deletion vectors).
 
-    The probe hashes are computed by Spark's own xxhash64 over a
-    one-row frame cast to the column's type, so they are bit-identical
-    to the build hashes. Returns (DataFrame, n_files_read,
-    n_files_total)."""
+    The probe hashes are Spark's own xxhash64 over the value cast to
+    the column's type, folded on the driver from a one-row ``VALUES``
+    projection (:func:`lake.bloom_probe_bits`, no job), so they are
+    bit-identical to the build hashes. Returns (DataFrame,
+    n_files_read, n_files_total)."""
     from pyspark.sql import functions as F
+
+    from .lake import bloom_probe_bits
 
     v, files = snapshot_files(table, version)
     if not files:
@@ -2400,24 +2446,9 @@ def tx_point_lookup(
     lit = F.lit(value).cast(typ)
     # probe bit positions per distinct (n_bits, n_hashes) config —
     # normally one config; a handful after resizing backfills
-    probe_bits: dict = {}
-    for cfg in {(b[0], b[1]) for b in blooms.values()}:
-        nb, nh = cfg
-        rows = (
-            spark.range(1)
-            .select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.pmod(F.xxhash64(lit, F.lit(i)), F.lit(nb))
-                            for i in range(nh)
-                        ]
-                    )
-                ).alias("bit")
-            )
-            .collect()
-        )
-        probe_bits[cfg] = [int(r.bit) for r in rows]
+    probe_bits = bloom_probe_bits(
+        spark, value, typ, [(b[0], b[1]) for b in blooms.values()]
+    )
 
     def _admits(entry) -> bool:
         nb, nh, words = entry
@@ -2430,7 +2461,7 @@ def tx_point_lookup(
     keep = [f for f in files if f not in blooms or _admits(blooms[f])]
     mv = None if version is None else v
     if not keep:
-        df = spark.createDataFrame([], schema)
+        df = _empty_frame(spark, schema)
         return df.filter(F.col(col) == lit), 0, len(files)
     df = _data_reader(spark, table, schema, mv).parquet(
         *[os.path.join(table, f) for f in keep]
@@ -3833,7 +3864,7 @@ def read_snapshot(
     if not files:
         if schema is None:
             raise FileNotFoundError(f"version {v} of {table} is empty, no schema")
-        df = spark.createDataFrame([], schema)
+        df = _empty_frame(spark, schema)
         if with_row_ids:
             from pyspark.sql import functions as F
 
@@ -3959,7 +3990,7 @@ def tx_read_skipping(
     if not keep:
         if schema is None:  # schema-less log: derive from one footer
             schema = spark.read.parquet(os.path.join(table, files[0])).schema
-        df = spark.createDataFrame([], schema)
+        df = _empty_frame(spark, schema)
     else:
         mv = None if version is None else v
         reader = _data_reader(spark, table, schema, mv)
@@ -4559,9 +4590,13 @@ def tx_delete_where_mor(
     deletes). NULL-predicate rows survive (3VL, same contract as
     :func:`tx_delete_where`).
 
-    ``max_dv_rows`` bounds the driver-side vector (vectors ship in the
-    JSON commit and broadcast at read); past it, use the rewrite
-    delete. Returns (new_version, n_rows_deleted).
+    ``max_dv_rows`` bounds the driver-side vector of THIS delete
+    (vectors ship in the JSON commit and broadcast at read); past it,
+    use the rewrite delete. The bound is per delete: readers broadcast
+    the union of every vector since a file's last rewrite
+    (:func:`snapshot_dvs`), so repeated MOR deletes grow the read-side
+    broadcast until a compaction or purge materializes them. Returns
+    (new_version, n_rows_deleted).
 
     The METADATA-ONLY partition fast path applies here too (same
     soundness gate as :func:`tx_delete_where`): provably-all-match
@@ -4798,8 +4833,7 @@ def tx_changes(
             ).withColumn("__rel", _rel_expr(table)).withColumn(
                 "__pos", F.col("_metadata.row_index")
             )
-            pairs = [(f, int(p)) for f, pos in dv.items() for p in pos]
-            sel = spark.createDataFrame(pairs, "__rel string, __pos long")
+            sel = _dv_frame(spark, dv)
             cols = [c for c in tagged.columns if c not in ("__rel", "__pos")]
             parts.append(
                 tagged.join(F.broadcast(sel), ["__rel", "__pos"])
@@ -4845,10 +4879,10 @@ def tx_changes(
         schema = _schema_at(table, hi)
         if schema is None:
             raise ValueError(f"no changes and no schema in ({from_version}, {hi}]")
-        empty = spark.createDataFrame([], schema)
+        empty = _empty_frame(spark, schema)
         return empty.withColumn("_change_type", F.lit("")).withColumn(
             "_commit_version", F.lit(0).cast("long")
-        ).limit(0)
+        )
     out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
     cm_hi = table_column_mapping(table, hi)
     if cm_hi:

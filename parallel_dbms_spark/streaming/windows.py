@@ -234,7 +234,14 @@ def run_stream_to_batch(
     The streaming query plans with :func:`stream_state_partitions`
     shuffle partitions (restored after the replay finishes): results
     are partitioning-independent, only the per-batch state-store fixed
-    cost changes."""
+    cost changes.
+
+    Not thread-safe: the partition count is set on the session-global
+    ``spark.sql.shuffle.partitions`` for the length of the replay, so a
+    query planned concurrently on the same session (another thread, or
+    a second replay) sees the replay's value, and two overlapping
+    replays can restore each other's saved value out of order. Give
+    concurrent callers their own ``spark.newSession()``."""
     name = "s_" + uuid.uuid4().hex[:12]
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)

@@ -5,9 +5,12 @@ writers through the public API."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import threading
+import uuid
+from decimal import Decimal
 
 import pytest
 
@@ -3773,3 +3776,122 @@ def test_folded_append_int32_ids(spark, table):
     )
     df, n_scanned, _ = txlog.tx_instant_distinct(spark, table, "g")
     assert n_scanned == 0 and df.collect()[0].n_distinct == 7
+
+
+def _jobs_run(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = "jobs-" + uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "typ, keys",
+    [
+        ("long", [0, -1, 7, 2**40 + 3, -(2**62), 2**63 - 1]),
+        ("int", [0, -1, 7, 2**31 - 1, -(2**31), 123456]),
+        ("string", ["", "a", "é", "key 7", "x" * 40, "%20"]),
+        ("date", [dt.date(1970, 1, 1), dt.date(1969, 12, 31),
+                  dt.date(2024, 2, 29), dt.date(1000, 1, 1),
+                  dt.date(9999, 12, 31), dt.date(2000, 1, 1)]),
+        ("timestamp", [dt.datetime(1970, 1, 1),
+                       dt.datetime(2024, 2, 29, 23, 59, 59, 999999),
+                       dt.datetime(1969, 12, 31, 23, 59, 59),
+                       dt.datetime(2000, 1, 1, 0, 0, 0, 1),
+                       dt.datetime(2038, 1, 19, 3, 14, 8),
+                       dt.datetime(1900, 6, 1, 12)]),
+        ("double", [0.0, -0.5, 1.5, 1e300, -1e-300, 123456.789]),
+        ("decimal(10,2)", [Decimal("0.00"), Decimal("-0.01"),
+                           Decimal("12.34"), Decimal("99999999.99"),
+                           Decimal("-99999999.99"), Decimal("5.50")]),
+    ],
+)
+def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
+    """Every key of a Bloom-covered table is found through the Bloom
+    prune (a false negative would mean the probe hashes differ from
+    the build hashes), and the probe itself starts no Spark job."""
+    from parallel_dbms_spark.sources import lake
+
+    df = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], f"k {typ}, i int"
+    ).repartition(3)
+    txlog.tx_append(df, table, bloom_cols=["k"])
+    for i, k in enumerate(keys):
+        got, nread, ntotal = txlog.tx_point_lookup(spark, table, "k", k)
+        assert [r.i for r in got.collect()] == [i], (typ, k)
+        assert nread <= ntotal
+    bits, jobs = _jobs_run(
+        spark,
+        lambda: lake.bloom_probe_bits(
+            spark, keys[2], typ, [(4096, 5), (8192, 3)]
+        ),
+    )
+    assert jobs == 0
+    assert sorted(bits) == [(4096, 5), (8192, 3)]
+    assert [len(b) for b in bits.values()] == [5, 3]
+    assert all(0 <= b < nb for (nb, _), bs in bits.items() for b in bs)
+
+
+def test_dv_point_lookup_starts_no_python_worker_job(spark, table):
+    """A point lookup on a table with a deletion vector runs the
+    broadcast of the exclusion rows and the scan, no more: the
+    exclusion rows are not a Python RDD, and the Bloom probe bits need
+    no job. A lookup whose key every Bloom filter rejects runs none."""
+    txlog.tx_append(_ranged(spark, 0, 3000, parts=2), table,
+                    bloom_cols=["k"])
+    txlog.tx_delete_where_mor(spark, table, "k in (100, 2900)")
+
+    def lookup():
+        df, _, _ = txlog.tx_point_lookup(spark, table, "k", 101)
+        return df.collect()
+
+    rows, jobs = _jobs_run(spark, lookup)
+    assert [(r.k, r.v) for r in rows] == [(101, 202)]
+    assert jobs <= 2
+    gone, _, _ = txlog.tx_point_lookup(spark, table, "k", 100)
+    assert gone.count() == 0
+
+    def miss():
+        df, nread, _ = txlog.tx_point_lookup(spark, table, "k", 10**9)
+        return nread, df.collect()
+
+    (nread, rows), jobs = _jobs_run(spark, miss)
+    assert (nread, rows, jobs) == (0, [], 0)
+
+
+def test_dv_reads_on_escaped_table_path(spark, tmp_path):
+    """Deletion vectors match their rows when the table path holds a
+    space, a ``%``, a ``+`` and a non-ASCII character: the scan's
+    ``_metadata.file_path`` is a %-escaped URI, decoded back to the
+    relative paths the exclusion rows carry (a ``+`` decoded as a
+    space resurrected the deleted rows)."""
+    table = str(tmp_path / "t a+%20b é")
+    txlog.tx_append(
+        _df(spark, [(i, f"r{i}") for i in range(10)]).coalesce(1), table,
+        stats_cols=["k"],
+    )
+    txlog.tx_append(
+        _df(spark, [(i, f"r{i}") for i in range(10, 20)]).coalesce(1),
+        table, stats_cols=["k"],
+    )
+    v, n = txlog.tx_delete_where_mor(spark, table, "k in (3, 12, 13)")
+    assert n == 3
+    live = set(range(20)) - {3, 12, 13}
+    assert {r.k for r in txlog.read_snapshot(spark, table).collect()} == live
+    df, nread, ntotal = txlog.tx_read_skipping(spark, table, "k",
+                                               lo=10, hi=15)
+    assert (nread, ntotal) == (1, 2)
+    assert {r.k for r in df.collect()} == {10, 11, 14, 15}
+    ch = txlog.tx_changes(spark, table, from_version=v - 1)
+    assert sorted((r.k, r.v, r._change_type, r._commit_version)
+                  for r in ch.collect()) == [
+        (3, "r3", "delete", v), (12, "r12", "delete", v),
+        (13, "r13", "delete", v),
+    ]

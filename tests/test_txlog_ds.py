@@ -1078,12 +1078,11 @@ def test_max_files_per_trigger_bounds_backlog_batches(spark, tmp_path):
         offsets.append(int(nxt["v"]))
         cur = nxt
     assert offsets == [2, 4, 6], offsets  # 3 bounded batches, no loss
-    # an oversized commit (4 files > budget 2) still advances
+    # an oversized commit (4 files > budget 2) still advances; a range
+    # of 4 one-row partitions writes exactly 4 files (a round-robin
+    # repartition of 4 rows may leave a partition empty)
     txlog.tx_append(
-        spark.createDataFrame(
-            [(10 + j, "y") for j in range(4)], "k long, v string"
-        ).repartition(4),
-        t,
+        spark.range(10, 14, 1, 4).selectExpr("id AS k", "'y' AS v"), t
     )
     nxt = rdr.latestOffset()
     assert int(nxt["v"]) == 7
