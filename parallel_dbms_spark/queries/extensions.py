@@ -2915,15 +2915,18 @@ def timeseries_ewma_user_value(spark, sf_dir):
 def pipeline_shard_manifest(spark, sf_dir):
     # The LAST mile of the pretraining pipeline: the cleaned corpus
     # lands as size-balanced sorted shards (write_training_shards) and
-    # is immediately profiled into a min/max manifest — so the very
-    # next consumer (a data loader picking a doc_id range, a backfill
-    # re-reading one slice) starts from data-skipping instead of a
-    # full listing. Returns per-shard stats read back from the
-    # manifest (rows-only: file paths are tmpdir-specific).
+    # is immediately converted into a transactional table whose first
+    # commit carries per-shard min/max stats read from the footers
+    # (txlog.tx_convert_parquet_dir) — so the very next consumer (a
+    # data loader picking a doc_id range, a backfill re-reading one
+    # slice) starts from data-skipping instead of a full listing.
+    # Returns aggregates of the per-shard stats (file paths are
+    # tmpdir-specific).
+    import os
     import tempfile
 
     from ..functions.sampling import write_training_shards
-    from ..sources.lake import write_manifest
+    from ..sources import txlog
 
     docs = _docs(spark, sf_dir)
     # min-id survivor per exact text hash (one groupBy + semi-join)
@@ -2933,21 +2936,25 @@ def pipeline_shard_manifest(spark, sf_dir):
         .select("doc_id")
     )
     clean = docs.join(keep, "doc_id", "leftsemi")
-    t = tempfile.mkdtemp(prefix="shards_") + "/corpus"
+    root = tempfile.mkdtemp(prefix="shards_")
+    t = os.path.join(root, "corpus")
     write_training_shards(clean, t, n_shards=8, sort_col="doc_id")
-    write_manifest(spark, t, ["doc_id"])
-    # answer FROM THE MANIFEST alone (the consumer's view: no shard is
-    # opened) — the oracle recomputes the same invariants from the
-    # dedup'd corpus directly, so the hash proves the manifest's
+    table = os.path.join(root, "table")
+    txlog.tx_convert_parquet_dir(spark, t, table, stats_cols=["doc_id"])
+    # answer FROM THE COMMIT'S STATS alone (the consumer's view: no
+    # shard is opened) — the oracle recomputes the same invariants
+    # from the dedup'd corpus directly, so the hash proves the stats'
     # bookkeeping (per-shard counts and id ranges) is lossless. Shard
     # membership itself is Spark's hash partitioning and deliberately
     # NOT asserted; per-shard sortedness is pytest-asserted.
-    man = spark.read.parquet(t + "/_manifest")
-    return man.agg(
-        F.count(F.lit(1)).cast("integer").alias("n_shards"),
-        F.sum("n_rows").cast("long").alias("total_rows"),
-        F.min("doc_id_min").alias("min_id"),
-        F.max("doc_id_max").alias("max_id"),
+    stats = txlog.snapshot_stats(table).values()
+    assert all("doc_id" in s["c"] for s in stats), "every shard has stats"
+    typ = clean.schema["doc_id"].dataType.simpleString()
+    return spark.range(1).select(
+        F.lit(len(stats)).cast("integer").alias("n_shards"),
+        F.lit(sum(s["n"] for s in stats)).cast("long").alias("total_rows"),
+        F.lit(min(s["c"]["doc_id"][0] for s in stats)).cast(typ).alias("min_id"),
+        F.lit(max(s["c"]["doc_id"][1] for s in stats)).cast(typ).alias("max_id"),
     )
 
 

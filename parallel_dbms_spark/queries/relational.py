@@ -2591,33 +2591,32 @@ def sample_weighted_k_per_group(spark, sf_dir):
     tags=("lake", "time_travel", "versioned"),
 )
 def lake_time_travel(spark, sf_dir):
-    # Versioned-table time travel, driver-graded: write v1 (even keys)
-    # then v2 (a DIFFERENT slice), and read BACK v1 by pinned version
-    # number. The oracle recomputes v1's slice directly — so the row
-    # passes only if the pinned read really returns the old immutable
-    # snapshot, not the latest write (sources/lake.py write_version/
-    # read_version). The fixture path is keyed on sf_dir and REUSED:
-    # repeated invocations (plan audits, bench reruns, regrades) read
-    # the existing versions instead of leaking a fresh temp dir and
-    # two write jobs per call.
+    # Versioned-table time travel, driver-graded: append v1 (even
+    # keys), overwrite with v2 (a DIFFERENT slice), and read BACK v1 by
+    # pinned version number. The oracle recomputes v1's slice directly
+    # — so the row passes only if the pinned read really returns the
+    # old immutable snapshot, not the latest write
+    # (txlog.read_snapshot(version=)). The fixture path is keyed on
+    # sf_dir and REUSED: repeated invocations (plan audits, bench
+    # reruns, regrades) read the existing versions instead of leaking
+    # a fresh temp dir and two write jobs per call.
     import hashlib
     import os
+    import shutil
     import tempfile
 
-    from ..sources.lake import list_versions_at, read_version, write_version
-
-    import shutil
+    from ..sources import txlog
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    t = os.path.join(tempfile.gettempdir(), f"lake_tt_{tag}", "orders_v")
-    if len(list_versions_at(t)) < 2:
-        # rebuild from scratch so v=1 is ALWAYS the even-keys slice
-        # (a crashed partial run must not shift version numbering)
+    t = os.path.join(tempfile.gettempdir(), f"lake_tt_{tag}", "orders_tx")
+    if len(txlog.log_versions(t)) < 2:
+        # rebuild from scratch so version 1 is ALWAYS the even-keys
+        # slice (a crashed partial run must not shift the numbering)
         shutil.rmtree(t, ignore_errors=True)
-        write_version(o.filter(F.col("o_orderkey") % 2 == 0), t)  # v1
-        write_version(o.filter(F.col("o_orderkey") % 3 == 0), t)  # v2
-    return read_version(spark, t, version=1)
+        txlog.tx_append(o.filter(F.col("o_orderkey") % 2 == 0), t)  # v1
+        txlog.tx_overwrite(spark, t, o.filter(F.col("o_orderkey") % 3 == 0))
+    return txlog.read_snapshot(spark, t, version=1)
 
 
 # --------------------------------------------------------------------------
@@ -2849,13 +2848,12 @@ def scd2_user_state(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# File-level data skipping (sources/lake.py write_manifest/read_skipping):
-# Delta/Iceberg-style min/max pruning rebuilt on plain parquet. The query
-# writes orders range-clustered on o_orderdate, profiles per-file stats
-# into a _manifest sidecar, then answers a one-year question opening only
-# the files whose ranges overlap. The oracle is the SAME question as a
-# full-scan filter — pruning must be semantically invisible, which is
-# exactly what the value-hash asserts.
+# File-level data skipping (txlog.tx_read_skipping): Delta/Iceberg-style
+# min/max pruning. The query appends orders range-clustered on
+# o_orderdate with per-file stats riding the commit, then answers a
+# one-year question opening only the files whose ranges overlap. The
+# oracle is the SAME question as a full-scan filter — pruning must be
+# semantically invisible, which is exactly what the value-hash asserts.
 # --------------------------------------------------------------------------
 @register(
     "lake_skipping_scan",
@@ -2873,21 +2871,26 @@ def lake_skipping_scan(spark, sf_dir):
     import datetime as _dt
     import tempfile
 
-    from ..sources.lake import read_skipping, write_manifest
+    from ..sources import txlog
 
+    # order dates are whole days; stored as DATE because Spark writes
+    # TIMESTAMP as INT96, whose footer stats pyarrow cannot decode
     o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
+        "o_orderkey", "o_totalprice",
+        F.col("o_orderdate").cast("date").alias("o_orderdate"),
     )
     t = tempfile.mkdtemp(prefix="lake_skip_") + "/orders"
-    (
-        o.repartitionByRange(8, "o_orderdate")
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(t)
+    txlog.tx_append(
+        o.repartitionByRange(8, "o_orderdate").sortWithinPartitions(
+            "o_orderdate"
+        ),
+        t,
+        stats_cols=["o_orderdate"],
     )
-    write_manifest(spark, t, ["o_orderdate"])
-    lo = _dt.datetime(1995, 1, 1)
-    hi = _dt.datetime(1995, 12, 31, 23, 59, 59)
-    pruned, n_read, n_total = read_skipping(spark, t, "o_orderdate", lo, hi)
+    lo, hi = _dt.date(1995, 1, 1), _dt.date(1995, 12, 31)
+    pruned, n_read, n_total = txlog.tx_read_skipping(
+        spark, t, "o_orderdate", lo, hi
+    )
     assert n_read < n_total, "range-clustered write must enable pruning"
     return pruned.groupBy(
         F.date_trunc("month", F.col("o_orderdate")).alias("mon")
@@ -2931,11 +2934,11 @@ def lake_bloom_point_lookup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Targeted key deletion (sources/lake.py delete_keys_rewrite): the GDPR /
-# opt-out purge path — locate victim files by pushed-down IN probe,
-# rewrite ONLY those files, swap, refresh the manifest incrementally.
-# The oracle is the logical NOT IN filter over the original data: the
-# physical locate/rewrite/swap must be semantically invisible.
+# Targeted key deletion (txlog.tx_delete_where): the GDPR / opt-out purge
+# path — locate victim files by pushed-down IN probe, rewrite ONLY those
+# files, and commit the swap with fresh stats for the rewrites. The
+# oracle is the logical NOT IN filter over the original data: the
+# physical locate/rewrite/commit must be semantically invisible.
 # --------------------------------------------------------------------------
 @register(
     "lake_delete_keys",
@@ -2950,7 +2953,7 @@ def lake_bloom_point_lookup(spark, sf_dir):
 def lake_delete_keys(spark, sf_dir):
     import tempfile
 
-    from ..sources.lake import delete_keys_rewrite, write_manifest
+    from ..sources import txlog
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
@@ -2958,18 +2961,19 @@ def lake_delete_keys(spark, sf_dir):
     t = tempfile.mkdtemp(prefix="lake_delete_") + "/orders"
     # cluster on the DELETE key so the locate probe's pushdown prunes:
     # victims concentrate in few files, the rewrite is O(those files)
-    (
-        o.repartitionByRange(12, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.parquet(t)
+    txlog.tx_append(
+        o.repartitionByRange(12, "o_custkey").sortWithinPartitions("o_custkey"),
+        t,
+        stats_cols=["o_custkey"],
     )
-    write_manifest(spark, t, ["o_custkey", "o_orderdate"])
+    n_total = len(txlog.snapshot_files(t)[1])
     victims = [7, 13, 101, 202, 303, 404, 505]
-    n_deleted, n_rewritten, n_total = delete_keys_rewrite(
-        spark, t, "o_custkey", victims
+    _, n_rewritten = txlog.tx_delete_where(
+        spark, t, f"o_custkey IN ({', '.join(map(str, victims))})",
+        stats_cols=["o_custkey"],
     )
     assert n_rewritten < n_total, "clustered victims must touch few files"
-    after = spark.read.parquet(t)
+    after = txlog.read_snapshot(spark, t)
     assert after.filter(F.col("o_custkey").isin(victims)).count() == 0
     return after.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2979,10 +2983,10 @@ def lake_delete_keys(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Transactional multi-writer lake (sources/txlog.py): optimistic CAS
-# commits over an append-only log — the Delta-protocol upgrade to the
-# single-writer write_version contract. The queries below drive REAL
-# concurrent writers (threads) and time travel; the concurrency-
-# semantics matrix (conflicts, retries, isolation) is tests/test_txlog.py.
+# commits over an append-only log, the Delta protocol. The queries below
+# drive REAL concurrent writers (threads) and time travel; the
+# concurrency-semantics matrix (conflicts, retries, isolation) is
+# tests/test_txlog.py.
 # --------------------------------------------------------------------------
 @register(
     "lake_tx_multiwriter_snapshot",
@@ -4024,8 +4028,7 @@ def lake_tx_instant_distinct(spark, sf_dir):
     # sidecar with ZERO data files opened — asserted in-query via the
     # returned scan count. The oracle recomputes from raw rows, so the
     # hash proves the commit-riding bitmap algebra exact across
-    # multi-writer append boundaries (the single-writer lake's
-    # instant_distinct, promoted to the ACID log).
+    # multi-writer append boundaries.
     import tempfile
 
     from ..sources import txlog
@@ -4057,9 +4060,8 @@ def lake_tx_instant_agg(spark, sf_dir):
     # TRANSACTIONAL COMMITS (txlog.tx_instant_agg): each append's
     # commit carries per-file stats (stats_cols=), so the aggregate is
     # three numbers per file read from the LOG — zero data files
-    # opened, asserted in-query. The single-writer lake's
-    # instant_count, promoted to the ACID log; a MOR delete would
-    # demote only the vectored files back to scans (test-pinned).
+    # opened, asserted in-query. A MOR delete would demote only the
+    # vectored files back to scans (test-pinned).
     import tempfile
 
     from ..sources import txlog
@@ -4878,24 +4880,24 @@ def agg_histogram_by_flag(spark, sf_dir):
     tags=("lake", "data-skipping", "zorder", "source"),
 )
 def lake_zorder_2d_skipping(spark, sf_dir):
-    # Z-order + manifest, composed: the table is rewritten clustered
-    # on the (custkey, totalprice) z-curve, per-file min/max stats are
-    # profiled for BOTH columns, and a 2-D box query prunes to the
+    # Z-order + commit stats, composed: the append is clustered on
+    # the (custkey, totalprice) z-curve, per-file min/max stats for
+    # BOTH columns ride the commit, and a 2-D box query prunes to the
     # files whose rectangles intersect it — multi-dimensional data
     # skipping from ONE layout, the thing neither a single-column sort
     # nor hash layout can give. The oracle is the plain 2-predicate
     # filter: pruning must change nothing but I/O.
     import tempfile
 
-    from ..sources.lake import read_skipping_multi, write_manifest, z_order_write
+    from ..sources import txlog
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     t = tempfile.mkdtemp(prefix="lake_z2d_") + "/orders"
-    z_order_write(o, t, "o_custkey", "o_totalprice", num_files=16)
-    write_manifest(spark, t, ["o_custkey", "o_totalprice"])
-    pruned, n_read, n_total = read_skipping_multi(
+    dims = ["o_custkey", "o_totalprice"]
+    txlog.tx_append(o, t, cluster_by=dims, cluster_files=16, stats_cols=dims)
+    pruned, n_read, n_total = txlog.tx_read_skipping(
         spark, t,
         {"o_custkey": (100, 200), "o_totalprice": (50_000.0, 150_000.0)},
     )
@@ -4915,14 +4917,15 @@ def lake_zorder_2d_skipping(spark, sf_dir):
     tags=("lake", "data-skipping", "zorder", "source"),
 )
 def lake_zorder_3d_skipping(spark, sf_dir):
-    # The N-dimensional z_order_write_n generalization (here N=3 with
-    # 63//3=21-bit capped interleave): one clustered layout prunes a
-    # 3-D box query — and, per the unit test, a filter on ANY single
+    # The N-dimensional z-curve (here N=3 with 63//3=21-bit capped
+    # interleave, lake.z_cluster): one clustered append prunes a 3-D
+    # box query — and, per the unit test, a filter on ANY single
     # clustered column still prunes. The date dimension interleaves as
     # epoch days. Oracle: the plain 3-predicate filter.
+    import datetime as _dt
     import tempfile
 
-    from ..sources.lake import read_skipping_multi, write_manifest, z_order_write_n
+    from ..sources import txlog
 
     o = (
         _t(spark, sf_dir, "orders")
@@ -4930,13 +4933,11 @@ def lake_zorder_3d_skipping(spark, sf_dir):
         .withColumn("__days", F.datediff(F.col("o_orderdate"), F.lit("1990-01-01")))
     )
     t = tempfile.mkdtemp(prefix="lake_z3d_") + "/orders"
-    z_order_write_n(o, t, ["o_custkey", "o_totalprice", "__days"], num_files=16)
-    write_manifest(spark, t, ["o_custkey", "o_totalprice", "__days"])
-    import datetime as _dt
-
+    dims = ["o_custkey", "o_totalprice", "__days"]
+    txlog.tx_append(o, t, cluster_by=dims, cluster_files=16, stats_cols=dims)
     d0 = (_dt.date(1994, 1, 1) - _dt.date(1990, 1, 1)).days
     d1 = (_dt.date(1996, 12, 31) - _dt.date(1990, 1, 1)).days
-    pruned, n_read, n_total = read_skipping_multi(
+    pruned, n_read, n_total = txlog.tx_read_skipping(
         spark, t,
         {
             "o_custkey": (100, 400),
@@ -5579,22 +5580,27 @@ def asof_join_tolerance(spark, sf_dir):
 def lake_sorted_export(spark, sf_dir):
     # Totally-ordered multi-file export (the scalable form of the
     # reference's ORDER BY -> CSV sink, which only sorts one batch):
-    # range-partitioned write, per-file manifest, then CONSUME the
-    # contract — the global top-100 cheapest rows must live in the
-    # first files of the manifest order, so only 2 of the 8 files are
-    # read to answer a query the oracle computes over the whole table.
+    # an append, then one sorting compaction — range-partitioned
+    # rewrite with per-file stats riding the commit
+    # (txlog.tx_compact(sort_by=)) — then CONSUME the contract: the
+    # global top-100 cheapest rows must live in the first files of
+    # the log's file order (txlog.tx_sorted_file_order), so only 2 of
+    # the 8 files are read to answer a query the oracle computes over
+    # the whole table.
+    import os
     import tempfile
 
-    from ..sources.lake import sorted_export_file_order, write_sorted_export
+    from ..sources import txlog
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
     path = tempfile.mkdtemp(prefix="sorted_export_") + "/li"
-    n_files = write_sorted_export(li, path, ["l_extendedprice"], n_files=8)
-    files = sorted_export_file_order(spark, path, "l_extendedprice")
-    assert n_files == len(files) >= 2, "export must span multiple files"
-    head = spark.read.parquet(*files[:2])
+    txlog.tx_append(li, path)
+    txlog.tx_compact(spark, path, num_files=8, sort_by=["l_extendedprice"])
+    files = txlog.tx_sorted_file_order(path, "l_extendedprice")
+    assert len(files) >= 2, "export must span multiple files"
+    head = spark.read.parquet(*[os.path.join(path, f) for f in files[:2]])
     return head.orderBy(
         "l_extendedprice", "l_orderkey", "l_linenumber"
     ).limit(100)
@@ -5610,24 +5616,25 @@ def lake_sorted_export(spark, sf_dir):
 )
 def lake_instant_count(spark, sf_dir):
     # Metadata-only query answering: COUNT/MIN/MAX served from the
-    # per-file manifest sidecar — ZERO data files scanned (the
-    # manifest is one row per file; at 100 TB that's kilobytes vs
-    # terabytes, the same trick Delta/Iceberg stats and parquet
-    # footer-count pushdown play). The oracle recomputes from the
-    # full table; equality proves the manifest stays truthful.
+    # per-file stats the append's commit carries (txlog.tx_instant_agg)
+    # — ZERO data files scanned, asserted in-query (the stats are a
+    # few numbers per file; at 100 TB that's kilobytes vs terabytes,
+    # the same trick Delta/Iceberg stats and parquet footer-count
+    # pushdown play). The oracle recomputes from the full table;
+    # equality proves the stats stay truthful.
     import tempfile
 
-    from ..sources.lake import write_manifest
+    from ..sources import txlog
 
     o = _t(spark, sf_dir, "orders")
     path = tempfile.mkdtemp(prefix="instant_count_") + "/orders"
-    o.repartition(6).write.parquet(path)
-    write_manifest(spark, path, ["o_orderkey"])
-    man = spark.read.parquet(path + "/_manifest")
-    return man.agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.min("o_orderkey_min").cast("long").alias("key_min"),
-        F.max("o_orderkey_max").cast("long").alias("key_max"),
+    txlog.tx_append(o.repartition(6), path, stats_cols=["o_orderkey"])
+    df, n_scanned, n_total = txlog.tx_instant_agg(spark, path, "o_orderkey")
+    assert n_scanned == 0 and n_total == 6, (n_scanned, n_total)
+    return df.select(
+        "n_rows",
+        F.col("col_min").cast("long").alias("key_min"),
+        F.col("col_max").cast("long").alias("key_max"),
     )
 
 
@@ -5638,32 +5645,27 @@ def lake_instant_count(spark, sf_dir):
     tags=("lake", "metadata", "distinct", "bitmap", "aggregate"),
 )
 def lake_instant_distinct(spark, sf_dir):
-    # Exact COUNT(DISTINCT) served from a per-file BITMAP sidecar
-    # (sources/lake.py write/update_distinct_sidecar): the table is
-    # staged, the sidecar built, two more files appended and folded in
-    # INCREMENTALLY (only unseen files read — update_manifest's path
-    # set difference), then the answer is an OR-merge + popcount over
-    # the sidecar with ZERO data files scanned. The oracle recomputes
-    # from raw rows, so the hash proves the bitmap algebra exact
-    # through the append.
+    # Exact COUNT(DISTINCT) served from per-file BITMAP sidecars
+    # (txlog.tx_instant_distinct): the table is appended with its
+    # bitmaps riding the commit, two more files are appended the same
+    # way (each commit builds bitmaps for its own files only), then the
+    # answer is an OR-merge + popcount over the sidecars with ZERO
+    # data files scanned. The oracle recomputes from raw rows, so the
+    # hash proves the bitmap algebra exact through the append.
     import tempfile
 
-    from ..sources.lake import (
-        instant_distinct,
-        update_distinct_sidecar,
-        write_distinct_sidecar,
-    )
+    from ..sources import txlog
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     path = tempfile.mkdtemp(prefix="instant_distinct_") + "/orders"
-    o.filter(F.col("o_orderkey") % 3 != 0).repartition(4).write.parquet(path)
-    write_distinct_sidecar(spark, path, "o_custkey")
-    o.filter(F.col("o_orderkey") % 3 == 0).repartition(2).write.mode(
-        "append"
-    ).parquet(path)
-    n_new, _ = update_distinct_sidecar(spark, path, "o_custkey")
-    assert n_new == 2, n_new
-    return instant_distinct(spark, path, "o_custkey")
+    for keep, n in ((F.col("o_orderkey") % 3 != 0, 4),
+                    (F.col("o_orderkey") % 3 == 0, 2)):
+        txlog.tx_append(
+            o.filter(keep).repartition(n), path, distinct_cols=["o_custkey"]
+        )
+    df, n_scanned, n_total = txlog.tx_instant_distinct(spark, path, "o_custkey")
+    assert n_scanned == 0 and n_total == 6, (n_scanned, n_total)
+    return df
 
 
 @register(
@@ -5693,8 +5695,8 @@ def lake_instant_distinct(spark, sf_dir):
     tags=("lake", "cdc", "time-travel"),
 )
 def lake_version_diff(spark, sf_dir):
-    # Time travel composed with CDC: two snapshots land as immutable
-    # v=N versions of one table (sources/lake.py write_version), then
+    # Time travel composed with CDC: two snapshots land as versions of
+    # one transactional table (an append, then an overwrite), then
     # snapshot_diff(read v0, read v1) derives the I/U/D change feed —
     # "what changed between yesterday's and today's table" without any
     # event log, the lakehouse answer to the reference's
@@ -5703,7 +5705,7 @@ def lake_version_diff(spark, sf_dir):
     import tempfile
 
     from ..operators.cdc import snapshot_diff
-    from ..sources.lake import read_version, write_version
+    from ..sources import txlog
 
     o = _t(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(18,2)")
@@ -5725,9 +5727,10 @@ def lake_version_diff(spark, sf_dir):
         )
     )
     path = tempfile.mkdtemp(prefix="version_diff_") + "/orders"
-    n0 = write_version(v0, path)
-    n1 = write_version(v1, path)
-    old, new = read_version(spark, path, n0), read_version(spark, path, n1)
+    n0 = txlog.tx_append(v0, path)
+    n1, _ = txlog.tx_overwrite(spark, path, v1)
+    old = txlog.read_snapshot(spark, path, version=n0)
+    new = txlog.read_snapshot(spark, path, version=n1)
     return snapshot_diff(old, new, keys=["o_orderkey"])
 
 

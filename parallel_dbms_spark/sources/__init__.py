@@ -1,17 +1,10 @@
 from .jsonl import corrupt_records, jsonl_to_parquet, read_jsonl, write_jsonl
 from .lake import (
     compact_small_files,
-    list_versions_at,
     overwrite_partitions,
     read_partitioned,
-    read_version,
-    sorted_export_file_order,
-    update_manifest,
-    vacuum_versions,
     write_bucketed_table,
     write_partitioned,
-    write_sorted_export,
-    write_version,
 )
 from .tx_sql import is_lake_statement, tx_sql
 from .typed_csv import read_typed_csv, register_typed_csv_dir, write_typed_csv
@@ -19,10 +12,6 @@ from .typed_csv_ds import TypedCSVDataSource, register_typed_csv
 
 __all__ = [
     "compact_small_files",
-    "list_versions_at",
-    "read_version",
-    "vacuum_versions",
-    "write_version",
     "corrupt_records",
     "jsonl_to_parquet",
     "overwrite_partitions",
@@ -32,12 +21,9 @@ __all__ = [
     "register_typed_csv",
     "TypedCSVDataSource",
     "register_typed_csv_dir",
-    "sorted_export_file_order",
     "is_lake_statement",
     "tx_sql",
-    "update_manifest",
     "write_bucketed_table",
-    "write_sorted_export",
     "write_jsonl",
     "write_partitioned",
     "write_typed_csv",

@@ -1,6 +1,6 @@
 """Multi-writer transactional table log — optimistic concurrency for
-the versioned lake, closing the single-writer gap that
-``write_version`` documents.
+the versioned lake: versions, per-file stats, row-level rewrites and
+metadata sidecars all ride one append-only commit log.
 
 Protocol (the public Delta Lake commit design, re-expressed for a
 POSIX/HDFS-style filesystem):
@@ -2061,6 +2061,25 @@ def _snapshot_distinct_raw(table: str, version: int | None = None) -> dict:
     }
 
 
+def _write_sidecar(df: DataFrame, table: str, kind: str) -> str:
+    """Publish ``df`` as ONE immutable parquet file
+    ``_sidecars/<kind>-<tag>.parquet`` and return its relpath: a
+    single-partition write to a ``tmp-*`` directory, then an atomic
+    ``os.replace`` of its part file onto the final name. A crash
+    leaves only an unreferenced ``tmp-*`` directory or sidecar, which
+    no snapshot names and :func:`tx_vacuum` reclaims."""
+    import shutil
+
+    tag = uuid.uuid4().hex[:12]
+    tmp = os.path.join(table, SIDECARS, f"tmp-{tag}")
+    df.coalesce(1).write.parquet(tmp)
+    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
+    rel = f"{SIDECARS}/{kind}-{tag}.parquet"
+    os.replace(os.path.join(tmp, part), os.path.join(table, rel))
+    shutil.rmtree(tmp, ignore_errors=True)
+    return rel
+
+
 def _build_distinct_sidecar(
     spark: SparkSession, table: str, rels: list[str], col: str,
     physical: str | None = None,
@@ -2068,14 +2087,12 @@ def _build_distinct_sidecar(
     """Build per-file exact-distinct BITMAPS over exactly ``rels`` and
     write them as ONE immutable sidecar parquet under ``_sidecars/``;
     returns the commit-record entry ``{"sidecar": rel, "files":
-    rels}``. Same bitmap design as ``lake.write_distinct_sidecar``
-    (32k-id buckets via the mergeable JVM bitmap aggregates,
-    functions/bitmaps.py), but scoped to a commit's own files so the
-    sidecar RIDES the commit: a pinned snapshot sees exactly the
-    bitmaps of its own file set, and rewrites retire bitmaps with
-    their files."""
-    import shutil
-
+    rels}``. One bitmap row per (file, 32k-id bucket) via the
+    mergeable JVM bitmap aggregates (functions/bitmaps.py) — the
+    Druid/ClickHouse segment-bitmap design at file grain, scoped to a
+    commit's own files so the sidecar RIDES the commit: a pinned
+    snapshot sees exactly the bitmaps of its own file set, and
+    rewrites retire bitmaps with their files."""
     from pyspark.sql import functions as F
 
     from ..functions.bitmaps import build_bitmaps
@@ -2087,13 +2104,7 @@ def _build_distinct_sidecar(
         F.col(physical or _l2p_col(table, col)).alias("__id"),
     )
     bm = build_bitmaps(df, ["file"], "__id")
-    tag = uuid.uuid4().hex[:12]
-    tmp = os.path.join(table, SIDECARS, f"tmp-{tag}")
-    bm.coalesce(1).write.parquet(tmp)
-    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
-    rel = f"{SIDECARS}/distinct-{tag}.parquet"
-    os.replace(os.path.join(tmp, part), os.path.join(table, rel))
-    shutil.rmtree(tmp, ignore_errors=True)
+    rel = _write_sidecar(bm, table, "distinct")
     return {"sidecar": rel, "files": sorted(rels)}
 
 
@@ -2191,8 +2202,7 @@ def tx_instant_agg(
 ) -> tuple[DataFrame, int, int]:
     """COUNT(*) / MIN(col) / MAX(col) at a snapshot served from the
     commit log's per-file footer stats — the metadata-only instant
-    aggregate (``lake.write_manifest`` + ``instant_count``, promoted
-    to the ACID log): files whose commit carried stats for ``col``
+    aggregate: files whose commit carried stats for ``col``
     and that no deletion vector touched contribute three numbers from
     the log, not their rows. Only stat-less or vectored files are
     scanned (a DV shrinks a file's count and can delete its extremum,
@@ -2291,17 +2301,17 @@ def _build_bloom_sidecar(
     """Build per-file Bloom filters over exactly ``rels`` and write
     them as ONE immutable sidecar parquet under ``_sidecars/``;
     returns the commit-record entry ``{"sidecar": rel, "files":
-    rels}``. Same filter design as ``lake.write_bloom_manifest``
-    (k xxhash64 probes -> sparse packed int64 words, auto-sized to
-    ~10 bits/row of the largest covered file, floor 4096), but scoped
-    to a commit's own files so the filter RIDES the commit: a pinned
-    snapshot sees exactly the filters of its own file set. Sidecars
-    are invisible to scans (underscore dir) and, like data files,
-    immutable once a commit names them."""
-    import shutil
-
+    rels}``. The words are :func:`lake.bloom_words` (k xxhash64
+    probes -> sparse packed int64 words, auto-sized to ~10 bits/row of
+    the largest covered file, floor 4096), scoped to a commit's own
+    files so the filter RIDES the commit: a pinned snapshot sees
+    exactly the filters of its own file set. Sidecars are invisible to
+    scans (underscore dir) and, like data files, immutable once a
+    commit names them."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
+
+    from .lake import bloom_words
 
     paths = [os.path.join(table, r) for r in rels]
     if n_bits is None:
@@ -2312,49 +2322,10 @@ def _build_bloom_sidecar(
         while n_bits < 10 * rows:
             n_bits <<= 1
     df = spark.read.parquet(*paths).select(
-        _rel_expr(table).alias("__rel"),
+        _rel_expr(table).alias("file"),
         F.col(physical or _l2p_col(table, col)).alias("__v"),
     )
-    probes = df.select(
-        "__rel",
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(F.xxhash64(F.col("__v"), F.lit(i)), F.lit(n_bits))
-                    for i in range(n_hashes)
-                ]
-            )
-        ).alias("bit"),
-    ).select(
-        "__rel",
-        (F.col("bit") / 64).cast("int").alias("word"),
-        # SQL shiftleft takes a column shift amount (the PySpark
-        # wrapper pins it to a Python int, hence expr)
-        F.expr("shiftleft(1L, int(bit % 64))").alias("mask"),
-    )
-    packed = (
-        probes.groupBy("__rel", "word")
-        .agg(F.bit_or("mask").alias("bits"))
-        .groupBy("__rel")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("word"), F.col("bits")))
-            ).alias("sparse")
-        )
-        .select(
-            F.col("__rel").alias("file"),
-            F.lit(n_bits).alias("n_bits"),
-            F.lit(n_hashes).alias("n_hashes"),
-            "sparse",
-        )
-    )
-    tag = uuid.uuid4().hex[:12]
-    tmp = os.path.join(table, SIDECARS, f"tmp-{tag}")
-    packed.coalesce(1).write.parquet(tmp)
-    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
-    rel = f"{SIDECARS}/bloom-{tag}.parquet"
-    os.replace(os.path.join(tmp, part), os.path.join(table, rel))
-    shutil.rmtree(tmp, ignore_errors=True)
+    rel = _write_sidecar(bloom_words(df, n_bits, n_hashes), table, "bloom")
     return {"sidecar": rel, "files": sorted(rels)}
 
 
@@ -2432,7 +2403,7 @@ def tx_point_lookup(
     n_files_read, n_files_total)."""
     from pyspark.sql import functions as F
 
-    from .lake import bloom_probe_bits
+    from .lake import bloom_probe_bits, exact_lit
 
     v, files = snapshot_files(table, version)
     if not files:
@@ -2443,7 +2414,7 @@ def tx_point_lookup(
     bmap = snapshot_bloom_map(table, v).get(col, {})
     blooms = _load_blooms(table, {f: s for f, s in bmap.items() if f in set(files)})
     typ = schema[col].dataType.simpleString()
-    lit = F.lit(value).cast(typ)
+    lit = exact_lit(value).cast(typ)
     # probe bit positions per distinct (n_bits, n_hashes) config —
     # normally one config; a handful after resizing backfills
     probe_bits = bloom_probe_bits(
@@ -3946,7 +3917,7 @@ def _schema_at(table: str, version: int | None) -> StructType | None:
 def tx_read_skipping(
     spark: SparkSession,
     table: str,
-    col: str,
+    col: str | dict,
     lo=None,
     hi=None,
     version: int | None = None,
@@ -3959,7 +3930,15 @@ def tx_read_skipping(
     files they add), so a pinned version sees exactly the stats of its
     own snapshot — no separate manifest that can go stale.
 
-    Files with no recorded stats for ``col`` are always read (stats
+    ``col`` may instead map several columns to ``(lo, hi)`` bounds
+    (``lo``/``hi`` are then unused); a file survives only if EVERY
+    column's range overlaps. That intersection is where a z-ordered
+    layout (``tx_append(cluster_by=)``) earns its keep: per-file
+    ranges are tight in every clustered dimension, while a
+    single-column sort is tight in one only. Either bound may be None
+    (open).
+
+    Files with no recorded stats for a column are always read (stats
     prove non-membership, never membership), and the residual row
     filter is still applied and pushed into the surviving files' row
     groups. Returns (DataFrame, n_files_read, n_files_total).
@@ -3967,23 +3946,29 @@ def tx_read_skipping(
     Timestamp/date bounds compare in ISO-8601 text (order-preserving);
     pass ``lo``/``hi`` as datetime/date objects or ISO strings.
     """
+    from .lake import exact_lit
+
+    ranges = dict(col) if isinstance(col, dict) else {col: (lo, hi)}
     v, files = snapshot_files(table, version)
     if not files:
         return read_snapshot(spark, table, version), 0, 0
     stats = snapshot_stats(table, v)
-    lo_s, hi_s = _json_safe(lo), _json_safe(hi)
+    bounds = {
+        c: (_json_safe(a), _json_safe(b)) for c, (a, b) in ranges.items()
+    }
     keep = []
     for f in files:
-        rng = stats.get(f, {}).get("c", {}).get(col)
-        if rng is None:
-            keep.append(f)  # no stats -> must read
-            continue
-        mn, mx = rng
-        if lo_s is not None and mx < lo_s:
-            continue
-        if hi_s is not None and mn > hi_s:
-            continue
-        keep.append(f)
+        fstats = stats.get(f, {}).get("c", {})
+        for c, (lo_s, hi_s) in bounds.items():
+            rng = fstats.get(c)
+            if rng is None:
+                continue  # no stats -> must read
+            if (lo_s is not None and rng[1] < lo_s) or (
+                hi_s is not None and rng[0] > hi_s
+            ):
+                break
+        else:
+            keep.append(f)
     schema = _schema_at(table, None if version is None else v)
     from pyspark.sql import functions as F
 
@@ -3998,10 +3983,11 @@ def tx_read_skipping(
         dvs = snapshot_dvs(table, v)
         df = _apply_dvs(df, table, {f: p for f, p in dvs.items() if f in set(keep)})
         df = _serve_logical(df, table, mv)
-    if lo is not None:
-        df = df.filter(F.col(col) >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(F.col(col) <= F.lit(hi))
+    for c, (a, b) in ranges.items():
+        if a is not None:
+            df = df.filter(F.col(c) >= exact_lit(a))
+        if b is not None:
+            df = df.filter(F.col(c) <= exact_lit(b))
     return df, len(keep), len(files)
 
 
@@ -4198,7 +4184,7 @@ def tx_delete_where(
     whole read-rewrite-commit against a fresh snapshot.
 
     NULL predicate rows survive (3VL: DELETE removes only
-    predicate-true rows — same contract as lake.delete_where_rewrite).
+    predicate-true rows; the predicate is coalesced to FALSE).
 
     METADATA-ONLY fast path (Delta's partition delete): when the
     predicate is a conjunction of equality/IN literals over declared
@@ -5411,9 +5397,8 @@ def tx_compact(
     sorts <= every row of file i+1. Stats for ``sort_by[0]`` ride the
     commit automatically, making the table its own sorted export:
     :func:`tx_sorted_file_order` recovers the global order from the
-    log alone, versioned and ACID (the single-writer lake's
-    ``write_sorted_export``, promoted to the commit log). Mutually
-    exclusive with ``zorder_by``.
+    log alone, versioned and ACID. Mutually exclusive with
+    ``zorder_by``.
 
     ``partition_filter``: Delta's ``OPTIMIZE ... WHERE`` — scope the
     rewrite to the files PROVABLY pure on the requested partitions
@@ -5731,20 +5716,12 @@ def _stage_cdc(df, table: str) -> str:
     from an except-all diff over the rewritten files into a plain scan
     of the sidecar, which also makes the commit STREAMABLE
     (``txlog_ds`` readChangeFeed)."""
-    import shutil
-
     # change sets carry PHYSICAL column names like data files do (the
     # feed's final select translates back to the serve-version names);
     # _change_type is reserved and never mapped
-    df = _to_physical_df(df, _effective_mapping(table))
-    tag = uuid.uuid4().hex[:12]
-    tmp = os.path.join(table, SIDECARS, f"tmp-{tag}")
-    df.coalesce(1).write.parquet(tmp)
-    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
-    rel = f"{SIDECARS}/cdc-{tag}.parquet"
-    os.replace(os.path.join(tmp, part), os.path.join(table, rel))
-    shutil.rmtree(tmp, ignore_errors=True)
-    return rel
+    return _write_sidecar(
+        _to_physical_df(df, _effective_mapping(table)), table, "cdc"
+    )
 
 
 def tx_optimize(

@@ -6,7 +6,6 @@ from .joins import (
 )
 from .observe import ProgressCapture, capture_progress
 from .sinks import (
-    stream_to_versioned_table,
     stream_tx_append,
     stream_upsert_sink,
     write_stream_exactly_once,
@@ -35,7 +34,6 @@ __all__ = [
     "tws_available",
     "session_window_agg",
     "stream_upsert_sink",
-    "stream_to_versioned_table",
     "stream_tx_append",
     "sliding_window_agg",
     "tumbling_window_agg",

@@ -141,41 +141,6 @@ def stream_upsert_sink(
     return q
 
 
-def stream_to_versioned_table(
-    streaming_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-):
-    """Land each micro-batch as a new immutable VERSION of a versioned
-    table (``sources.lake.write_version``) — the streaming feed of the
-    time-travel surface.
-
-    Readers pin a version and never see a torn batch (a version
-    appears only when its ``_SUCCESS`` lands); training jobs get
-    "train on v7" reproducibility over a live feed. Replays after a
-    crash re-claim the next free version number, so a replayed batch
-    lands as a NEW version rather than corrupting an old one — dedup
-    across replays, if required, belongs to the reader's version
-    choice (e.g. latest-complete), matching the append-only contract.
-    """
-    from ..sources.lake import write_version
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_version(batch_df, path)
-
-    w = (
-        streaming_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    q = w.start()
-    q.awaitTermination()
-    return q
-
-
 def stream_scd2_sink(
     streaming_df: DataFrame,
     path: str,

@@ -3,6 +3,7 @@ oracle (the driver's CORRECTNESS gate, locally). Usage:
 
     python scripts/check_oracles.py [sf_dir] [name_filter ...]
     python scripts/check_oracles.py [sf_dir] --window   # the graded 50
+    python scripts/check_oracles.py [sf_dir] --tag lake  # every lake row
 """
 
 from __future__ import annotations
@@ -25,6 +26,9 @@ def main():
         from parallel_dbms_spark.queries.registry import DRIVER_WINDOW
 
         names = list(DRIVER_WINDOW)
+    elif "--tag" in sys.argv[2:]:
+        tag = sys.argv[sys.argv.index("--tag") + 1]
+        names = [n for n, s in REGISTRY.items() if tag in s.tags]
     else:
         names = sys.argv[2:] or list(REGISTRY)
     spark = get_spark(cpus=16)

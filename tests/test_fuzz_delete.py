@@ -1,8 +1,8 @@
-"""Differential fuzz of the lake delete path: random tables + random
-predicates, physical locate/rewrite/swap vs DuckDB's logical
-anti-filter over the same starting rows. Catches 3VL slips, file-swap
-row loss/duplication, and manifest drift that a single hand-picked
-case would miss."""
+"""Differential fuzz of the transactional delete path
+(txlog.tx_delete_where): random tables + random predicates, physical
+locate/rewrite/commit vs DuckDB's logical anti-filter over the same
+starting rows. Catches 3VL slips, rewrite row loss/duplication, and
+log drift that a single hand-picked case would miss."""
 
 from __future__ import annotations
 
@@ -11,9 +11,7 @@ import random
 import duckdb
 import pytest
 
-from pyspark.sql import functions as F
-
-from parallel_dbms_spark.sources.lake import delete_where_rewrite
+from parallel_dbms_spark.sources import txlog
 
 
 def _gen_table(rng: random.Random, n: int):
@@ -30,25 +28,20 @@ def _gen_table(rng: random.Random, n: int):
     return rows
 
 
-def _gen_predicate(rng: random.Random):
-    """(spark Column, duckdb WHERE text) pairs over k/score/tag."""
+def _gen_predicate(rng: random.Random) -> str:
+    """A WHERE text over k/score/tag that Spark and DuckDB both parse."""
     choice = rng.randrange(5)
     if choice == 0:
         ks = sorted(rng.sample(range(20), rng.randrange(1, 5)))
-        return F.col("k").isin(ks), f"k IN ({', '.join(map(str, ks))})"
+        return f"k IN ({', '.join(map(str, ks))})"
     if choice == 1:
-        lo = round(rng.uniform(0, 90), 2)
-        return F.col("score") > lo, f"score > {lo}"
+        return f"score > {round(rng.uniform(0, 90), 2)}"
     if choice == 2:
-        t = rng.choice(["a", "b", "c"])
-        return F.col("tag") == t, f"tag = '{t}'"
+        return f"tag = '{rng.choice(['a', 'b', 'c'])}'"
     if choice == 3:
         lo = round(rng.uniform(0, 50), 2)
-        k = rng.randrange(20)
-        return (F.col("score") < lo) & (F.col("k") == k), (
-            f"score < {lo} AND k = {k}"
-        )
-    return F.col("score").isNull(), "score IS NULL"
+        return f"score < {lo} AND k = {rng.randrange(20)}"
+    return "score IS NULL"
 
 
 @pytest.mark.parametrize("seed", range(12))
@@ -59,10 +52,11 @@ def test_delete_where_matches_duckdb_anti_filter(spark, tmp_path, seed):
         rows, "id long, k int, score double, tag string"
     )
     t = str(tmp_path / f"t{seed}")
-    df.repartition(rng.randrange(2, 7)).write.parquet(t)
+    txlog.tx_append(df.repartition(rng.randrange(2, 7)), t)
+    n_total = len(txlog.snapshot_files(t)[1])
 
-    pred, where = _gen_predicate(rng)
-    n_deleted, n_rewritten, n_total = delete_where_rewrite(spark, t, pred)
+    where = _gen_predicate(rng)
+    _, n_rewritten = txlog.tx_delete_where(spark, t, where)
 
     con = duckdb.connect()
     con.register("t", __import__("pandas").DataFrame(
@@ -74,8 +68,8 @@ def test_delete_where_matches_duckdb_anti_filter(spark, tmp_path, seed):
         ).fetchall()
     )
     got = sorted(
-        (r["id"],) for r in spark.read.parquet(t).select("id").collect()
+        (r["id"],)
+        for r in txlog.read_snapshot(spark, t).select("id").collect()
     )
     assert got == want, f"seed={seed} where={where}"
-    assert n_deleted == len(rows) - len(want)
     assert 0 <= n_rewritten <= n_total

@@ -219,64 +219,44 @@ def test_merge_schema_evolution_reads_old_and_new_files(spark, tmp_path):
 
 
 def test_versioned_table_time_travel(spark, tmp_path):
-    from parallel_dbms_spark.sources import (
-        list_versions_at,
-        read_version,
-        write_version,
-    )
-
-    t = str(tmp_path / "vt")
-    v1 = write_version(spark.range(5).withColumn("val", F.lit("a")), t)
-    v2 = write_version(spark.range(3).withColumn("val", F.lit("b")), t)
-    assert (v1, v2) == (1, 2)
-    assert list_versions_at(t) == [1, 2]
-    # latest by default; explicit time travel to v1
-    assert read_version(spark, t).count() == 3
-    old = read_version(spark, t, version=1)
-    assert old.count() == 5 and old.select("val").distinct().collect()[0][0] == "a"
-    # versions are immutable: a new write never touches v1/v2
-    write_version(spark.range(1).withColumn("val", F.lit("c")), t)
-    assert read_version(spark, t, version=1).count() == 5
     import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        read_version(spark, t, version=99)
-
-
-def test_vacuum_versions_keeps_newest_complete(spark, tmp_path):
-    import os
-
-    from parallel_dbms_spark.sources.lake import (
-        list_versions_at,
-        read_version,
-        vacuum_versions,
-        write_version,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     t = str(tmp_path / "vt")
-    for i in range(5):
-        write_version(spark.range(i + 1), t)
-    # an in-flight (no _SUCCESS) directory must never be vacuumed
-    os.makedirs(os.path.join(t, "v=99"))
-    removed = vacuum_versions(t, keep_last=2)
-    assert removed == [1, 2, 3]
-    assert list_versions_at(t) == [4, 5]
-    assert os.path.isdir(os.path.join(t, "v=99"))
-    assert read_version(spark, t).count() == 5  # latest survives intact
+    v1 = txlog.tx_append(spark.range(5).withColumn("val", F.lit("a")), t)
+    v2, _ = txlog.tx_overwrite(
+        spark, t, spark.range(3).withColumn("val", F.lit("b"))
+    )
+    assert (v1, v2) == (1, 2)
+    assert txlog.log_versions(t) == [1, 2]
+    # latest by default; explicit time travel to v1
+    assert txlog.read_snapshot(spark, t).count() == 3
+    old = txlog.read_snapshot(spark, t, version=1)
+    assert old.count() == 5 and old.select("val").distinct().collect()[0][0] == "a"
+    # versions are immutable: a new write never touches v1/v2
+    txlog.tx_overwrite(spark, t, spark.range(1).withColumn("val", F.lit("c")))
+    assert txlog.read_snapshot(spark, t, version=1).count() == 5
+    assert txlog.read_snapshot(spark, t, version=2).count() == 3
+    with _pytest.raises(ValueError):
+        txlog.read_snapshot(spark, t, version=99)
 
 
 def test_manifest_skipping_prunes_files_and_matches_full_scan(spark, tmp_path):
-    from parallel_dbms_spark.sources.lake import read_skipping, write_manifest
+    from parallel_dbms_spark.sources import txlog
 
     t = str(tmp_path / "skip")
-    # 10 files with disjoint key ranges (range-partitioned write)
+    # 10 files with disjoint key ranges (range-partitioned append), the
+    # per-file stats riding the commit
     df = spark.range(0, 10_000).withColumn("val", F.col("id") * 2)
-    df.repartitionByRange(10, "id").sortWithinPartitions("id").write.parquet(t)
-    n_files = write_manifest(spark, t, ["id"])
-    assert n_files == 10
+    txlog.tx_append(
+        df.repartitionByRange(10, "id").sortWithinPartitions("id"), t,
+        stats_cols=["id"],
+    )
+    assert len(txlog.snapshot_stats(t)) == 10
 
     # point-ish range: only ~1 file overlaps [4200, 4300]
-    got, n_read, n_total = read_skipping(spark, t, "id", lo=4200, hi=4300)
+    got, n_read, n_total = txlog.tx_read_skipping(spark, t, "id", lo=4200, hi=4300)
     assert n_total == 10 and n_read <= 2  # pruned, not listed-and-filtered
     expect = df.filter((F.col("id") >= 4200) & (F.col("id") <= 4300))
     assert sorted(r.id for r in got.collect()) == sorted(
@@ -286,24 +266,34 @@ def test_manifest_skipping_prunes_files_and_matches_full_scan(spark, tmp_path):
     assert got.count() == expect.count() == 101
 
     # open interval: lo only
-    got2, n_read2, _ = read_skipping(spark, t, "id", lo=9000)
+    got2, n_read2, _ = txlog.tx_read_skipping(spark, t, "id", lo=9000)
     assert n_read2 <= 2 and got2.count() == 1000
 
     # disjoint range reads ZERO files and returns an empty, typed frame
-    got3, n_read3, _ = read_skipping(spark, t, "id", lo=50_000)
+    got3, n_read3, _ = txlog.tx_read_skipping(spark, t, "id", lo=50_000)
     assert n_read3 == 0 and got3.count() == 0
-    assert got3.schema == spark.read.parquet(t).schema
+    assert [(f.name, f.dataType) for f in got3.schema] == [
+        (f.name, f.dataType) for f in txlog.read_snapshot(spark, t).schema
+    ]
 
 
 def test_manifest_is_invisible_to_plain_reads(spark, tmp_path):
-    from parallel_dbms_spark.sources.lake import write_manifest
+    import os
+
+    from parallel_dbms_spark.sources import txlog
 
     t = str(tmp_path / "skip2")
-    spark.range(0, 100).write.parquet(t)
-    write_manifest(spark, t, ["id"])
-    # underscore dir must not leak into the table's own scan
-    assert spark.read.parquet(t).count() == 100
-    assert spark.read.parquet(t).columns == ["id"]
+    txlog.tx_append(
+        spark.range(0, 100), t,
+        stats_cols=["id"], bloom_cols=["id"], distinct_cols=["id"],
+    )
+    assert os.listdir(os.path.join(t, txlog.SIDECARS))  # sidecars exist
+    # underscore dirs (log, sidecars) must not leak into a table scan,
+    # neither the snapshot read nor a recursive plain directory scan
+    plain = spark.read.option("recursiveFileLookup", "true").parquet(t)
+    for df in (txlog.read_snapshot(spark, t), plain):
+        assert df.count() == 100
+        assert df.columns == ["id"]
 
 
 def test_bloom_manifest_point_lookup_prunes_and_matches(spark, tmp_path):
@@ -392,11 +382,7 @@ def test_zorder_manifest_2d_prunes_tighter_than_1d_sort(spark, tmp_path):
     # The point of z-order: a 2-D box query prunes on BOTH dims. A
     # layout sorted on x alone gives tight x-ranges but full-span
     # y-ranges per file, so the same box prunes strictly fewer files.
-    from parallel_dbms_spark.sources.lake import (
-        read_skipping_multi,
-        write_manifest,
-        z_order_write,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     # independent dims (modular-arithmetic pairs like (id*a%m, id*b%m)
     # are secretly functions of each other and break the comparison)
@@ -410,14 +396,17 @@ def test_zorder_manifest_2d_prunes_tighter_than_1d_sort(spark, tmp_path):
     box = {"y": (100, 199)}
 
     tz = str(tmp_path / "z")
-    z_order_write(df, tz, "x", "y", num_files=16)
-    write_manifest(spark, tz, ["x", "y"])
-    got_z, nz, tot = read_skipping_multi(spark, tz, box)
+    txlog.tx_append(
+        df, tz, cluster_by=["x", "y"], cluster_files=16, stats_cols=["x", "y"]
+    )
+    got_z, nz, tot = txlog.tx_read_skipping(spark, tz, box)
 
     tx = str(tmp_path / "x")
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(tx)
-    write_manifest(spark, tx, ["x", "y"])
-    got_x, nx, _ = read_skipping_multi(spark, tx, box)
+    txlog.tx_append(
+        df.repartitionByRange(16, "x").sortWithinPartitions("x"), tx,
+        stats_cols=["x", "y"],
+    )
+    got_x, nx, _ = txlog.tx_read_skipping(spark, tx, box)
 
     expect = sorted(
         r.id for r in df.filter(F.col("y").between(100, 199)).collect()
@@ -425,6 +414,16 @@ def test_zorder_manifest_2d_prunes_tighter_than_1d_sort(spark, tmp_path):
     assert sorted(r.id for r in got_z.collect()) == expect
     assert sorted(r.id for r in got_x.collect()) == expect
     assert nz < nx == tot  # x-sort prunes nothing on y; z-curve does
+    # a box on both dims prunes no worse than its y side alone
+    both = {"x": (0, 499), "y": (100, 199)}
+    got_b, nb, _ = txlog.tx_read_skipping(spark, tz, both)
+    assert nb <= nz
+    assert sorted(r.id for r in got_b.collect()) == sorted(
+        r.id
+        for r in df.filter(
+            F.col("x").between(0, 499) & F.col("y").between(100, 199)
+        ).collect()
+    )
 
 
 def test_bucketed_table_makes_keyed_windows_exchange_free(spark, tmp_path):
@@ -458,27 +457,25 @@ def test_bucketed_table_makes_keyed_windows_exchange_free(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS ev_bwin")
 
 
-def test_sorted_export_total_order_across_files(spark):
-    import tempfile
+def test_sorted_export_total_order_across_files(spark, tmp_path):
+    import os
 
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import Window
 
     from parallel_dbms_spark.catalog import load_table
-    from parallel_dbms_spark.sources.lake import (
-        sorted_export_file_order,
-        write_sorted_export,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     o = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sorted_exp_") + "/orders"
-    n = write_sorted_export(o, path, ["o_totalprice"], n_files=4)
-    files = sorted_export_file_order(spark, path, "o_totalprice")
-    assert n == len(files) == 4
+    path = str(tmp_path / "orders")
+    txlog.tx_append(o, path)
+    txlog.tx_compact(spark, path, num_files=4, sort_by=["o_totalprice"])
+    files = txlog.tx_sorted_file_order(path, "o_totalprice")
+    assert len(files) == 4
 
     # every file is internally sorted (lag within file never decreases)
-    back = spark.read.parquet(path).select(
+    back = txlog.read_snapshot(spark, path).select(
         F.col("_metadata.file_path").alias("f"), "o_totalprice"
     )
     w = Window.partitionBy("f").orderBy("o_totalprice")
@@ -487,134 +484,126 @@ def test_sorted_export_total_order_across_files(spark):
     )
     assert bad.count() == 0
 
-    # concatenating files in manifest order yields the global sort
+    # concatenating files in log order yields the global sort
     seq = []
     for f in files:
         seq.extend(
             r["o_totalprice"]
-            for r in spark.read.parquet(f).orderBy("o_totalprice").collect()
+            for r in spark.read.parquet(os.path.join(path, f))
+            .orderBy("o_totalprice").collect()
         )
     assert seq == sorted(seq)
     assert len(seq) == o.count()
 
 
-def test_sorted_export_descending(spark):
-    import tempfile
+def test_sorted_export_descending(spark, tmp_path):
+    import os
 
     from parallel_dbms_spark.catalog import load_table
-    from parallel_dbms_spark.sources.lake import (
-        sorted_export_file_order,
-        write_sorted_export,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     o = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="sorted_desc_") + "/orders"
-    write_sorted_export(o, path, ["o_totalprice"], n_files=3, ascending=False)
-    files = sorted_export_file_order(
-        spark, path, "o_totalprice", ascending=False
+    path = str(tmp_path / "orders")
+    txlog.tx_append(o, path)
+    txlog.tx_compact(
+        spark, path, num_files=3, sort_by=["o_totalprice"], ascending=False
     )
+    files = txlog.tx_sorted_file_order(path, "o_totalprice", ascending=False)
     firsts = [
-        spark.read.parquet(f).agg({"o_totalprice": "max"}).collect()[0][0]
+        spark.read.parquet(os.path.join(path, f))
+        .agg({"o_totalprice": "max"}).collect()[0][0]
         for f in files
     ]
+    assert len(firsts) == 3
     assert firsts == sorted(firsts, reverse=True)
 
 
-def test_sorted_export_detects_interleaved_files(spark):
-    import tempfile
-
+def test_sorted_export_detects_interleaved_files(spark, tmp_path):
     import pytest
+
     from parallel_dbms_spark.catalog import load_table
-    from parallel_dbms_spark.sources.lake import (
-        sorted_export_file_order,
-        write_manifest,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     o = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="unsorted_exp_") + "/orders"
-    # hash-partitioned (NOT range) write: files interleave on the key
-    o.repartition(4, "o_orderkey").write.parquet(path)
-    write_manifest(spark, path, ["o_totalprice"])
+    path = str(tmp_path / "orders")
+    # hash-partitioned (NOT range) append: files interleave on the key
+    txlog.tx_append(
+        o.repartition(4, "o_orderkey"), path, stats_cols=["o_totalprice"]
+    )
     with pytest.raises(ValueError, match="interleave"):
-        sorted_export_file_order(spark, path, "o_totalprice")
+        txlog.tx_sorted_file_order(path, "o_totalprice")
 
 
 def test_update_manifest_profiles_only_new_files(spark, tmp_path):
-    from pyspark.sql import functions as F
-
     from parallel_dbms_spark.catalog import load_table
-    from parallel_dbms_spark.plans import execution_metrics
-    from parallel_dbms_spark.sources.lake import update_manifest, write_manifest
+    from parallel_dbms_spark.sources import txlog
 
     o = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         "o_orderkey", "o_totalprice"
     )
     path = str(tmp_path / "t")
-    o.filter("o_orderkey % 2 = 0").repartition(4).write.parquet(path)
-    assert write_manifest(spark, path, ["o_orderkey"]) == 4
-
-    # no new files -> no-op
-    n_new, n_total = update_manifest(spark, path)
-    assert (n_new, n_total) == (0, 4)
-
-    # append two files, update incrementally
-    o.filter("o_orderkey % 2 = 1").repartition(2).write.mode("append").parquet(path)
-    n_new, n_total = update_manifest(spark, path)
-    assert (n_new, n_total) == (2, 6)
-
-    # incremental result == full rebuild (same rows, any order)
-    man_inc = sorted(map(tuple, spark.read.parquet(path + "/_manifest").collect()))
-    write_manifest(spark, path, ["o_orderkey"])
-    man_full = sorted(map(tuple, spark.read.parquet(path + "/_manifest").collect()))
-    assert man_inc == man_full
-
-    # the incremental stats pass only READS the unseen files: rebuild
-    # the append situation and measure files actually read
-    path2 = str(tmp_path / "t2")
-    o.filter("o_orderkey % 2 = 0").repartition(4).write.parquet(path2)
-    write_manifest(spark, path2, ["o_orderkey"])
-    o.filter("o_orderkey % 2 = 1").repartition(2).write.mode("append").parquet(path2)
-    man = spark.read.parquet(path2 + "/_manifest")
-    known = [r["file"] for r in man.select("file").collect()]
-    fresh = (
-        spark.read.parquet(path2)
-        .select(F.col("_metadata.file_path").alias("file"), "o_orderkey")
-        .filter(~F.col("file").isin(known))
+    txlog.tx_append(
+        o.filter("o_orderkey % 2 = 0").repartition(4), path,
+        stats_cols=["o_orderkey"],
     )
-    m = execution_metrics(fresh.groupBy("file").count())
-    assert m["scan_files_read"] == 2, m
+    assert len(txlog.snapshot_stats(path)) == 4
+
+    # every file already has stats -> no-op, no commit
+    head = txlog.log_versions(path)[-1]
+    assert txlog.tx_analyze(path, ["o_orderkey"]) == (head, 0)
+
+    # append two files without stats, then profile incrementally
+    _, before = txlog.snapshot_files(path)
+    txlog.tx_append(o.filter("o_orderkey % 2 = 1").repartition(2), path)
+    _, live = txlog.snapshot_files(path)
+    fresh = sorted(set(live) - set(before))
+    assert len(fresh) == 2
+    v, n_new = txlog.tx_analyze(path, ["o_orderkey"])
+    assert n_new == 2
+    # the profiling commit touched exactly the unseen files
+    assert sorted(txlog.read_commit(path, v)["stats"]) == fresh
+
+    # incremental result == full rebuild over every live file
+    inc = txlog.snapshot_stats(path)
+    assert inc == txlog.collect_file_stats(path, live, ["o_orderkey"])
+    assert sum(s["n"] for s in inc.values()) == o.count()
 
 
 def test_update_manifest_hive_partition_column_stats(spark, tmp_path):
-    # When a stats column is a HIVE PARTITION column it exists only in
-    # the directory names, not in the leaf files; the incremental
-    # explicit-path read must resolve it via basePath or the update
-    # fails where the full rebuild (directory scan) succeeds.
+    # Stats on a PARTITION column: the txlog keeps partition columns
+    # inside the data files, so each append profiles them from the
+    # footers like any other column, and a later append's stats fold
+    # into the snapshot equal to a full rebuild.
     from parallel_dbms_spark.catalog import load_table
-    from parallel_dbms_spark.sources.lake import update_manifest, write_manifest
+    from parallel_dbms_spark.sources import txlog
 
     o = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     path = str(tmp_path / "part_t")
-    o.filter("o_orderkey % 2 = 0").write.partitionBy("o_orderpriority").parquet(path)
-    write_manifest(spark, path, ["o_orderpriority"])
-
-    o.filter("o_orderkey % 2 = 1").write.mode("append").partitionBy(
-        "o_orderpriority"
-    ).parquet(path)
-    n_new, _ = update_manifest(spark, path)
-    assert n_new > 0
-
-    # incremental result == full rebuild
-    man_inc = sorted(map(tuple, spark.read.parquet(path + "/_manifest").collect()))
-    write_manifest(spark, path, ["o_orderpriority"])
-    man_full = sorted(map(tuple, spark.read.parquet(path + "/_manifest").collect()))
-    assert man_inc == man_full
+    for parity in (0, 1):
+        txlog.tx_append(
+            o.filter(f"o_orderkey % 2 = {parity}"), path,
+            partition_by=["o_orderpriority"],
+            stats_cols=["o_orderpriority"],
+        )
+    stats = txlog.snapshot_stats(path)
+    _, live = txlog.snapshot_files(path)
+    assert stats == txlog.collect_file_stats(path, live, ["o_orderpriority"])
+    # each file is value-pure on the partition column
+    assert all(
+        s["c"]["o_orderpriority"][0] == s["c"]["o_orderpriority"][1]
+        for s in stats.values()
+    )
+    got, n_read, n_total = txlog.tx_read_skipping(
+        spark, path, "o_orderpriority", "1-URGENT", "1-URGENT"
+    )
+    assert n_read < n_total
+    assert got.count() == o.filter("o_orderpriority = '1-URGENT'").count()
 
 
 def test_ignore_corrupt_files_salvages_intact_files(spark, tmp_path):
@@ -662,95 +651,54 @@ def test_ignore_corrupt_files_salvages_intact_files(spark, tmp_path):
         spark.conf.set("spark.sql.files.ignoreCorruptFiles", "false")
 
 
-def test_write_version_two_writers_race(spark, tmp_path):
-    """Two writers racing for the same version number: the loser must
-    land on the NEXT free version (or fail cleanly), never overwrite.
-    Simulated deterministically by pre-claiming the v the second writer
-    would compute — the exact state a concurrent in-flight writer
-    leaves on disk."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from parallel_dbms_spark.sources.lake import (
-        list_versions_at,
-        read_version,
-        write_version,
-    )
-
-    t = str(tmp_path / "raced")
-    v1 = write_version(spark.range(4).withColumn("val", F.lit("a")), t)
-    # another writer "wins" v2 between this writer's max-probe and its
-    # write: materialize a complete v2 out from under it
-    os.makedirs(os.path.join(t, f"v={v1 + 1}"), exist_ok=False)
-    spark.range(9).withColumn("val", F.lit("intruder")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(t, f"v={v1 + 1}"))
-    v3 = write_version(spark.range(2).withColumn("val", F.lit("b")), t)
-    assert v3 == v1 + 2, "loser must claim the next free number"
-    assert sorted(list_versions_at(t)) == [v1, v1 + 1, v1 + 2]
-    # nobody clobbered anybody
-    assert read_version(spark, t, v1 + 1).count() == 9
-    assert read_version(spark, t, v3).count() == 2
-
-
 def test_delete_keys_rewrites_only_affected_files(spark, tmp_path):
-    import glob
-    import os
-
     from pyspark.sql import functions as F
 
-    from parallel_dbms_spark.sources.lake import (
-        delete_keys_rewrite,
-        read_point_lookup,
-        read_skipping,
-        write_bloom_manifest,
-        write_manifest,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     t = str(tmp_path / "orders")
     df = spark.range(10_000).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("grp")
     )
     # cluster on k: victims [100..120] live in ONE file of 10
-    df.repartitionByRange(10, "k").sortWithinPartitions("k").write.parquet(t)
-    write_manifest(spark, t, ["k"])
-    write_bloom_manifest(spark, t, "k")
+    txlog.tx_append(
+        df.repartitionByRange(10, "k").sortWithinPartitions("k"), t,
+        stats_cols=["k"], bloom_cols=["k"],
+    )
     victims = list(range(100, 121))
+    in_list = f"k IN ({', '.join(map(str, victims))})"
 
-    n_deleted, n_rewritten, n_total = delete_keys_rewrite(spark, t, "k", victims)
-    assert n_deleted == len(victims)
-    assert n_total == 10 and n_rewritten == 1, (n_rewritten, n_total)
+    _, n_rewritten = txlog.tx_delete_where(spark, t, in_list, stats_cols=["k"])
+    assert n_rewritten == 1
 
-    after = spark.read.parquet(t)
+    after = txlog.read_snapshot(spark, t)
     assert after.count() == 10_000 - len(victims)
     assert after.filter(F.col("k").isin(victims)).count() == 0
 
-    # manifest stayed consistent: one row per live file, stats usable
-    man = spark.read.parquet(t + "/_manifest")
-    live = {
-        f"file:{p}" for p in glob.glob(os.path.join(t, "*.parquet"))
-    }
-    assert {r["file"] for r in man.select("file").collect()} == live
-    pruned, n_read, n_tot2 = read_skipping(spark, t, "k", 5000, 5010)
+    # stats stayed consistent: one entry per live file, stats usable
+    _, live = txlog.snapshot_files(t)
+    assert sorted(txlog.snapshot_stats(t)) == sorted(live) and len(live) == 10
+    pruned, n_read, n_tot2 = txlog.tx_read_skipping(spark, t, "k", 5000, 5010)
     assert pruned.count() == 11 and n_read < n_tot2
 
-    # bloom sidecar rebuilt: survivor rows in NEW files still found
-    hit, _, _ = read_point_lookup(spark, t, "k", 121)
+    # the rewritten file has no Bloom filter, so it is must-read:
+    # survivor rows in it are still found, deleted ones are not
+    hit, _, _ = txlog.tx_point_lookup(spark, t, "k", 121)
     assert hit.count() == 1
-    miss, _, _ = read_point_lookup(spark, t, "k", 110)
+    miss, _, _ = txlog.tx_point_lookup(spark, t, "k", 110)
     assert miss.count() == 0
 
-    # no-victim delete is a no-op
-    assert delete_keys_rewrite(spark, t, "k", [10_000_000]) == (0, 0, 10)
+    # no-victim delete is a no-op: no file rewritten, no commit
+    head = txlog.log_versions(t)[-1]
+    assert txlog.tx_delete_where(spark, t, "k IN (10000000)") == (head, 0)
 
 
 def test_delete_where_predicate_and_null_rows_survive(spark, tmp_path):
-    """delete_where_rewrite: arbitrary predicate, and rows where the
+    """tx_delete_where: arbitrary predicate, and rows where the
     predicate evaluates NULL are survivors (3VL), never silently lost."""
     from pyspark.sql import functions as F
 
-    from parallel_dbms_spark.sources.lake import delete_where_rewrite
+    from parallel_dbms_spark.sources import txlog
 
     t = str(tmp_path / "events")
     df = spark.range(1000).select(
@@ -759,20 +707,17 @@ def test_delete_where_predicate_and_null_rows_survive(spark, tmp_path):
         .otherwise((F.col("id") % 100).cast("double"))
         .alias("score"),
     )
-    df.repartitionByRange(5, "k").write.parquet(t)
+    txlog.tx_append(df.repartitionByRange(5, "k"), t)
     n_null = 100  # every 10th row has NULL score
 
-    n_deleted, n_rewritten, n_total = delete_where_rewrite(
-        spark, t, F.col("score") > 89.5
-    )
-    after = spark.read.parquet(t)
+    _, n_rewritten = txlog.tx_delete_where(spark, t, "score > 89.5")
+    after = txlog.read_snapshot(spark, t)
     # victims: score in {90..99} excluding NULLed ids -> 9 per 100-block
-    assert n_deleted == 90, n_deleted
     assert after.count() == 1000 - 90
     assert after.filter(F.col("score") > 89.5).count() == 0
     # NULL-predicate rows all survived
     assert after.filter(F.col("score").isNull()).count() == n_null
-    assert n_total == 5 and 1 <= n_rewritten <= 5
+    assert 1 <= n_rewritten <= 5
 
 
 def test_z_value_n_morton_codes_and_2d_equivalence(spark):
@@ -811,11 +756,7 @@ def test_z_value_n_morton_codes_and_2d_equivalence(spark):
 def test_z_order_n_prunes_on_every_clustered_dimension(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from parallel_dbms_spark.sources.lake import (
-        read_skipping,
-        write_manifest,
-        z_order_write_n,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     t = str(tmp_path / "z3")
     n = 40_000
@@ -824,28 +765,33 @@ def test_z_order_n_prunes_on_every_clustered_dimension(spark, tmp_path):
         (F.col("id") * 40503 % n).alias("b"),
         (F.col("id") * 69069 % n).alias("c"),
     )
-    z_order_write_n(df, t, ["a", "b", "c"], num_files=16)
-    write_manifest(spark, t, ["a", "b", "c"])
-    for col in ("a", "b", "c"):
-        pruned, n_read, n_total = read_skipping(
-            spark, t, col, n // 2, n // 2 + n // 40
-        )
+    dims = ["a", "b", "c"]
+    txlog.tx_append(df, t, cluster_by=dims, cluster_files=16, stats_cols=dims)
+    rng = (n // 2, n // 2 + n // 40)
+    for col in dims:
+        pruned, n_read, n_total = txlog.tx_read_skipping(spark, t, {col: rng})
         assert n_total == 16
         assert n_read < n_total, f"no pruning on {col}: {n_read}/{n_total}"
-        want = df.filter(
-            (F.col(col) >= n // 2) & (F.col(col) <= n // 2 + n // 40)
-        ).count()
+        want = df.filter(F.col(col).between(*rng)).count()
         assert pruned.count() == want
+    # the 3-D box intersects the per-dimension prunes
+    box = {"a": (0, n // 2), "b": (0, n // 2), "c": (0, n // 2)}
+    pruned, n_read, _ = txlog.tx_read_skipping(spark, t, box)
+    assert n_read < 16
+    assert pruned.count() == df.filter(
+        F.col("a").between(0, n // 2)
+        & F.col("b").between(0, n // 2)
+        & F.col("c").between(0, n // 2)
+    ).count()
 
 
 def test_delete_where_preserves_partition_directories(spark, tmp_path):
-    """Survivors of a rewrite in a hive-partitioned layout must land
-    back in their own partition directory — partition values live in
-    directory names, and a root-level rewrite would silently lose
-    them."""
+    """Survivors of a delete rewrite in a partitioned table stay
+    value-pure on their partition, so partition pruning keeps working
+    after the rewrite."""
     from pyspark.sql import functions as F
 
-    from parallel_dbms_spark.sources.lake import delete_where_rewrite
+    from parallel_dbms_spark.sources import txlog
 
     t = str(tmp_path / "events_parted")
     df = spark.range(600).select(
@@ -853,14 +799,11 @@ def test_delete_where_preserves_partition_directories(spark, tmp_path):
         (F.col("id") % 3).alias("day"),
         (F.col("id") % 100).cast("double").alias("score"),
     )
-    df.write.partitionBy("day").parquet(t)
+    txlog.tx_append(df, t, partition_by=["day"])
 
-    n_deleted, n_rewritten, n_total = delete_where_rewrite(
-        spark, t, F.col("score") >= 90.0
-    )
-    assert n_deleted == 60  # 10 per 100-block x 6 blocks
-    after = spark.read.parquet(t)
-    assert after.count() == 540
+    txlog.tx_delete_where(spark, t, "score >= 90.0")
+    after = txlog.read_snapshot(spark, t)
+    assert after.count() == 540  # 10 per 100-block x 6 blocks deleted
     assert set(after.columns) == {"k", "day", "score"}
     # every surviving row still knows its partition value
     per_day = {r["day"]: r["n"] for r in
@@ -868,49 +811,52 @@ def test_delete_where_preserves_partition_directories(spark, tmp_path):
     assert per_day == {0: 180, 1: 180, 2: 180}
     assert after.filter(F.col("score") >= 90.0).count() == 0
     # partition pruning still works post-rewrite
-    assert spark.read.parquet(t).filter(F.col("day") == 1).count() == 180
+    _, live = txlog.snapshot_files(t)
+    assert sorted(txlog.snapshot_pv(t)) == sorted(live)
+    day1 = txlog.read_snapshot(spark, t, partition_filter={"day": 1})
+    assert day1.count() == 180
 
 
 def test_delete_where_partition_value_with_space(spark, tmp_path):
     """_metadata.file_path URI-encodes special chars (space -> %20);
-    the rewrite's os-level moves must decode back to the real on-disk
-    names or a delete under ``x=NOT SPECIFIED/`` crashes."""
+    the delete's hit-file lookup must decode back to the real names
+    or a delete under a table path with a space, partitioned on a
+    value with a space, rewrites nothing or the wrong files."""
     from pyspark.sql import functions as F
 
-    from parallel_dbms_spark.sources.lake import delete_where_rewrite
+    from parallel_dbms_spark.sources import txlog
 
-    t = str(tmp_path / "orders_parted")
+    t = str(tmp_path / "orders parted")
     df = spark.range(300).select(
         F.col("id").alias("k"),
         F.when(F.col("id") % 2 == 0, "NOT SPECIFIED")
         .otherwise("1-URGENT")
         .alias("prio"),
     )
-    df.write.partitionBy("prio").parquet(t)
+    txlog.tx_append(df, t, partition_by=["prio"])
 
-    n_deleted, _, _ = delete_where_rewrite(spark, t, F.col("k") < 100)
-    assert n_deleted == 100
-    after = spark.read.parquet(t)
+    _, n_rewritten = txlog.tx_delete_where(spark, t, "k < 100")
+    assert n_rewritten >= 1
+    after = txlog.read_snapshot(spark, t)
     assert after.count() == 200
     assert after.filter(F.col("k") < 100).count() == 0
     # survivors kept their space-containing partition value
     per = {r["prio"]: r["n"] for r in
            after.groupBy("prio").agg(F.count("*").alias("n")).collect()}
     assert per == {"NOT SPECIFIED": 100, "1-URGENT": 100}
+    spaced = txlog.read_snapshot(
+        spark, t, partition_filter={"prio": "NOT SPECIFIED"}
+    )
+    assert spaced.count() == 100
 
 
 def test_distinct_sidecar_incremental_equals_rebuild(spark, tmp_path):
-    """Per-file bitmap sidecar: incremental update after appends gives
-    the same exact distinct count as a full rebuild — including under
-    a hive layout whose partition value contains a space (URI-decode
-    rule shared with update_manifest)."""
+    """Per-file bitmap sidecars riding appends give the same exact
+    distinct count as a backfill over every live file — including
+    under a table path and partition value containing a space."""
     from pyspark.sql import functions as F
 
-    from parallel_dbms_spark.sources.lake import (
-        instant_distinct,
-        update_distinct_sidecar,
-        write_distinct_sidecar,
-    )
+    from parallel_dbms_spark.sources import txlog
 
     df = spark.range(1000).select(
         F.col("id").alias("k"),
@@ -918,31 +864,28 @@ def test_distinct_sidecar_incremental_equals_rebuild(spark, tmp_path):
         F.when(F.col("id") % 2 == 0, "NOT SPECIFIED")
         .otherwise("1-URGENT").alias("prio"),
     )
-    t = str(tmp_path / "t")
-    df.filter("k < 600").write.partitionBy("prio").parquet(t)
-    write_distinct_sidecar(spark, t, "uid")
-    assert instant_distinct(spark, t, "uid").first()["n_distinct"] == 137
+    t = str(tmp_path / "t spaced")
+    txlog.tx_append(
+        df.filter("k < 600"), t, partition_by=["prio"], distinct_cols=["uid"]
+    )
+    got, n_scanned, _ = txlog.tx_instant_distinct(spark, t, "uid")
+    assert got.first()["n_distinct"] == 137 and n_scanned == 0
 
-    # append new files (new uids too), fold incrementally
+    # append new files (new uids too), each commit brings its bitmaps
     df2 = spark.range(1000, 1400).select(
         F.col("id").alias("k"),
         (F.col("id") % 211).alias("uid"),
         F.lit("NOT SPECIFIED").alias("prio"),
     )
-    df2.write.mode("append").partitionBy("prio").parquet(t)
-    n_new, _ = update_distinct_sidecar(spark, t, "uid")
-    assert n_new > 0
-    got = instant_distinct(spark, t, "uid").first()["n_distinct"]
-    want = spark.read.parquet(t).select("uid").distinct().count()
-    assert got == want
+    txlog.tx_append(df2, t, distinct_cols=["uid"])
+    want = txlog.read_snapshot(spark, t).select("uid").distinct().count()
+    got, n_scanned, n_total = txlog.tx_instant_distinct(spark, t, "uid")
+    # the answer path reads ONLY the sidecars (zero table data files)
+    assert got.first()["n_distinct"] == want and n_scanned == 0
+    assert n_total == len(txlog.snapshot_files(t)[1])
 
-    # idempotent: nothing new -> no-op
-    assert update_distinct_sidecar(spark, t, "uid")[0] == 0
-
-    # the answer path reads ONLY the sidecar (zero table data files)
-    from parallel_dbms_spark.plans import execution_metrics
-
-    m = execution_metrics(instant_distinct(spark, t, "uid"))
-    import glob as _g
-    n_side = len(_g.glob(t + "/_distinct_uid/*.parquet"))
-    assert m["scan_files_read"] <= n_side, m
+    # a rebuild over every live file gives the same answer
+    txlog.tx_distinct(spark, t, ["uid"])
+    assert txlog.tx_instant_distinct(spark, t, "uid")[0].first()[
+        "n_distinct"
+    ] == want

@@ -254,7 +254,7 @@ def test_execution_metrics_prove_mapside_combine_and_file_pruning(spark, tmp_pat
 
     from parallel_dbms_spark.catalog import load_table
     from parallel_dbms_spark.plans.explain import execution_metrics
-    from parallel_dbms_spark.sources.lake import read_skipping, write_manifest
+    from parallel_dbms_spark.sources import txlog
 
     li = load_table(spark, SF_SMOKE, "lineitem")
     m = execution_metrics(li.groupBy("l_returnflag").count())
@@ -264,9 +264,10 @@ def test_execution_metrics_prove_mapside_combine_and_file_pruning(spark, tmp_pat
     assert 0 < m["shuffle_bytes_written"] < 10_000
 
     t = str(tmp_path / "skip")
-    spark.range(0, 10_000).repartitionByRange(10, "id").write.parquet(t)
-    write_manifest(spark, t, ["id"])
-    pruned, n_read, n_total = read_skipping(spark, t, "id", lo=500, hi=700)
+    txlog.tx_append(
+        spark.range(0, 10_000).repartitionByRange(10, "id"), t, stats_cols=["id"]
+    )
+    pruned, n_read, n_total = txlog.tx_read_skipping(spark, t, "id", lo=500, hi=700)
     mp = execution_metrics(pruned)
     assert mp["scan_files_read"] == n_read < n_total  # pruning REALLY read less
 

@@ -373,11 +373,8 @@ def test_running_user_max_typed_state(spark):
 
 
 def test_stream_to_versioned_table_lands_pinned_versions(spark, tmp_path):
-    from parallel_dbms_spark.sources.lake import list_versions_at, read_version
-    from parallel_dbms_spark.streaming import (
-        read_events_stream,
-        stream_to_versioned_table,
-    )
+    from parallel_dbms_spark.sources import txlog
+    from parallel_dbms_spark.streaming import read_events_stream, stream_tx_append
 
     ev = read_events_stream(
         spark,
@@ -387,15 +384,16 @@ def test_stream_to_versioned_table_lands_pinned_versions(spark, tmp_path):
         max_files_per_trigger=1,
     ).select("event_id", "user_id", "ts")
     t = str(tmp_path / "versioned")
-    stream_to_versioned_table(ev, t, checkpoint=str(tmp_path / "ckpt"))
-    versions = list_versions_at(t)
-    assert len(versions) >= 1
-    # union of all versions == the full fixture (each batch is one version)
-    total = 0
-    for v in versions:
-        total += read_version(spark, t, version=v).count()
+    stream_tx_append(ev, t, checkpoint=str(tmp_path / "ckpt"))
+    versions = txlog.log_versions(t)
+    # one staged file per trigger -> each batch lands as its own version
+    assert len(versions) == 3
+    counts = [txlog.read_snapshot(spark, t, version=v).count() for v in versions]
+    # every version adds rows, and a pinned read of an early version
+    # still sees only its own batches after later commits landed
+    assert counts == sorted(set(counts))
     batch = spark.read.parquet(str(tmp_path / "staged")).count()
-    assert total == batch
+    assert counts[-1] == batch
 
 
 def test_stream_neardup_dedup_equals_batch_reference(spark, tmp_path):

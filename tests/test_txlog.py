@@ -3895,3 +3895,36 @@ def test_dv_reads_on_escaped_table_path(spark, tmp_path):
         (3, "r3", "delete", v), (12, "r12", "delete", v),
         (13, "r13", "delete", v),
     ]
+
+
+def test_pre_gregorian_dates_and_timestamps_are_found(spark, table):
+    """Dates and timestamps before the 1582-10-15 Gregorian cutover are
+    found by Bloom point lookup and by range skipping. Their probe and
+    residual literals must not go through PySpark's ``java.sql``
+    conversion, which shifts them onto the Julian calendar (or, for
+    year 1, raises)."""
+    rows = [
+        (0, "0001-01-01", "1000-01-01 05:00:00"),
+        (1, "1000-01-01", "1582-10-04 12:30:00"),
+        (2, "1582-10-15", "1582-10-15 00:00:01"),
+        (3, "2024-05-06", "2024-05-06 07:08:09"),
+    ]
+    values = ", ".join(
+        f"({i}, DATE '{d}', TIMESTAMP '{ts}')" for i, d, ts in rows
+    )
+    df = spark.sql(f"SELECT * FROM VALUES {values} AS t(i, d, ts)")
+    txlog.tx_append(
+        df.repartition(2), table,
+        stats_cols=["d", "ts"], bloom_cols=["d", "ts"],
+    )
+    for i, d, ts in rows:
+        for col, value in (
+            ("d", dt.date.fromisoformat(d)),
+            ("ts", dt.datetime.fromisoformat(ts)),
+        ):
+            got, _, _ = txlog.tx_point_lookup(spark, table, col, value)
+            assert [r.i for r in got.collect()] == [i], (col, value)
+            got, _, _ = txlog.tx_read_skipping(spark, table, col, value, value)
+            assert [r.i for r in got.collect()] == [i], (col, value)
+            got, _, _ = txlog.tx_read_skipping(spark, table, {col: (value, None)})
+            assert sorted(r.i for r in got.collect()) == list(range(i, 4))
