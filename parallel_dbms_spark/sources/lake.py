@@ -24,6 +24,9 @@ bitmaps live on the transactional log (sources/txlog.py).
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -99,7 +102,6 @@ def compact_small_files(
     """
     import glob as _glob
     import math
-    import os
 
     total = sum(
         os.path.getsize(p)
@@ -247,8 +249,8 @@ def z_cluster(
 # Bloom sidecars (point-lookup skipping). Versions, min/max stats,
 # deletes and distinct bitmaps ride the transactional log instead
 # (sources/txlog.py); this directory-level Bloom build is what plain
-# parquet directories use, and its word builder is shared with the
-# log's per-commit Bloom sidecars.
+# parquet directories use. Its word builder, probe hashes and sidecar
+# decoder are shared with the log's per-commit Bloom sidecars.
 # ---------------------------------------------------------------------------
 def exact_lit(value):
     """``F.lit(value)`` with calendar-exact dates and timestamps.
@@ -369,35 +371,100 @@ def bloom_probe_bits(
     """Bloom probe bit positions of ``value`` for each ``(n_bits,
     n_hashes)`` config in ``cfgs``: ``{cfg: [pmod(xxhash64(CAST(value
     AS typ), i), n_bits) for i < n_hashes]}``, the positions
-    :func:`write_bloom_manifest` and the txlog Bloom build set.
+    :func:`bloom_words` sets for :func:`write_bloom_manifest` and the
+    txlog Bloom build.
 
-    Every config's hashes are projected over a one-row ``VALUES``
-    relation and collected once. The optimizer folds the projection
-    into a local relation, so Spark's own xxhash64 runs on the driver
-    and no job starts."""
-    from pyspark.sql import functions as F
-
-    cfgs = sorted(set(cfgs))
+    The k seeded hashes ``xxhash64(v, i)``, ``i < max(n_hashes)``, are
+    projected ONCE over a one-row ``VALUES`` relation (one ``select`` of
+    the literal, one ``selectExpr`` of the hashes) and collected; the
+    optimizer folds the projection into a local relation, so Spark's
+    own xxhash64 runs on the driver and no job starts. Every config
+    shares those hashes: its bits are ``h % n_bits`` on the driver,
+    which equals Spark's ``pmod`` for ``n_bits > 0``."""
     if not cfgs:
         return {}
-    lit = exact_lit(value).cast(typ)
+    k = max(nh for _, nh in cfgs)
     row = (
         spark.sql("SELECT * FROM VALUES (0) AS t(__z)")
-        .select(
-            *[
-                F.pmod(F.xxhash64(lit, F.lit(i)), F.lit(nb)).alias(
-                    f"b{j}_{i}"
-                )
-                for j, (nb, nh) in enumerate(cfgs)
-                for i in range(nh)
-            ]
-        )
+        .select(exact_lit(value).cast(typ).alias("__v"))
+        .selectExpr(*[f"xxhash64(__v, {i}) AS h{i}" for i in range(k)])
         .collect()[0]
     )
-    return {
-        (nb, nh): [int(row[f"b{j}_{i}"]) for i in range(nh)]
-        for j, (nb, nh) in enumerate(cfgs)
+    return {(nb, nh): [row[i] % nb for i in range(nh)] for nb, nh in cfgs}
+
+
+# Decoded Bloom sidecars per sidecar parquet file, keyed by (path,
+# mtime_ns, size), the stat guard of txlog.read_commit: a sidecar never
+# changes once a commit (or write_bloom_manifest) names it, so repeated
+# lookups decode each sidecar once. Bounded by the total decoded words;
+# on overflow the cache is dropped (a cold restart is just re-decoding).
+_BLOOM_CACHE: dict = {}
+_BLOOM_CACHE_MAX_WORDS = 1 << 22
+_bloom_cache_words = 0
+_BLOOM_CACHE_LOCK = threading.Lock()
+
+
+def load_bloom_sidecar(path: str) -> dict:
+    """Decode one Bloom sidecar parquet file (the :func:`bloom_words`
+    rows) into ``{file: (n_bits, n_hashes, words, bits)}``: ``words``
+    are the file's set word numbers, ascending (int32 numpy), and
+    ``bits`` their masks as uint64 numpy, so bit 63, the sign bit of
+    the stored signed long, tests like any other bit.
+
+    One pyarrow read per sidecar file, decoded through the flattened
+    child arrays of ``sparse`` (no per-word Python objects), then
+    cached under the file's stat; the per-file arrays are views of
+    the sidecar's child arrays. Test membership with
+    :func:`bloom_admits`."""
+    global _bloom_cache_words
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    hit = _BLOOM_CACHE.get(key)
+    if hit is not None:
+        return hit
+    tbl = pq.read_table(path)
+    sparse = tbl.column("sparse").combine_chunks()
+    flat = sparse.flatten()
+    words = flat.field("word").to_numpy()
+    bits = flat.field("bits").to_numpy().view(np.uint64)
+    offs = np.asarray(sparse.offsets)
+    offs = offs - offs[0]
+    out = {
+        f: (nb, nh, words[offs[i]:offs[i + 1]], bits[offs[i]:offs[i + 1]])
+        for i, (f, nb, nh) in enumerate(zip(
+            tbl.column("file").to_pylist(),
+            tbl.column("n_bits").to_pylist(),
+            tbl.column("n_hashes").to_pylist(),
+        ))
     }
+    with _BLOOM_CACHE_LOCK:
+        if _bloom_cache_words + len(words) > _BLOOM_CACHE_MAX_WORDS:
+            _BLOOM_CACHE.clear()  # bounded; cold restart is re-decoding
+            _bloom_cache_words = 0
+        _BLOOM_CACHE[key] = out
+        _bloom_cache_words += len(words)
+    return out
+
+
+def bloom_admits(entry, probe) -> bool:
+    """Whether the decoded filter ``entry`` (a value of
+    :func:`load_bloom_sidecar`) has every bit of ``probe`` (its
+    config's :func:`bloom_probe_bits`) set: each probe bit's word must
+    be present with that bit set. False proves the value absent from
+    the file."""
+    import numpy as np
+
+    _, _, words, bits = entry
+    p = np.asarray(probe, dtype=np.int64)
+    w = p // 64
+    i = np.searchsorted(words, w)
+    if (i >= len(words)).any():
+        return False
+    mask = np.left_shift(np.uint64(1), (p % 64).astype(np.uint64))
+    return bool(((words[i] == w) & ((bits[i] & mask) == mask)).all())
 
 
 def read_point_lookup(
@@ -411,48 +478,35 @@ def read_point_lookup(
     applies inside them (Bloom false positives cost I/O, never
     correctness). Returns (DataFrame, n_files_read, n_files_total).
 
-    The probe hashes must be bit-identical to the build hashes, so
-    they are Spark's own xxhash64 over the value cast to the data
-    column's type, folded on the driver from a one-row ``VALUES``
-    projection (:func:`bloom_probe_bits`; a driver-side
-    reimplementation would silently diverge on type widths). The
-    sidecar membership test is a sparse-word lookup: every probe bit's
-    word must be present with that bit set.
+    The sidecar's part files are decoded on the driver
+    (:func:`load_bloom_sidecar`, cached per file) and tested there
+    (:func:`bloom_admits`), so pruning starts no job; the one job the
+    call starts is the data-schema read of ``path``. The probe hashes
+    must be bit-identical to the build hashes, so they are Spark's own
+    xxhash64 over the value cast to the data column's type, folded on
+    the driver from a one-row ``VALUES`` projection
+    (:func:`bloom_probe_bits`; a driver-side reimplementation would
+    silently diverge on type widths).
     """
     from pyspark.sql import functions as F
 
-    man = spark.read.parquet(path + f"/_bloom_{col}")
-    head = man.head()
-    if head is None:
-        raise ValueError(f"empty bloom manifest at {path}/_bloom_{col}")
-    n_bits, n_hashes = head.n_bits, head.n_hashes
+    man = path + f"/_bloom_{col}"
+    blooms: dict = {}
+    for part in sorted(os.listdir(man)):
+        if part.endswith(".parquet"):
+            blooms.update(load_bloom_sidecar(os.path.join(man, part)))
+    if not blooms:
+        raise ValueError(f"empty bloom manifest at {man}")
 
     schema = spark.read.parquet(path).schema
     typ = schema[col].dataType.simpleString()
-    cfg = (n_bits, n_hashes)
-    probe = bloom_probe_bits(spark, value, typ, [cfg])[cfg]
-    def _admits(word: int, mask: int):
-        # single-arg lambda on purpose: PySpark binds higher-order-
-        # function callbacks by arity, so default-arg captures would
-        # be mistaken for extra lambda parameters
-        def check(s):
-            return (s.getField("word") == F.lit(word)) & (
-                s.getField("bits").bitwiseAND(F.lit(mask)) == F.lit(mask)
-            )
-
-        return check
-
-    cond = F.lit(True)
-    for b in probe:
-        word, bit = divmod(b, 64)
-        # the sparse words are signed longs: bit 63 is the sign bit
-        mask = 1 << bit if bit < 63 else -(1 << 63)
-        cond = cond & F.exists(F.col("sparse"), _admits(word, mask))
-    files = [r.file for r in man.filter(cond).select("file").collect()]
-    n_total = man.count()
+    probe = bloom_probe_bits(
+        spark, value, typ, {(b[0], b[1]) for b in blooms.values()}
+    )
+    files = [f for f, b in blooms.items() if bloom_admits(b, probe[b[:2]])]
     if not files:
-        return spark.createDataFrame([], schema), 0, n_total
+        return spark.createDataFrame([], schema), 0, len(blooms)
     df = spark.read.schema(schema).parquet(*files).filter(
         F.col(col) == exact_lit(value).cast(typ)
     )
-    return df, len(files), n_total
+    return df, len(files), len(blooms)

@@ -2080,9 +2080,29 @@ def _write_sidecar(df: DataFrame, table: str, kind: str) -> str:
     return rel
 
 
+def _staged_column(
+    spark: SparkSession, table: str, rels: list[str], col: str,
+    field: StructField | None,
+) -> DataFrame:
+    """The files ``rels`` read as their PHYSICAL column of logical
+    ``col``, aliased ``__c``: with ``field`` (that physical column) as
+    the read schema, so the read starts no schema-inference job;
+    without it, through inference."""
+    from pyspark.sql import functions as F
+
+    paths = [os.path.join(table, r) for r in rels]
+    if field is None:
+        return spark.read.parquet(*paths).select(
+            F.col(_l2p_col(table, col)).alias("__c")
+        )
+    return spark.read.schema(StructType([field])).parquet(*paths).select(
+        F.col(field.name).alias("__c")
+    )
+
+
 def _build_distinct_sidecar(
     spark: SparkSession, table: str, rels: list[str], col: str,
-    physical: str | None = None,
+    field: StructField | None = None,
 ) -> dict:
     """Build per-file exact-distinct BITMAPS over exactly ``rels`` and
     write them as ONE immutable sidecar parquet under ``_sidecars/``;
@@ -2092,16 +2112,15 @@ def _build_distinct_sidecar(
     Druid/ClickHouse segment-bitmap design at file grain, scoped to a
     commit's own files so the sidecar RIDES the commit: a pinned
     snapshot sees exactly the bitmaps of its own file set, and
-    rewrites retire bitmaps with their files."""
+    rewrites retire bitmaps with their files. ``field`` is the staged
+    PHYSICAL column when the caller knows it (a read with that schema
+    starts no inference job)."""
     from pyspark.sql import functions as F
 
     from ..functions.bitmaps import build_bitmaps
 
-    paths = [os.path.join(table, r) for r in rels]
-    df = spark.read.parquet(*paths).select(
-        _rel_expr(table).alias("file"),
-        # files carry physical names
-        F.col(physical or _l2p_col(table, col)).alias("__id"),
+    df = _staged_column(spark, table, rels, col, field).select(
+        _rel_expr(table).alias("file"), F.col("__c").alias("__id")
     )
     bm = build_bitmaps(df, ["file"], "__id")
     rel = _write_sidecar(bm, table, "distinct")
@@ -2160,20 +2179,26 @@ def tx_instant_distinct(
     dvs = snapshot_dvs(table, v)
     dmap = snapshot_distinct_map(table, v).get(col, {})
     covered = [f for f in files if f in dmap and f not in dvs]
-    uncovered = [f for f in files if f not in set(covered)]
+    covered_set = set(covered)
+    uncovered = [f for f in files if f not in covered_set]
     parts = []
     if covered:
-        side = spark.read.parquet(
-            *sorted({os.path.join(table, dmap[f]) for f in covered})
-        )
+        # the sidecar schema is known: no inference job
+        side = spark.read.schema(
+            f"file string, {BUCKET} long, {BITMAP} binary"
+        ).parquet(*sorted({os.path.join(table, dmap[f]) for f in covered}))
         parts.append(
             side.filter(F.col("file").isin(covered)).select(BUCKET, BITMAP)
         )
     if uncovered:
+        mv = None if version is None else v
+        uncovered_set = set(uncovered)
         df = _apply_dvs(
-            spark.read.parquet(*[os.path.join(table, f) for f in uncovered]),
+            _data_reader(spark, table, _schema_at(table, mv), mv).parquet(
+                *[os.path.join(table, f) for f in uncovered]
+            ),
             table,
-            {f: p for f, p in dvs.items() if f in set(uncovered)},
+            {f: p for f, p in dvs.items() if f in uncovered_set},
         ).select(F.col(_l2p_col(table, col, version)).alias("__id"))
         parts.append(
             build_bitmaps(df, [], "__id").select(BUCKET, BITMAP)
@@ -2238,7 +2263,8 @@ def tx_instant_agg(
         and f not in dvs
         and col in stats.get(f, {}).get("c", {})
     ]
-    uncovered = [f for f in files if f not in set(covered)]
+    covered_set = set(covered)
+    uncovered = [f for f in files if f not in covered_set]
     parts = []
     if covered:
         n = sum(int(stats[f]["n"]) for f in covered)
@@ -2252,10 +2278,14 @@ def tx_instant_agg(
             )
         )
     if uncovered:
+        mv = None if version is None else v
+        uncovered_set = set(uncovered)
         df = _apply_dvs(
-            spark.read.parquet(*[os.path.join(table, f) for f in uncovered]),
+            _data_reader(spark, table, schema, mv).parquet(
+                *[os.path.join(table, f) for f in uncovered]
+            ),
             table,
-            {f: p for f, p in dvs.items() if f in set(uncovered)},
+            {f: p for f, p in dvs.items() if f in uncovered_set},
         )
         pcol = _l2p_col(table, col, version)  # raw files are physical
         parts.append(
@@ -2296,7 +2326,7 @@ def _build_bloom_sidecar(
     col: str,
     n_bits: int | None = None,
     n_hashes: int = 5,
-    physical: str | None = None,
+    field: StructField | None = None,
 ) -> dict:
     """Build per-file Bloom filters over exactly ``rels`` and write
     them as ONE immutable sidecar parquet under ``_sidecars/``;
@@ -2307,7 +2337,9 @@ def _build_bloom_sidecar(
     files so the filter RIDES the commit: a pinned snapshot sees
     exactly the filters of its own file set. Sidecars are invisible to
     scans (underscore dir) and, like data files, immutable once a
-    commit names them."""
+    commit names them. ``field`` is the staged PHYSICAL column when the
+    caller knows it (a read with that schema starts no inference
+    job)."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
@@ -2321,38 +2353,11 @@ def _build_bloom_sidecar(
         n_bits = 4096
         while n_bits < 10 * rows:
             n_bits <<= 1
-    df = spark.read.parquet(*paths).select(
-        _rel_expr(table).alias("file"),
-        F.col(physical or _l2p_col(table, col)).alias("__v"),
+    df = _staged_column(spark, table, rels, col, field).select(
+        _rel_expr(table).alias("file"), F.col("__c").alias("__v")
     )
     rel = _write_sidecar(bloom_words(df, n_bits, n_hashes), table, "bloom")
     return {"sidecar": rel, "files": sorted(rels)}
-
-
-def _load_blooms(table: str, rel_to_sidecar: dict) -> dict:
-    """Driver-side load of the sidecar rows needed for a probe:
-    ``{data_relpath: (n_bits, n_hashes, {word: bits})}``. One pyarrow
-    read per DISTINCT sidecar file (bounded by commit count, never row
-    count); each sidecar is ~n_bits/8 bytes per covered file."""
-    out: dict = {}
-    by_sidecar: dict = {}
-    for f, sc in rel_to_sidecar.items():
-        by_sidecar.setdefault(sc, set()).add(f)
-    import pyarrow.parquet as pq
-
-    for sc, wanted in by_sidecar.items():
-        tbl = pq.read_table(os.path.join(table, sc)).to_pylist()
-        for row in tbl:
-            if row["file"] in wanted:
-                words = {
-                    int(s["word"]): int(s["bits"]) for s in row["sparse"]
-                }
-                out[row["file"]] = (
-                    int(row["n_bits"]),
-                    int(row["n_hashes"]),
-                    words,
-                )
-    return out
 
 
 def tx_bloom(
@@ -2396,14 +2401,22 @@ def tx_point_lookup(
     pushed-down file scan each, never a wrong answer (the residual
     equality filter still applies, as do deletion vectors).
 
+    Each live file's filter comes from its sidecar, decoded once per
+    sidecar file and cached under the file's stat
+    (:func:`lake.load_bloom_sidecar`; sidecars are immutable once a
+    commit names them), so lookups on an unchanged snapshot read no
+    sidecar and a new commit's lookups decode only its new sidecar.
     The probe hashes are Spark's own xxhash64 over the value cast to
     the column's type, folded on the driver from a one-row ``VALUES``
     projection (:func:`lake.bloom_probe_bits`, no job), so they are
-    bit-identical to the build hashes. Returns (DataFrame,
+    bit-identical to the build hashes; membership is tested on the
+    driver (:func:`lake.bloom_admits`). Returns (DataFrame,
     n_files_read, n_files_total)."""
     from pyspark.sql import functions as F
 
-    from .lake import bloom_probe_bits, exact_lit
+    from .lake import (
+        bloom_admits, bloom_probe_bits, exact_lit, load_bloom_sidecar,
+    )
 
     v, files = snapshot_files(table, version)
     if not files:
@@ -2412,24 +2425,26 @@ def tx_point_lookup(
     if schema is None:
         schema = spark.read.parquet(os.path.join(table, files[0])).schema
     bmap = snapshot_bloom_map(table, v).get(col, {})
-    blooms = _load_blooms(table, {f: s for f, s in bmap.items() if f in set(files)})
+    # a file's filter lives in the sidecar its newest Bloom commit names
+    blooms = {}
+    for f in files:
+        if f in bmap:
+            entry = load_bloom_sidecar(os.path.join(table, bmap[f])).get(f)
+            if entry is not None:
+                blooms[f] = entry
     typ = schema[col].dataType.simpleString()
     lit = exact_lit(value).cast(typ)
     # probe bit positions per distinct (n_bits, n_hashes) config —
     # normally one config; a handful after resizing backfills
     probe_bits = bloom_probe_bits(
-        spark, value, typ, [(b[0], b[1]) for b in blooms.values()]
+        spark, value, typ, {b[:2] for b in blooms.values()}
     )
-
-    def _admits(entry) -> bool:
-        nb, nh, words = entry
-        for bit in probe_bits[(nb, nh)]:
-            w, mask = bit // 64, 1 << (bit % 64)
-            if words.get(w, 0) & mask != mask:
-                return False
-        return True
-
-    keep = [f for f in files if f not in blooms or _admits(blooms[f])]
+    keep = [
+        f
+        for f in files
+        if f not in blooms
+        or bloom_admits(blooms[f], probe_bits[blooms[f][:2]])
+    ]
     mv = None if version is None else v
     if not keep:
         df = _empty_frame(spark, schema)
@@ -2438,7 +2453,8 @@ def tx_point_lookup(
         *[os.path.join(table, f) for f in keep]
     )
     dvs = snapshot_dvs(table, v)
-    df = _apply_dvs(df, table, {f: p for f, p in dvs.items() if f in set(keep)})
+    keep_set = set(keep)
+    df = _apply_dvs(df, table, {f: p for f, p in dvs.items() if f in keep_set})
     df = _serve_logical(df, table, mv)
     return df.filter(F.col(col) == lit), len(keep), len(files)
 
@@ -3272,7 +3288,8 @@ def tx_append(
         {
             _p(c, c): [
                 _build_bloom_sidecar(
-                    df.sparkSession, table, added, c, physical=_p(c, c)
+                    df.sparkSession, table, added, c,
+                    field=StructField(_p(c, c), df.schema[c].dataType),
                 )
             ]
             for c in bloom_cols
@@ -3287,7 +3304,8 @@ def tx_append(
             distinct = {
                 _p(c, c): [
                     _build_distinct_sidecar(
-                        df.sparkSession, table, added, c, physical=_p(c, c)
+                        df.sparkSession, table, added, c,
+                        field=StructField(_p(c, c), df.schema[c].dataType),
                     )
                 ]
                 for c in distinct_cols
@@ -3981,7 +3999,8 @@ def tx_read_skipping(
         reader = _data_reader(spark, table, schema, mv)
         df = reader.parquet(*[os.path.join(table, f) for f in keep])
         dvs = snapshot_dvs(table, v)
-        df = _apply_dvs(df, table, {f: p for f, p in dvs.items() if f in set(keep)})
+        keep_set = set(keep)
+        df = _apply_dvs(df, table, {f: p for f, p in dvs.items() if f in keep_set})
         df = _serve_logical(df, table, mv)
     for c, (a, b) in ranges.items():
         if a is not None:
@@ -5816,9 +5835,10 @@ def tx_optimize(
         n_out = max(1, -(-total // target_file_bytes))  # ceil
         schema = table_schema(table)
         schema_json = schema.json() if schema is not None else None
+        small_set = set(small)
         live_df = _live_rows(
             spark, table, schema, small,
-            {f: p for f, p in dvs.items() if f in set(small)},
+            {f: p for f, p in dvs.items() if f in small_set},
         )
         if cluster_by:
             from .lake import z_cluster

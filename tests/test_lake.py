@@ -357,6 +357,54 @@ def test_bloom_point_lookup_finds_every_key(spark, tmp_path):
         assert n_read >= 1
 
 
+def test_bloom_sidecar_decoder_matches_python_reference(spark, tmp_path):
+    """The decoded sidecar and its numpy membership test equal the
+    word-dict test over the sidecar rows read with ``to_pylist``, for
+    probes built from set bits (bit 63, the sign bit, included) and for
+    random probes, most of which some word rejects."""
+    import os
+    import random
+
+    import pyarrow.parquet as pq
+
+    from parallel_dbms_spark.sources.lake import (
+        bloom_admits,
+        load_bloom_sidecar,
+        write_bloom_manifest,
+    )
+
+    t = str(tmp_path / "bloom")
+    spark.range(0, 2000).repartition(3).write.parquet(t)
+    write_bloom_manifest(spark, t, "id", n_bits=4096, n_hashes=3)
+    man = t + "/_bloom_id"
+    (part,) = [f for f in os.listdir(man) if f.endswith(".parquet")]
+    decoded = load_bloom_sidecar(os.path.join(man, part))
+    rows = pq.read_table(os.path.join(man, part)).to_pylist()
+    assert sorted(decoded) == sorted(r["file"] for r in rows)
+    rng = random.Random(7)
+    n_sign = 0
+    for r in rows:
+        words = {s["word"]: s["bits"] & (2**64 - 1) for s in r["sparse"]}
+        set_bits = [
+            w * 64 + b for w, m in words.items() for b in range(64)
+            if m >> b & 1
+        ]
+        n_sign += sum(b % 64 == 63 for b in set_bits)
+
+        def admits(probe):
+            return all(words.get(b // 64, 0) >> (b % 64) & 1 for b in probe)
+
+        entry = decoded[r["file"]]
+        assert entry[:2] == (4096, 3)
+        probes = [rng.sample(set_bits, 3) for _ in range(50)] + [
+            [rng.randrange(4096) for _ in range(3)] for _ in range(200)
+        ]
+        probes += [[b] for b in set_bits if b % 64 == 63]
+        for probe in probes:
+            assert bloom_admits(entry, probe) == admits(probe), probe
+    assert n_sign > 0  # the fixture sets the sign bit of some word
+
+
 def test_bloom_autosize_prevents_saturation_on_big_files(spark, tmp_path):
     # The scale cliff this guards: a FIXED bitset saturates once
     # rows/file outgrows it (every bit set -> zero pruning). Auto-size

@@ -3816,7 +3816,12 @@ def _jobs_run(spark, fn):
 def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
     """Every key of a Bloom-covered table is found through the Bloom
     prune (a false negative would mean the probe hashes differ from
-    the build hashes), and the probe itself starts no Spark job."""
+    the build hashes), the probe bits of every config, a
+    non-power-of-two one included, equal Spark's own
+    ``pmod(xxhash64(k, i), n_bits)`` over the stored column, and the
+    probe itself starts no Spark job."""
+    from pyspark.sql import functions as F
+
     from parallel_dbms_spark.sources import lake
 
     df = spark.createDataFrame(
@@ -3827,6 +3832,24 @@ def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
         got, nread, ntotal = txlog.tx_point_lookup(spark, table, "k", k)
         assert [r.i for r in got.collect()] == [i], (typ, k)
         assert nread <= ntotal
+    cfgs = [(1000, 7), (4096, 5)]
+    want = {
+        r.i: {
+            cfg: [r[f"b{cfg[0]}_{h}"] for h in range(cfg[1])] for cfg in cfgs
+        }
+        for r in df.select(
+            "i",
+            *[
+                F.pmod(F.xxhash64("k", F.lit(h)), F.lit(nb)).alias(
+                    f"b{nb}_{h}"
+                )
+                for nb, nh in cfgs
+                for h in range(nh)
+            ],
+        ).collect()
+    }
+    for i, k in enumerate(keys):
+        assert lake.bloom_probe_bits(spark, k, typ, cfgs) == want[i], (typ, k)
     bits, jobs = _jobs_run(
         spark,
         lambda: lake.bloom_probe_bits(
@@ -3864,6 +3887,77 @@ def test_dv_point_lookup_starts_no_python_worker_job(spark, table):
 
     (nread, rows), jobs = _jobs_run(spark, miss)
     assert (nread, rows, jobs) == (0, [], 0)
+
+
+def test_point_lookup_decodes_each_bloom_sidecar_once(
+    spark, table, monkeypatch
+):
+    """A lookup on an unchanged snapshot reads no Bloom sidecar file:
+    each sidecar is decoded once and cached under its stat. After one
+    more append, a lookup decodes only the new commit's sidecar, and
+    the answers are unchanged."""
+    import pyarrow.parquet as pq
+
+    sidecar_reads = []
+    read_table = pq.read_table
+
+    def counting(source, *args, **kwargs):
+        if txlog.SIDECARS in str(source):
+            sidecar_reads.append(str(source))
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    txlog.tx_append(_ranged(spark, 0, 3000, parts=2), table,
+                    bloom_cols=["k"])
+
+    def lookup(k):
+        df, _, _ = txlog.tx_point_lookup(spark, table, "k", k)
+        return [(r.k, r.v) for r in df.collect()]
+
+    assert lookup(101) == [(101, 202)]
+    assert len(sidecar_reads) == 1
+    sidecar_reads.clear()
+    assert lookup(101) == [(101, 202)]
+    assert lookup(10**9) == []
+    assert sidecar_reads == []
+    old = set(txlog.snapshot_bloom_map(table)["k"].values())
+    txlog.tx_append(_ranged(spark, 3000, 4000, parts=1), table,
+                    bloom_cols=["k"])
+    new = set(txlog.snapshot_bloom_map(table)["k"].values()) - old
+    assert lookup(101) == [(101, 202)]
+    assert lookup(3500) == [(3500, 7000)]
+    assert sidecar_reads == [os.path.join(table, sc) for sc in new]
+
+
+def test_sidecar_reads_start_no_inference_job(spark, table, tmp_path):
+    """Reading Bloom and distinct sidecars and the files they do not
+    cover starts no schema-inference job: the build call of
+    ``tx_instant_distinct`` on a table with sidecars and a deletion
+    vector starts none, and ``lake.read_point_lookup`` starts only its
+    data-schema read."""
+    from parallel_dbms_spark.sources import lake
+
+    txlog.tx_append(_ranged(spark, 0, 3000, parts=2), table,
+                    distinct_cols=["k"])
+    txlog.tx_append(_ranged(spark, 3000, 4000, parts=1), table,
+                    distinct_cols=["k"])
+    txlog.tx_delete_where_mor(spark, table, "k in (100, 3900)")
+    (df, n_scanned, n_total), jobs = _jobs_run(
+        spark, lambda: txlog.tx_instant_distinct(spark, table, "k")
+    )
+    assert jobs == 0
+    assert (n_scanned, n_total) == (2, 3)
+    assert df.collect()[0].n_distinct == 3998
+
+    t = str(tmp_path / "plain")
+    spark.range(0, 3000).repartition(4).write.parquet(t)
+    lake.write_bloom_manifest(spark, t, "id")
+    (got, n_read, n_total), jobs = _jobs_run(
+        spark, lambda: lake.read_point_lookup(spark, t, "id", 1234)
+    )
+    assert jobs <= 1
+    assert [r.id for r in got.collect()] == [1234]
+    assert 1 <= n_read < n_total == 4
 
 
 def test_dv_reads_on_escaped_table_path(spark, tmp_path):
