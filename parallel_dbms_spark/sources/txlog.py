@@ -33,8 +33,9 @@ POSIX/HDFS-style filesystem):
   files a writer removed cannot have observed or affected the rows the
   writer rewrote.
 - Every ``checkpoint_every`` commits the winner also writes
-  ``N.checkpoint.json`` — the full live-file list at N, published via
-  tmp + ``os.replace`` — so reconstructing a snapshot replays at most
+  ``N.checkpoint.json`` — the whole replayed state at N (live files,
+  their metadata, the table-level planes), published via tmp + fsync +
+  ``os.replace`` — so reconstructing a snapshot replays at most
   ``checkpoint_every`` tail commits regardless of table age. At 100 TB
   the log stays kilobytes per commit: it names files, never rows, and
   the driver handles only file lists (bounded by file count, never
@@ -121,10 +122,8 @@ def log_versions(table: str) -> list[int]:
 # records are cached per (path, mtime_ns, size) — the stat guard makes
 # the cache self-invalidating even if a file WERE replaced (RESTORE,
 # retention, and clones always mint new paths, but the guard costs one
-# stat and buys bulletproofness). This turns every snapshot_* helper's
-# checkpoint-tail replay from O(tail) JSON parses per call into O(tail)
-# stats — the log layer's hottest path (tx_append calls
-# table_constraints + table_partition_by + snapshot_* per attempt).
+# stat and buys bulletproofness). This keeps a :func:`_replay` miss's
+# checkpoint-tail fold at O(tail) stats instead of O(tail) JSON parses.
 _COMMIT_CACHE: dict = {}
 _COMMIT_CACHE_MAX = 4096
 
@@ -150,27 +149,177 @@ def read_commit(table: str, v: int) -> dict:
     return dict(rec)
 
 
+# Table-level metadata planes and their defaults, resolved NEWEST-WINS:
+# a commit that changes one records its FULL new value, so the newest
+# record at-or-before a version is the answer.
+_NEWEST_WINS = {
+    "schema": None, "partition_by": [], "constraints": {},
+    "column_mapping": None, "retired_physical": None,
+    "column_defaults": {}, "generated_columns": {}, "cluster_by": [],
+    "identity_columns": {}, "identity_watermark": {},
+    "row_tracking": False, "copy_into_sources": [], "row_id_watermark": 0,
+}
+
+
+def _seed(ck: dict) -> dict:
+    """A mutable fold state seeded from a checkpoint record (``{}``:
+    replay from the start of the log)."""
+    return {
+        "live": set(ck.get("live", [])),
+        "stats": dict(ck.get("stats", {})),
+        "dvs": dict(ck.get("dvs", {})),
+        "blooms": {c: dict(m) for c, m in ck.get("blooms", {}).items()},
+        "distincts": {
+            c: dict(m) for c, m in ck.get("distincts", {}).items()
+        },
+        "txns": dict(ck.get("txns", {})),
+        "pv": dict(ck.get("pv", {})),
+        "base_row_id": dict(ck.get("base_row_id", {})),
+        **{k: ck.get(k, d) for k, d in _NEWEST_WINS.items()},
+    }
+
+
+def _finish(s: dict) -> dict:
+    """The resolved state of a fold, keys in checkpoint order: the
+    per-file planes restricted to the live files."""
+    live = s["live"]
+
+    def on_live(d: dict) -> dict:
+        return {f: x for f, x in d.items() if f in live}
+
+    def sidecars(d: dict) -> dict:
+        return {
+            c: on_live(m) for c, m in d.items()
+            if any(f in live for f in m)
+        }
+
+    return {
+        "live": sorted(live),
+        "stats": on_live(s["stats"]),
+        "dvs": on_live(s["dvs"]),
+        "blooms": sidecars(s["blooms"]),
+        "distincts": sidecars(s["distincts"]),
+        "schema": s["schema"],
+        "txns": s["txns"],
+        "pv": on_live(s["pv"]),
+        **{k: s[k] for k in _NEWEST_WINS},
+        "base_row_id": on_live(s["base_row_id"]),
+    }
+
+
+_EMPTY_STATE = _finish(_seed({}))
+
+# Resolved states per (table, version, stat of the version's commit) —
+# the _COMMIT_CACHE guard: a table rebuilt at the same path re-mints its
+# commit files, so a stale entry can never serve. A state is O(live
+# files); the bound keeps the memo a few tables' worth of versions.
+_REPLAY_CACHE: dict = {}
+_REPLAY_CACHE_MAX = 64
+
+
+def _replay(table: str, v: int) -> dict:
+    """The table's whole state at committed version ``v``, resolved in
+    one forward fold: seed from the newest checkpoint at-or-before
+    ``v`` (a checkpoint IS this state written out, see
+    :func:`_write_checkpoint`), then apply the commits after it. Every
+    ``snapshot_*``/``table_*`` reader is a field read of this state, so
+    resolving a version costs O(tail commits) once, never O(table age),
+    and a later reader of the same version costs one stat.
+
+    Per-file planes (``live``, ``stats``, ``dvs``, ``pv``, Bloom and
+    distinct sidecar pointers, ``base_row_id``) fold by removing a
+    commit's ``removed`` files and adding its entries; ``txns`` keeps
+    each app's highest batch; the metadata planes are newest-wins
+    (:data:`_NEWEST_WINS`). Records keep PHYSICAL column keys.
+
+    The result is the shared memoized object and is READ-ONLY: public
+    readers hand out copies. A version outside the log raises
+    ``FileNotFoundError`` (its commit record is absent)."""
+    st = os.stat(_commit_path(table, v))
+    key = (table, v, st.st_mtime_ns, st.st_size)
+    hit = _REPLAY_CACHE.get(key)
+    if hit is not None:
+        return hit
+    start, ck = 0, {}
+    for c in range(v, 0, -1):
+        if os.path.exists(_ckpt_path(table, c)):
+            with open(_ckpt_path(table, c)) as fh:
+                ck = json.load(fh)
+            start = c
+            break
+    s = _seed(ck)
+    for c in range(max(start, 1), v + 1):
+        rec = read_commit(table, c)
+        s.update({k: rec[k] for k in _NEWEST_WINS if k in rec})
+        if c == start:
+            # the checkpoint already folds this commit's files; its
+            # metadata is applied over the checkpoint, which may
+            # predate a plane being folded into checkpoints
+            continue
+        for f in rec["removed"]:
+            s["live"].discard(f)
+            for plane in ("stats", "dvs", "pv", "base_row_id"):
+                s[plane].pop(f, None)
+            for m in (*s["blooms"].values(), *s["distincts"].values()):
+                m.pop(f, None)
+        s["live"] |= set(rec["added"])
+        s["stats"].update(rec.get("stats", {}))
+        s["pv"].update(rec.get("pv", {}))
+        s["base_row_id"].update(rec.get("base_row_id", {}))
+        for f, pos in rec.get("dv", {}).items():
+            s["dvs"][f] = sorted(set(s["dvs"].get(f, [])) | set(pos))
+        for kind, plane in (("bloom", "blooms"), ("distinct", "distincts")):
+            for col, entries in rec.get(kind, {}).items():
+                m = s[plane].setdefault(col, {})
+                for e in entries:
+                    for f in e["files"]:
+                        m[f] = e["sidecar"]
+        if rec.get("txn_app") is not None and "txn_batch" in rec:
+            a, b = rec["txn_app"], int(rec["txn_batch"])
+            s["txns"][a] = max(s["txns"].get(a, b), b)
+    if not s["schema"] and start > 1 and os.path.exists(
+        _commit_path(table, start - 1)
+    ):
+        # a checkpoint from before schemas were folded into
+        # checkpoints: the schema is the one resolved before it
+        s["schema"] = _replay(table, start - 1)["schema"]
+    state = _finish(s)
+    if len(_REPLAY_CACHE) >= _REPLAY_CACHE_MAX:
+        _REPLAY_CACHE.clear()  # bounded; cold restart is just re-folding
+    _REPLAY_CACHE[key] = state
+    return state
+
+
+def _snapshot_state(table: str, version: int | None) -> dict:
+    """The state a per-file reader answers from: exactly ``version``
+    (latest when None; one outside the log raises)."""
+    versions = log_versions(table)
+    if not versions:
+        return _EMPTY_STATE
+    return _replay(table, versions[-1] if version is None else version)
+
+
+def _meta_state(table: str, version: int | None) -> dict:
+    """The state a newest-wins metadata reader answers from: the newest
+    committed version at-or-before ``version`` (latest when None). A
+    version below an expired prefix, or an empty log, reads as the
+    empty state — every plane at its default."""
+    versions = log_versions(table)
+    if version is not None:
+        versions = [x for x in versions if x <= version]
+    return _replay(table, versions[-1]) if versions else _EMPTY_STATE
+
+
 def snapshot_files(table: str, version: int | None = None) -> tuple[int, list[str]]:
-    """(version, live file relpaths) — replay from the newest
-    checkpoint at-or-before ``version``."""
+    """(version, live file relpaths) — the live set of the
+    checkpoint-plus-tail replay (:func:`_replay`) at ``version``."""
     versions = log_versions(table)
     if not versions:
         return 0, []
     v = versions[-1] if version is None else version
     if v not in versions:
         raise ValueError(f"version {v} not in log (have {versions})")
-    start, live = 0, set()
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                live = set(json.load(fh)["live"])
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        live -= set(rec["removed"])
-        live |= set(rec["added"])
-    return v, sorted(live)
+    return v, list(_replay(table, v)["live"])
 
 
 def _try_create(path: str, payload: dict) -> bool:
@@ -198,79 +347,31 @@ def _try_create(path: str, payload: dict) -> bool:
 
 
 def _write_checkpoint(table: str, v: int) -> None:
-    _, live = snapshot_files(table, v)
-    # file-level metadata folds in its RECORDED (physical-key) form —
-    # the checkpoint seeds the same replay the commits feed
-    stats = _snapshot_stats_raw(table, v)
-    dvs = snapshot_dvs(table, v)
-    blooms = _snapshot_bloom_raw(table, v)
-    distincts = _snapshot_distinct_raw(table, v)
-    schema = _schema_at(table, v)
-    txns = snapshot_txns(table, v)
-    cm = table_column_mapping(table, v)
+    """Publish ``v.checkpoint.json``: the replayed state at ``v``
+    (:func:`_replay`) written out, so a replay seeded from it folds the
+    same answer — file-level metadata in its recorded (physical-key)
+    form. Written to a tmp file, fsynced, then published by
+    ``os.replace``: after a crash the checkpoint is absent or whole,
+    never an empty file every reader of the table would fail to
+    parse."""
     tmp = _ckpt_path(table, v) + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "version": v,
-                "live": live,
-                "stats": stats,
-                "dvs": dvs,
-                "blooms": blooms,
-                "distincts": distincts,
-                "schema": schema.json() if schema is not None else None,
-                "txns": txns,
-                "pv": _snapshot_pv_raw(table, v),
-                "partition_by": table_partition_by(table, v),
-                "constraints": table_constraints(table, v),
-                "column_mapping": cm[0] if cm else None,
-                "retired_physical": cm[1] if cm else None,
-                "column_defaults": table_column_defaults(table, v),
-                "generated_columns": table_generated_columns(table, v),
-                "cluster_by": table_cluster_by(table, v),
-                "identity_columns": table_identity(table, v),
-                "identity_watermark": identity_watermark(table, v),
-                "row_tracking": table_row_tracking(table, v),
-                "copy_into_sources": sorted(
-                    copy_into_sources(table, v)
-                ),
-                "row_id_watermark": row_id_watermark(table, v),
-                "base_row_id": snapshot_base_row_ids(table, v),
-            },
-            fh,
-        )
+        json.dump({"version": v, **_replay(table, v)}, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
     os.replace(tmp, _ckpt_path(table, v))
 
 
 def snapshot_dvs(table: str, version: int | None = None) -> dict:
     """Deletion vectors live at a version: ``{relpath: [row_index,
     ...]}`` (sorted, deduplicated) — merge-on-read deletes recorded by
-    :func:`tx_delete_where_mor`. Same checkpoint-plus-tail replay as
-    :func:`snapshot_files`; vectors for files a later commit removed
+    :func:`tx_delete_where_mor`. Read from the checkpoint-plus-tail
+    replay (:func:`_replay`); vectors for files a later commit removed
     are dropped (the rewrite already materialized the deletes)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    v = versions[-1] if version is None else version
-    start, dvs = 0, {}
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                dvs = {
-                    f: list(p)
-                    for f, p in json.load(fh).get("dvs", {}).items()
-                }
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        for f in rec["removed"]:
-            dvs.pop(f, None)
-        for f, pos in rec.get("dv", {}).items():
-            dvs[f] = sorted(set(dvs.get(f, [])) | set(pos))
-    _, live = snapshot_files(table, v)
-    live_set = set(live)
-    return {f: p for f, p in dvs.items() if f in live_set}
+    return {
+        f: list(p)
+        for f, p in _snapshot_state(table, version)["dvs"].items()
+    }
 
 
 def _rel_expr(table: str):
@@ -374,8 +475,8 @@ def _tagged_scan(reader, table: str, files: list[str], dvs: dict,
 
 def snapshot_stats(table: str, version: int | None = None) -> dict:
     """Per-file data-skipping stats for the live files of a version:
-    ``{relpath: {"n": rows, "c": {col: [min, max]}}}`` — the same
-    checkpoint-plus-tail replay as :func:`snapshot_files`, so resolving
+    ``{relpath: {"n": rows, "c": {col: [min, max]}}}`` — a field of
+    the checkpoint-plus-tail replay (:func:`_replay`), so resolving
     stats is O(tail commits), never O(table age). Files committed
     without stats simply have no entry (readers must scan them —
     conservative, never wrong). Column keys are LOGICAL names (records
@@ -392,25 +493,7 @@ def snapshot_stats(table: str, version: int | None = None) -> dict:
 def _snapshot_stats_raw(table: str, version: int | None = None) -> dict:
     """Stats exactly as recorded (PHYSICAL column keys) — the form
     checkpoints fold and commits carry."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    v = versions[-1] if version is None else version
-    start, stats = 0, {}
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                stats = dict(json.load(fh).get("stats", {}))
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        for f in rec["removed"]:
-            stats.pop(f, None)
-        stats.update(rec.get("stats", {}))
-    _, live = snapshot_files(table, v)
-    live_set = set(live)
-    return {f: s for f, s in stats.items() if f in live_set}
+    return dict(_snapshot_state(table, version)["stats"])
 
 
 def snapshot_pv(table: str, version: int | None = None) -> dict:
@@ -418,8 +501,8 @@ def snapshot_pv(table: str, version: int | None = None) -> dict:
     value-string | None}}`` (Delta's partitionValues). Files committed
     without values (rewrites, pre-partitioning history) have no entry
     — partition-pruned reads must scan them, conservative like
-    stat-less files. Checkpoint-plus-tail replay, O(tail). Column keys
-    are LOGICAL names (records store physical)."""
+    stat-less files. Checkpoint-plus-tail replay (:func:`_replay`).
+    Column keys are LOGICAL names (records store physical)."""
     return _pv_keys_to_logical(
         table, _snapshot_pv_raw(table, version), version
     )
@@ -427,64 +510,22 @@ def snapshot_pv(table: str, version: int | None = None) -> dict:
 
 def _snapshot_pv_raw(table: str, version: int | None = None) -> dict:
     """partitionValues exactly as recorded (PHYSICAL column keys)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    v = versions[-1] if version is None else version
-    start, pv = 0, {}
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                pv = dict(json.load(fh).get("pv", {}))
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        for f in rec["removed"]:
-            pv.pop(f, None)
-        pv.update(rec.get("pv", {}))
-    _, live = snapshot_files(table, v)
-    live_set = set(live)
-    return {f: s for f, s in pv.items() if f in live_set}
+    return dict(_snapshot_state(table, version)["pv"])
 
 
 def table_partition_by(table: str, version: int | None = None) -> list[str]:
     """The table's declared partition columns (empty = unpartitioned):
     the newest commit at-or-before ``version`` that recorded them,
-    checkpoint-folded like schema resolution — O(tail)."""
-    versions = log_versions(table)
-    if not versions:
-        return []
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "partition_by" in rec:
-            return list(rec["partition_by"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return list(json.load(fh).get("partition_by") or [])
-    return []
+    read from the checkpoint-plus-tail replay (:func:`_replay`)."""
+    return list(_meta_state(table, version)["partition_by"])
 
 
 def table_constraints(table: str, version: int | None = None) -> dict:
     """The table's CHECK constraints ({name: sql_predicate}): the
     newest commit at-or-before ``version`` that recorded the map
     (every constraint commit stores the FULL updated map, so folding
-    is newest-wins), checkpoint-backed like schema — O(tail)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "constraints" in rec:
-            return dict(rec["constraints"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return dict(json.load(fh).get("constraints") or {})
-    return {}
+    is newest-wins), read from the replay (:func:`_replay`)."""
+    return dict(_meta_state(table, version)["constraints"])
 
 
 def table_column_defaults(table: str, version: int | None = None) -> dict:
@@ -492,20 +533,9 @@ def table_column_defaults(table: str, version: int | None = None) -> dict:
     defaults — an append may OMIT a defaulted column and the writer
     fills it (Delta/SQL-standard DEFAULT semantics: applied when the
     write does not supply the column, never backfilled into existing
-    rows). Newest-wins full-map commits like constraints; O(tail)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "column_defaults" in rec:
-            return dict(rec["column_defaults"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return dict(json.load(fh).get("column_defaults") or {})
-    return {}
+    rows). Newest-wins full-map commits like constraints
+    (:func:`_replay`)."""
+    return dict(_meta_state(table, version)["column_defaults"])
 
 
 def tx_set_default(
@@ -574,21 +604,9 @@ def table_generated_columns(
     a supplied value that disagrees (unlike a DEFAULT, which only
     fills). The canonical use: partition_by on a generated date column
     derived from an event timestamp — pruning by day without trusting
-    writers to derive it consistently. Newest-wins full-map commits;
-    O(tail)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "generated_columns" in rec:
-            return dict(rec["generated_columns"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return dict(json.load(fh).get("generated_columns") or {})
-    return {}
+    writers to derive it consistently. Newest-wins full-map commits
+    (:func:`_replay`)."""
+    return dict(_meta_state(table, version)["generated_columns"])
 
 
 def tx_set_generated(
@@ -668,19 +686,7 @@ def table_cluster_by(table: str, version: int | None = None) -> list:
     by default and every append records their file stats
     automatically, so the table stays skippable on its access pattern
     without per-call arguments. Newest-wins; empty = undeclared."""
-    versions = log_versions(table)
-    if not versions:
-        return []
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "cluster_by" in rec:
-            return list(rec["cluster_by"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return list(json.load(fh).get("cluster_by") or [])
-    return []
+    return list(_meta_state(table, version)["cluster_by"])
 
 
 def tx_set_cluster_by(
@@ -720,21 +726,11 @@ def table_identity(table: str, version: int | None = None) -> dict:
     funnel). ALWAYS rejects a supplied value; BY DEFAULT accepts one
     (uniqueness then owed to the writer; :func:`tx_identity_sync`
     re-aligns the generator afterwards). Newest-wins full-map commits
-    like constraints; O(tail)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "identity_columns" in rec:
-            return {k: dict(v) for k, v in rec["identity_columns"].items()}
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                got = json.load(fh).get("identity_columns") or {}
-            return {k: dict(v) for k, v in got.items()}
-    return {}
+    like constraints (:func:`_replay`)."""
+    return {
+        k: dict(x)
+        for k, x in _meta_state(table, version)["identity_columns"].items()
+    }
 
 
 def identity_watermark(table: str, version: int | None = None) -> dict:
@@ -744,19 +740,7 @@ def identity_watermark(table: str, version: int | None = None) -> dict:
     values (derived from the staged files' parquet FOOTER stats — the
     write already paid for them) and by :func:`tx_identity_sync`.
     Never moves backward, including across RESTORE."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "identity_watermark" in rec:
-            return dict(rec["identity_watermark"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return dict(json.load(fh).get("identity_watermark") or {})
-    return {}
+    return dict(_meta_state(table, version)["identity_watermark"])
 
 
 def _ident_next_base(start: int, step: int, wm: int) -> int:
@@ -821,21 +805,7 @@ def copy_into_sources(table: str, version: int | None = None) -> set:
     newest-wins FULL set (each copy commit re-records the cumulative
     set, so resolution is one record read; checkpoints fold it like
     every other metadata plane)."""
-    versions = log_versions(table)
-    if not versions:
-        return set()
-    scan = versions if version is None else [
-        x for x in versions if x <= version
-    ]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "copy_into_sources" in rec:
-            return set(rec["copy_into_sources"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return set(json.load(fh).get("copy_into_sources") or [])
-    return set()
+    return set(_meta_state(table, version)["copy_into_sources"])
 
 
 def tx_copy_into(
@@ -1102,39 +1072,15 @@ def table_row_tracking(table: str, version: int | None = None) -> bool:
     into rewritten files so compaction/z-order/update/repartition
     never change a row's identity — and a ``_row_commit_version``
     (the commit that produced the row's current image). Newest-wins
-    boolean; O(tail)."""
-    versions = log_versions(table)
-    if not versions:
-        return False
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "row_tracking" in rec:
-            return bool(rec["row_tracking"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return bool(json.load(fh).get("row_tracking"))
-    return False
+    boolean (:func:`_replay`)."""
+    return _meta_state(table, version)["row_tracking"]
 
 
 def row_id_watermark(table: str, version: int | None = None) -> int:
     """The next unassigned base row id (fresh files' bases start
     here). Newest-wins scalar, advanced by every data-adding commit
     on a tracked table; monotone across RESTORE."""
-    versions = log_versions(table)
-    if not versions:
-        return 0
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "row_id_watermark" in rec:
-            return int(rec["row_id_watermark"])
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                return int(json.load(fh).get("row_id_watermark") or 0)
-    return 0
+    return _meta_state(table, version)["row_id_watermark"]
 
 
 def snapshot_base_row_ids(table: str, version: int | None = None) -> dict:
@@ -1142,26 +1088,11 @@ def snapshot_base_row_ids(table: str, version: int | None = None) -> dict:
     [base_row_id, commit_version]}`` — fresh rows in the file read as
     ``base + row_index``; a ``__row_id`` column MATERIALIZED in the
     file (rewrites carry it) takes precedence. Checkpoint-plus-tail
-    replay like stats/pv, O(tail)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    v = versions[-1] if version is None else version
-    start, base = 0, {}
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                base = dict(json.load(fh).get("base_row_id", {}))
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        for f in rec["removed"]:
-            base.pop(f, None)
-        base.update(rec.get("base_row_id", {}))
-    _, live = snapshot_files(table, v)
-    live_set = set(live)
-    return {f: list(b) for f, b in base.items() if f in live_set}
+    replay (:func:`_replay`)."""
+    return {
+        f: list(b)
+        for f, b in _snapshot_state(table, version)["base_row_id"].items()
+    }
 
 
 # physical-only columns a rewrite materializes into its files so row
@@ -1274,10 +1205,6 @@ def _apply_generated(df: DataFrame, table: str) -> tuple:
     return df, gmap
 
 
-_CM_CACHE: dict = {}
-_CM_MISS = object()
-
-
 def table_column_mapping(
     table: str, version: int | None = None
 ) -> tuple[dict, list] | None:
@@ -1301,51 +1228,15 @@ def table_column_mapping(
     column (Delta's column-id guarantee, by name instead of id).
 
     Newest-wins resolution like constraints (every mapping commit
-    stores the FULL map + full retired list), checkpoint-backed —
-    O(tail). Memoized per (table, resolved version): commits are
-    immutable and the resolution at a pinned version can never change,
-    so the cache needs no invalidation — a new commit is a new head
-    key. The returned (dict, list) is the shared cached object and is
-    READ-ONLY by contract (every internal mutator copies first). This
-    keeps the mapping probe O(1) on the hot stage/read paths, which
-    call it once per operation — a young unmapped table without a
-    checkpoint would otherwise re-walk its whole log each time."""
-    versions = log_versions(table)
-    if not versions:
+    stores the FULL map + full retired list), read from the memoized
+    checkpoint-plus-tail replay (:func:`_replay`), so the probe costs
+    one stat on the hot stage/read paths. The returned (dict, list)
+    are the shared memoized objects and are READ-ONLY by contract
+    (every internal mutator copies first)."""
+    s = _meta_state(table, version)
+    if s["column_mapping"] is None:
         return None
-    v = versions[-1] if version is None else version
-    # the commit file's stat rides the key (the _COMMIT_CACHE guard):
-    # a table rebuilt at the same path re-mints its commit files, so
-    # stale process-wide entries can never serve
-    try:
-        st = os.stat(_commit_path(table, v))
-    except FileNotFoundError:
-        st = None  # expired prefix version: resolution still works
-    key = (table, v, None if st is None else (st.st_mtime_ns, st.st_size))
-    hit = _CM_CACHE.get(key, _CM_MISS)
-    if hit is not _CM_MISS:
-        return hit
-    out = None
-    for c in reversed([x for x in versions if x <= v]):
-        rec = read_commit(table, c)
-        if "column_mapping" in rec:
-            out = dict(rec["column_mapping"]), list(
-                rec.get("retired_physical") or []
-            )
-            break
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                folded = json.load(fh)
-            if folded.get("column_mapping") is not None:
-                out = dict(folded["column_mapping"]), list(
-                    folded.get("retired_physical") or []
-                )
-            break
-    if len(_CM_CACHE) >= _COMMIT_CACHE_MAX:
-        _CM_CACHE.clear()  # bounded; cold restart is just re-resolving
-    _CM_CACHE[key] = out
-    return out
+    return s["column_mapping"], s["retired_physical"]
 
 
 def _l2p_map(table: str, version: int | None = None) -> dict:
@@ -1968,10 +1859,11 @@ def snapshot_bloom_map(table: str, version: int | None = None) -> dict:
     sidecar_relpath}}``. Commits carry ``{"bloom": {col: [{"sidecar":
     rel, "files": [rels...]}, ...]}}`` — the sidecar parquet holds the
     actual bit words; the log only names it (kilobytes per commit, the
-    same discipline as the file list). Checkpoint-plus-tail replay;
-    pointers for files a later commit removed are dropped (a rewrite
-    invalidates the old file's filter along with the file). Column
-    keys are LOGICAL names (records store physical)."""
+    same discipline as the file list). Checkpoint-plus-tail replay
+    (:func:`_replay`); pointers for files a later commit removed are
+    dropped (a rewrite invalidates the old file's filter along with
+    the file). Column keys are LOGICAL names (records store
+    physical)."""
     return _keys_to_logical(
         table, _snapshot_bloom_raw(table, version), version
     )
@@ -1979,36 +1871,9 @@ def snapshot_bloom_map(table: str, version: int | None = None) -> dict:
 
 def _snapshot_bloom_raw(table: str, version: int | None = None) -> dict:
     """Bloom pointers exactly as recorded (PHYSICAL column keys)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    v = versions[-1] if version is None else version
-    start, bmap = 0, {}
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                bmap = {
-                    col: dict(m)
-                    for col, m in json.load(fh).get("blooms", {}).items()
-                }
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        for f in rec["removed"]:
-            for m in bmap.values():
-                m.pop(f, None)
-        for col, entries in rec.get("bloom", {}).items():
-            m = bmap.setdefault(col, {})
-            for e in entries:
-                for f in e["files"]:
-                    m[f] = e["sidecar"]
-    _, live = snapshot_files(table, v)
-    live_set = set(live)
     return {
-        col: {f: s for f, s in m.items() if f in live_set}
-        for col, m in bmap.items()
-        if any(f in live_set for f in m)
+        c: dict(m)
+        for c, m in _snapshot_state(table, version)["blooms"].items()
     }
 
 
@@ -2018,7 +1883,7 @@ def snapshot_distinct_map(table: str, version: int | None = None) -> dict:
     as :func:`snapshot_bloom_map` (commits carry ``{"distinct": {col:
     [{"sidecar": rel, "files": [rels...]}]}}``; the sidecar parquet
     holds the bitmap rows, the log only names it). Checkpoint-plus-
-    tail replay; pointers for files a later commit removed are dropped
+    tail replay (:func:`_replay`); pointers for files a later commit removed are dropped
     (a rewrite invalidates the old file's bitmaps with the file).
     Column keys are LOGICAL names (records store physical)."""
     return _keys_to_logical(
@@ -2028,36 +1893,9 @@ def snapshot_distinct_map(table: str, version: int | None = None) -> dict:
 
 def _snapshot_distinct_raw(table: str, version: int | None = None) -> dict:
     """Distinct pointers exactly as recorded (PHYSICAL column keys)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    v = versions[-1] if version is None else version
-    start, dmap = 0, {}
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                dmap = {
-                    col: dict(m)
-                    for col, m in json.load(fh).get("distincts", {}).items()
-                }
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        for f in rec["removed"]:
-            for m in dmap.values():
-                m.pop(f, None)
-        for col, entries in rec.get("distinct", {}).items():
-            m = dmap.setdefault(col, {})
-            for e in entries:
-                for f in e["files"]:
-                    m[f] = e["sidecar"]
-    _, live = snapshot_files(table, v)
-    live_set = set(live)
     return {
-        col: {f: s for f, s in m.items() if f in live_set}
-        for col, m in dmap.items()
-        if any(f in live_set for f in m)
+        c: dict(m)
+        for c, m in _snapshot_state(table, version)["distincts"].items()
     }
 
 
@@ -3061,7 +2899,7 @@ def collect_file_stats(
 
 def table_schema(table: str) -> StructType | None:
     """The table's current schema: the newest commit that recorded
-    one (checkpoint-folded — O(tail), see :func:`_schema_at`)."""
+    one (see :func:`_schema_at`)."""
     return _schema_at(table, None)
 
 
@@ -3535,30 +3373,11 @@ def committed_txn_batches(table: str, app: str) -> set[int]:
 
 def snapshot_txns(table: str, version: int | None = None) -> dict:
     """Per-app high-water batch marks at a version: ``{app:
-    max_batch}`` — checkpoint-plus-tail replay like everything else.
+    max_batch}`` — checkpoint-plus-tail replay (:func:`_replay`).
     Spark's epoch ids are monotone per query and only the latest batch
     replays, so the MAX is the whole idempotence state (Delta keeps
     exactly this per ``appId``)."""
-    versions = log_versions(table)
-    if not versions:
-        return {}
-    v = versions[-1] if version is None else version
-    start, txns = 0, {}
-    for c in range(v, 0, -1):
-        if os.path.exists(_ckpt_path(table, c)):
-            with open(_ckpt_path(table, c)) as fh:
-                txns = {
-                    a: int(b)
-                    for a, b in json.load(fh).get("txns", {}).items()
-                }
-            start = c
-            break
-    for c in range(start + 1, v + 1):
-        rec = read_commit(table, c)
-        if rec.get("txn_app") is not None and "txn_batch" in rec:
-            a, b = rec["txn_app"], int(rec["txn_batch"])
-            txns[a] = max(txns.get(a, b), b)
-    return txns
+    return dict(_snapshot_state(table, version)["txns"])
 
 
 def txn_seen(table: str, app: str, batch_id: int) -> bool:
@@ -3912,24 +3731,14 @@ def _schema_at(table: str, version: int | None) -> StructType | None:
     recorded one; latest when version is None) — also what makes
     additive schema evolution serve correctly: old files lack the new
     columns and read as NULL under the explicit schema, with no
-    mergeSchema footer pass. The backward scan stops at the newest
-    checkpoint (which folds the schema like the file list), so
-    resolution is O(tail commits) even across a long run of
-    schema-less commits (bloom backfills, MOR deletes)."""
-    versions = log_versions(table)
-    scan = versions if version is None else [x for x in versions if x <= version]
-    for c in reversed(scan):
-        rec = read_commit(table, c)
-        if "schema" in rec:
-            return StructType.fromJson(json.loads(rec["schema"]))
-        ckpt = _ckpt_path(table, c)
-        if os.path.exists(ckpt):
-            with open(ckpt) as fh:
-                folded = json.load(fh).get("schema")
-            if folded:
-                return StructType.fromJson(json.loads(folded))
-            # pre-schema-folding checkpoint: keep scanning backward
-    return None
+    mergeSchema footer pass. Read from the checkpoint-plus-tail
+    replay (:func:`_replay`), which folds the schema like the file
+    list, so resolution is O(tail commits) even across a long run of
+    schema-less commits (bloom backfills, MOR deletes); a checkpoint
+    written before schemas were folded defers to the versions before
+    it."""
+    folded = _meta_state(table, version)["schema"]
+    return StructType.fromJson(json.loads(folded)) if folded else None
 
 
 def tx_read_skipping(
@@ -5909,11 +5718,10 @@ def tx_restore(
     cur_v = versions[-1]
     if to_version == cur_v:
         return cur_v
-    _, cur_files = snapshot_files(table, cur_v)
-    _, tgt_files = snapshot_files(table, to_version)
-    cur_dvs = snapshot_dvs(table, cur_v)
-    tgt_dvs = snapshot_dvs(table, to_version)
-    cur_set, tgt_set = set(cur_files), set(tgt_files)
+    # both snapshots' replayed states, in their recorded form
+    tgt, cur = _replay(table, to_version), _replay(table, cur_v)
+    cur_dvs, tgt_dvs = cur["dvs"], tgt["dvs"]
+    cur_set, tgt_set = set(cur["live"]), set(tgt["live"])
     added = sorted(tgt_set - cur_set)
     removed = sorted(cur_set - tgt_set)
     for f in sorted(cur_set & tgt_set):
@@ -5931,38 +5739,26 @@ def tx_restore(
     # re-record skipping metadata for every (re-)added file — the
     # remove-side of the replay drops it, the commit's own entries
     # put the target version's back
-    tgt_stats = _snapshot_stats_raw(table, to_version)
-    stats = {f: tgt_stats[f] for f in added if f in tgt_stats} or None
+    stats = {f: tgt["stats"][f] for f in added if f in tgt["stats"]} or None
     dv = {f: tgt_dvs[f] for f in added if tgt_dvs.get(f)} or None
-    tgt_pv = _snapshot_pv_raw(table, to_version)
-    pv = {f: tgt_pv[f] for f in added if f in tgt_pv} or None
+    pv = {f: tgt["pv"][f] for f in added if f in tgt["pv"]} or None
     # row tracking: re-added files get the TARGET's base row ids back
     # (the replay's remove side dropped them), so restored rows keep
     # the exact identities they had — a restore is not a rewrite
-    tgt_base = snapshot_base_row_ids(table, to_version)
+    tgt_base = tgt["base_row_id"]
     rt_base = {f: tgt_base[f] for f in added if f in tgt_base}
-    bloom: dict = {}
-    for c, m in _snapshot_bloom_raw(table, to_version).items():
-        by_sidecar: dict = {}
-        for f in added:
-            if f in m:
-                by_sidecar.setdefault(m[f], []).append(f)
-        if by_sidecar:
-            bloom[c] = [
-                {"sidecar": sc, "files": sorted(fs)}
-                for sc, fs in sorted(by_sidecar.items())
-            ]
-    distinct: dict = {}
-    for c, m in _snapshot_distinct_raw(table, to_version).items():
-        by_sidecar = {}
-        for f in added:
-            if f in m:
-                by_sidecar.setdefault(m[f], []).append(f)
-        if by_sidecar:
-            distinct[c] = [
-                {"sidecar": sc, "files": sorted(fs)}
-                for sc, fs in sorted(by_sidecar.items())
-            ]
+    sidecars: dict = {"blooms": {}, "distincts": {}}
+    for plane, out in sidecars.items():
+        for c, m in tgt[plane].items():
+            by_sidecar: dict = {}
+            for f in added:
+                if f in m:
+                    by_sidecar.setdefault(m[f], []).append(f)
+            if by_sidecar:
+                out[c] = [
+                    {"sidecar": sc, "files": sorted(fs)}
+                    for sc, fs in sorted(by_sidecar.items())
+                ]
     schema = _schema_at(table, to_version)
     # table-level metadata restores with the data (Delta's RESTORE
     # covers the full table state): the target's declared partitioning
@@ -5972,10 +5768,8 @@ def tx_restore(
     # only when they actually drifted, so an unrelated restore does not
     # spuriously conflict with interleaved data commits through the
     # constraints-vs-added conflict class.
-    tgt_pb = table_partition_by(table, to_version)
-    cur_pb = table_partition_by(table, cur_v)
-    tgt_cons = table_constraints(table, to_version)
-    cur_cons = table_constraints(table, cur_v)
+    tgt_pb, cur_pb = tgt["partition_by"], cur["partition_by"]
+    tgt_cons, cur_cons = tgt["constraints"], cur["constraints"]
     # restore also undoes later RENAME/DROP COLUMN: re-record the
     # target's mapping when it drifted (retired stays CUMULATIVE
     # across the restore — a physical name once used never re-mints)
@@ -5991,15 +5785,12 @@ def tx_restore(
         meta["retired_physical"] = retired
     # the remaining table-level metadata planes restore the same way:
     # newest-wins full-map commits, re-recorded only when drifted
-    for key, fn in (
-        ("column_defaults", table_column_defaults),
-        ("generated_columns", table_generated_columns),
-        ("cluster_by", table_cluster_by),
-        ("identity_columns", table_identity),
+    for key in (
+        "column_defaults", "generated_columns", "cluster_by",
+        "identity_columns",
     ):
-        tgt, cur = fn(table, to_version), fn(table, cur_v)
-        if tgt != cur:
-            meta[key] = tgt
+        if tgt[key] != cur[key]:
+            meta[key] = tgt[key]
     # the identity WATERMARK is the one plane that does NOT restore
     # backward: ranges handed out since the target version were
     # promised-unique forever (values may live in clones, exports,
@@ -6009,18 +5800,15 @@ def tx_restore(
     # metadata; the ROW-ID watermark is monotone like the identity
     # one (assigned ranges stay assigned — re-issuing them would let
     # two different rows ever share an id)
-    tgt_rt = table_row_tracking(table, to_version)
-    cur_rt = table_row_tracking(table, cur_v)
-    if tgt_rt != cur_rt:
-        meta["row_tracking"] = tgt_rt
+    if tgt["row_tracking"] != cur["row_tracking"]:
+        meta["row_tracking"] = tgt["row_tracking"]
     if rt_base:
         meta["base_row_id"] = rt_base
     # (no row_id_watermark re-record: newest-wins already resolves to
     # the current value, which is >= the target's by monotonicity)
-    tgt_wm = identity_watermark(table, to_version)
-    cur_wm = identity_watermark(table, cur_v)
+    tgt_wm, cur_wm = tgt["identity_watermark"], cur["identity_watermark"]
     if tgt_wm != cur_wm:
-        specs = {**table_identity(table, cur_v), **table_identity(table, to_version)}
+        specs = {**cur["identity_columns"], **tgt["identity_columns"]}
         merged = dict(tgt_wm)
         for c, w in cur_wm.items():
             if c not in merged:
@@ -6042,8 +5830,8 @@ def tx_restore(
         stats=stats,
         dv=dv,
         pv=pv,
-        bloom=bloom or None,
-        distinct=distinct or None,
+        bloom=sidecars["blooms"] or None,
+        distinct=sidecars["distincts"] or None,
         partition_by=tgt_pb if tgt_pb != cur_pb else None,
         constraints=tgt_cons if tgt_cons != cur_cons else None,
     )

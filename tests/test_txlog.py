@@ -165,23 +165,266 @@ def test_snapshot_isolation_and_time_travel(spark, table):
     assert {r.k for r in txlog.read_snapshot(spark, table).collect()} == {2}
 
 
-def test_checkpoint_replay_matches_full_replay(spark, table):
-    for i in range(13):  # crosses the every-10 checkpoint boundary
+# every public per-version reader of the log, by name: each answers
+# from the one checkpoint-plus-tail replay
+_READERS = (
+    "snapshot_files", "snapshot_dvs", "snapshot_stats", "snapshot_pv",
+    "snapshot_bloom_map", "snapshot_distinct_map", "snapshot_txns",
+    "snapshot_base_row_ids", "table_partition_by", "table_constraints",
+    "table_column_defaults", "table_generated_columns", "table_cluster_by",
+    "table_identity", "identity_watermark", "copy_into_sources",
+    "table_row_tracking", "row_id_watermark", "table_column_mapping",
+    "_schema_at",
+)
+
+
+def _answers(table, v):
+    return {name: getattr(txlog, name)(table, v) for name in _READERS}
+
+
+def _rich_history(spark, table, src):
+    """A history that crosses the v10 and v20 checkpoints and sets
+    every plane the log folds: partitioning, stats, Bloom and distinct
+    sidecars, a CHECK constraint, a default, a generated column,
+    clustering, identity, row tracking, streaming txn marks, a column
+    rename, merge-on-read deletion vectors, COPY INTO sources, and a
+    copy-on-write rewrite and RESTORE that remove files again."""
+    schema = "k long, v string, p string, g long, id long"
+
+    def rows(lo, hi):
+        return _df(spark, [
+            (i, f"s{i}", "a" if i % 2 else "b", i * 2, i)
+            for i in range(lo, hi)
+        ], schema)
+
+    txlog.tx_append(rows(0, 6), table, partition_by=["p"],
+                    stats_cols=["k"], bloom_cols=["k"],
+                    distinct_cols=["k"])                          # v1
+    txlog.tx_set_constraint(spark, table, "k_pos", "k >= 0")     # v2
+    txlog.tx_set_default(table, "v", "'dflt'")                   # v3
+    txlog.tx_set_generated(spark, table, "g", "k * 2")           # v4
+    txlog.tx_set_cluster_by(table, ["k"])                        # v5
+    txlog.tx_set_identity(spark, table, "id", start=100,
+                          always=False)                          # v6
+    txlog.tx_enable_row_tracking(table)                          # v7
+    txlog.tx_append(_df(spark, [(6, "a"), (7, "b")], "k long, p string"),
+                    table, meta={"txn_app": "ing", "txn_batch": 3})  # v8
+    txlog.tx_rename_column(spark, table, "v", "vv")              # v9
+    txlog.tx_delete_where_mor(spark, table, "k = 1")             # v10
+    spark.createDataFrame([(20, "a"), (21, "b")], "k long, p string") \
+        .coalesce(1).write.parquet(src)
+    txlog.tx_copy_into(spark, table, src)                        # v11
+    txlog.tx_bloom(spark, table, ["k"])                          # v12
+    txlog.tx_distinct(spark, table, ["k"])                       # v13
+    txlog.tx_delete_where(spark, table, "k = 2")                 # v14
+    txlog.tx_analyze(table, ["k", "id"])                         # v15
+    txlog.tx_append(_df(spark, [(30, "a")], "k long, p string"), table,
+                    meta={"txn_app": "ing", "txn_batch": 4})     # v16
+    txlog.tx_delete_where_mor(spark, table, "k = 3")             # v17
+    txlog.tx_drop_default(table, "vv")                           # v18
+    txlog.tx_restore(table, 9)                                   # v19
+    txlog.tx_append(_df(spark, [(40, "b")], "k long, p string"),
+                    table)                                       # v20
+    txlog.tx_delete_where_mor(spark, table, "k = 5")             # v21
+
+
+@pytest.fixture(scope="module")
+def rich_table(spark, tmp_path_factory):
+    """One :func:`_rich_history` table shared read-only by the module;
+    a test that changes it works on its own copy."""
+    base = tmp_path_factory.mktemp("rich")
+    table = str(base / "t")
+    _rich_history(spark, table, str(base / "landing"))
+    return table
+
+
+def test_checkpoint_replay_matches_full_replay(rich_table, tmp_path):
+    """Every public reader answers the same at every version whether
+    the replay seeds from a checkpoint or folds the whole log — and,
+    after tx_expire_versions truncates the prefix, the surviving
+    versions still answer as before."""
+    import shutil
+
+    table = str(tmp_path / "t")
+    shutil.copytree(rich_table, table)
+    versions = txlog.log_versions(table)
+    assert versions == list(range(1, 22))
+    for c in (10, 20):
+        assert os.path.exists(txlog._ckpt_path(table, c))
+    bare = str(tmp_path / "bare")
+    shutil.copytree(table, bare)
+    for f in os.listdir(os.path.join(bare, txlog.TXLOG)):
+        if f.endswith(".checkpoint.json"):
+            os.remove(os.path.join(bare, txlog.TXLOG, f))
+    want = {}
+    for v in versions:
+        want[v] = _answers(table, v)
+        assert want[v] == _answers(bare, v), v
+    # the history really exercised every plane
+    for name in _READERS:
+        assert any(want[v][name] for v in versions), name
+    assert want[21]["table_column_mapping"][0]["vv"] == "v"
+    assert txlog.snapshot_dvs(table)
+    # expire below a non-checkpoint version: a checkpoint lands at the
+    # horizon and every surviving version answers exactly as before
+    assert txlog.tx_expire_versions(table, 15) == list(range(1, 15))
+    assert txlog.log_versions(table) == list(range(15, 22))
+    for v in range(15, 22):
+        assert _answers(table, v) == want[v], v
+    # versions outside the log keep their answers: newest-wins planes
+    # read as their defaults below the horizon and as the head above
+    # it; per-file planes raise
+    assert txlog.table_constraints(table, 3) == {}
+    assert txlog.table_column_mapping(table, 3) is None
+    assert txlog._schema_at(table, 3) is None
+    assert txlog.table_identity(table, 99) == want[21]["table_identity"]
+    with pytest.raises(ValueError):
+        txlog.snapshot_files(table, 3)
+    for fold in (txlog.snapshot_stats, txlog.snapshot_dvs,
+                 txlog.snapshot_txns, txlog.snapshot_base_row_ids):
+        with pytest.raises(FileNotFoundError):
+            fold(table, 3)
+        with pytest.raises(FileNotFoundError):
+            fold(table, 99)
+
+
+def test_checkpoint_is_fsynced_before_publish(spark, table, monkeypatch):
+    """The checkpoint's tmp file is flushed to disk before os.replace
+    publishes it, so a crash can never leave an empty checkpoint that
+    every reader of the table would fail to parse."""
+    for i in range(3):
         txlog.tx_append(_df(spark, [(i, "x")]), table)
-    ckpt = os.path.join(table, txlog.TXLOG, f"{10:012d}.checkpoint.json")
-    assert os.path.exists(ckpt)
-    with open(ckpt) as fh:
-        live_at_10 = set(json.load(fh)["live"])
-    # brute-force replay from scratch must agree with checkpointed path
-    live = set()
-    for v in range(1, 11):
-        rec = txlog.read_commit(table, v)
-        live -= set(rec["removed"])
-        live |= set(rec["added"])
-    assert live == live_at_10
-    _, files13 = txlog.snapshot_files(table)
-    assert len(txlog.read_snapshot(spark, table).collect()) == 13
-    assert len(files13) == 13
+    calls = []
+    fsync, replace = os.fsync, os.replace
+    monkeypatch.setattr(
+        os, "fsync", lambda fd: (calls.append("fsync"), fsync(fd))[1]
+    )
+    monkeypatch.setattr(
+        os, "replace",
+        lambda a, b: (calls.append(("replace", b)), replace(a, b))[1],
+    )
+    txlog._write_checkpoint(table, 3)
+    assert calls == ["fsync", ("replace", txlog._ckpt_path(table, 3))]
+    with open(txlog._ckpt_path(table, 3)) as fh:
+        assert len(json.load(fh)["live"]) == 3
+
+
+def test_reader_answers_are_private_copies(rich_table):
+    """Readers answer from one memoized state; mutating what one call
+    returned never changes the next call's answer."""
+    table = rich_table
+    readers = (
+        "table_column_defaults", "table_constraints", "table_identity",
+        "table_cluster_by", "snapshot_stats", "snapshot_dvs",
+        "copy_into_sources",
+    )
+    for v in (17, 21):
+        before = {n: getattr(txlog, n)(table, v) for n in readers}
+        assert all(before.values())
+        got = {n: getattr(txlog, n)(table, v) for n in readers}
+        got["table_column_defaults"]["k"] = "0"
+        got["table_constraints"].clear()
+        for spec in got["table_identity"].values():
+            spec["step"] = 7
+        got["table_identity"]["k"] = {}
+        got["table_cluster_by"].append("v")
+        got["snapshot_stats"].clear()
+        for pos in got["snapshot_dvs"].values():
+            pos.append(10**6)
+        got["snapshot_dvs"]["x"] = [0]
+        got["copy_into_sources"].add("/elsewhere")
+        assert {n: getattr(txlog, n)(table, v) for n in readers} == before
+
+
+def test_replay_memo_under_concurrent_readers(rich_table, monkeypatch):
+    """Readers on many threads share the replay memo while it keeps
+    filling and clearing: every answer still equals the one a single
+    reader gets."""
+    import sys
+
+    versions = txlog.log_versions(rich_table)
+    want = {v: _answers(rich_table, v) for v in versions}
+    monkeypatch.setattr(txlog, "_REPLAY_CACHE_MAX", 3)
+    txlog._REPLAY_CACHE.clear()
+    wrong = []
+
+    def reader(seed):
+        for i in range(20):
+            v = versions[(seed * 7 + i) % len(versions)]
+            if _answers(rich_table, v) != want[v]:
+                wrong.append(v)
+
+    threads = [threading.Thread(target=reader, args=(t,)) for t in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert wrong == []
+
+
+def test_schema_falls_back_past_pre_folding_checkpoint(spark, table):
+    """A checkpoint written before schemas were folded into
+    checkpoints carries no ``schema`` key: schema resolution keeps
+    looking at the versions before it."""
+    txlog.tx_append(_df(spark, [(1, "a")]), table)
+    for _ in range(txlog.CHECKPOINT_EVERY + 1):
+        txlog.tx_bloom(spark, table, ["k"])  # schema-less commits
+    ck = txlog._ckpt_path(table, txlog.CHECKPOINT_EVERY)
+    with open(ck) as fh:
+        folded = json.load(fh)
+    del folded["schema"]
+    # a copy of the table whose checkpoint predates schema folding: a
+    # fresh path, so no memoized state of the original can answer
+    legacy = table + "_legacy"
+    import shutil
+
+    shutil.copytree(table, legacy)
+    with open(txlog._ckpt_path(legacy, txlog.CHECKPOINT_EVERY), "w") as fh:
+        json.dump(folded, fh)
+    assert [f.name for f in txlog.table_schema(legacy).fields] == ["k", "v"]
+    for v in (txlog.CHECKPOINT_EVERY, txlog.log_versions(legacy)[-1]):
+        assert txlog._schema_at(legacy, v) == txlog._schema_at(table, v)
+        got = txlog.read_snapshot(spark, legacy, version=v).collect()
+        assert [(r.k, r.v) for r in got] == [(1, "a")]
+
+
+def test_resolved_reads_parse_no_checkpoint(spark, table, monkeypatch):
+    """Once a version's state is resolved, a point lookup and a
+    skipping read on it open no checkpoint file: every reader they
+    call answers from the memoized replay."""
+    import builtins
+
+    for lo in range(0, 12 * 100, 100):
+        txlog.tx_append(_ranged(spark, lo, lo + 100, parts=1), table,
+                        stats_cols=["k"], bloom_cols=["k"])
+    assert os.path.exists(txlog._ckpt_path(table, txlog.CHECKPOINT_EVERY))
+
+    def reads():
+        df, _, _ = txlog.tx_point_lookup(spark, table, "k", 501)
+        df2, _, _ = txlog.tx_read_skipping(spark, table, "k", 300, 350)
+        return df, df2
+
+    reads()  # resolves the head state
+    opened = []
+    real_open = builtins.open
+
+    def counting(path, *args, **kwargs):
+        if str(path).endswith(".checkpoint.json"):
+            opened.append(path)
+        return real_open(path, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", counting)
+    df, df2 = reads()
+    assert opened == []
+    monkeypatch.undo()
+    assert [(r.k, r.v) for r in df.collect()] == [(501, 1002)]
+    assert df2.count() == 51
 
 
 def test_vacuum_reclaims_only_orphans(spark, table):
