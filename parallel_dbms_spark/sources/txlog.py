@@ -21,12 +21,14 @@ POSIX/HDFS-style filesystem):
   since its snapshot and re-validates:
 
   * ``append`` commutes with everything (its files are fresh UUIDs);
-  * two commits CONFLICT iff their ``removed`` sets overlap — both
+  * two commits CONFLICT when their ``removed`` sets overlap — both
     rewrote/dropped the same immutable file (delete-vs-delete,
-    delete-vs-compact, compact-vs-compact on the same region). The
-    loser raises :class:`TxConflict`; row-level operations
-    (:func:`tx_delete_where`) retry from a fresh snapshot, re-running
-    their rewrite against the current file set.
+    delete-vs-compact, compact-vs-compact on the same region) — or
+    on the other classes :class:`TxConflict` lists (deletion vectors,
+    read sets, newest-wins metadata planes, reservations). The loser
+    raises :class:`TxConflict`; every writer retries through one loop
+    (:func:`_retry`) from a fresh snapshot, re-running its plan
+    against the current file set and metadata.
 
   This is exactly serializable for the supported actions because data
   files are immutable: an interleaved commit that touched none of the
@@ -53,6 +55,7 @@ extends the lake surface (sources/lake.py) that SURVEY §2.3 grades.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import uuid
@@ -68,8 +71,35 @@ CHECKPOINT_EVERY = 10
 
 
 class TxConflict(Exception):
-    """Concurrent commits rewrote the same file(s); retry from a fresh
-    snapshot."""
+    """An interleaved commit invalidated this one's plan — it removed
+    the same files, added deletion vectors to (or removed) files this
+    commit rewrites or vectors, added rows into this commit's read set
+    (predicate scan, constraint or watermark validation, row-tracking
+    backfill), recorded a different value of a newest-wins metadata
+    plane this commit also records, or made a reservation (identity
+    ids, COPY INTO sources) from the same read. Retry from a fresh
+    snapshot (:func:`_retry`)."""
+
+
+# Straight lost races after which a writer gives up (:func:`_retry`),
+# and versions :func:`commit` probes past lost CAS races per call.
+_MAX_RETRIES = 16
+_MAX_CLAIMS = 64
+
+
+def _retry(table: str, op: str, attempt):
+    """The one optimistic-retry loop of every txlog writer: call
+    ``attempt()`` — one whole pass of snapshot read, planning, staging
+    and :func:`commit` — until it returns, re-running it from a fresh
+    snapshot on :class:`TxConflict`; after ``_MAX_RETRIES`` straight
+    conflicts raise one naming ``op``. An ``attempt`` never calls
+    another retrying writer (nested loops would square the bound)."""
+    for _ in range(_MAX_RETRIES):
+        try:
+            return attempt()
+        except TxConflict:
+            continue
+    raise TxConflict(f"{op} on {table} lost {_MAX_RETRIES} straight races")
 
 
 def _schema_eq(a_json: str, b_json: str) -> bool:
@@ -322,6 +352,22 @@ def snapshot_files(table: str, version: int | None = None) -> tuple[int, list[st
     return v, list(_replay(table, v)["live"])
 
 
+def _publish_json(path: str, payload: dict, publish) -> None:
+    """Write ``payload`` whole to a private tmp file, fsync it, then
+    ``publish(tmp, path)`` atomically. The tmp file never outlives the
+    call, whether the write, the fsync or the publish raised."""
+    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(payload, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        publish(tmp, path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)  # already gone after os.replace
+
+
 def _try_create(path: str, payload: dict) -> bool:
     """Atomic put-if-absent of one commit file.
 
@@ -332,18 +378,11 @@ def _try_create(path: str, payload: dict) -> bool:
     private tmp file, fsync it, then PUBLISH via ``os.link`` — hard
     links are atomic and fail with EEXIST when another writer already
     claimed the version (the put-if-absent primitive)."""
-    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
     try:
-        os.link(tmp, path)
+        _publish_json(path, payload, os.link)
         return True
     except FileExistsError:
         return False
-    finally:
-        os.unlink(tmp)
 
 
 def _write_checkpoint(table: str, v: int) -> None:
@@ -354,12 +393,10 @@ def _write_checkpoint(table: str, v: int) -> None:
     ``os.replace``: after a crash the checkpoint is absent or whole,
     never an empty file every reader of the table would fail to
     parse."""
-    tmp = _ckpt_path(table, v) + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"version": v, **_replay(table, v)}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, _ckpt_path(table, v))
+    _publish_json(
+        _ckpt_path(table, v), {"version": v, **_replay(table, v)},
+        os.replace,
+    )
 
 
 def snapshot_dvs(table: str, version: int | None = None) -> dict:
@@ -539,7 +576,7 @@ def table_column_defaults(table: str, version: int | None = None) -> dict:
 
 
 def tx_set_default(
-    table: str, col: str, sql_expr: str, max_retries: int = 8
+    table: str, col: str, sql_expr: str
 ) -> int:
     """ALTER TABLE ... SET DEFAULT: a metadata-only commit recording
     the column's write-time default expression (any deterministic SQL
@@ -561,38 +598,32 @@ def tx_set_default(
             f"column {col!r} is an IDENTITY column; identity is its "
             "own generator (tx_drop_identity first)"
         )
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         d = table_column_defaults(table)
         d[col] = sql_expr
-        try:
-            return commit(
-                table, "set_default", [], [], parent,
-                meta={"column_defaults": d},
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"set_default on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "set_default", [], [], parent,
+            meta={"column_defaults": d},
+        )
+
+    return _retry(table, "set_default", attempt)
 
 
-def tx_drop_default(table: str, col: str, max_retries: int = 8) -> int:
+def tx_drop_default(table: str, col: str) -> int:
     """ALTER TABLE ... DROP DEFAULT (metadata-only)."""
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         d = table_column_defaults(table)
         d.pop(col, None)
-        try:
-            return commit(
-                table, "drop_default", [], [], parent,
-                meta={"column_defaults": d},
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"drop_default on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "drop_default", [], [], parent,
+            meta={"column_defaults": d},
+        )
+
+    return _retry(table, "drop_default", attempt)
 
 
 def table_generated_columns(
@@ -611,7 +642,6 @@ def table_generated_columns(
 
 def tx_set_generated(
     spark: SparkSession, table: str, col: str, sql_expr: str,
-    max_retries: int = 8,
 ) -> int:
     """ALTER TABLE: declare ``col`` GENERATED ALWAYS AS (sql_expr) —
     validated against the CURRENT snapshot first (existing rows must
@@ -636,7 +666,8 @@ def tx_set_generated(
             f"column {col!r} is an IDENTITY column; identity is its "
             "own generator (tx_drop_identity first)"
         )
-    for _ in range(max_retries):
+
+    def attempt():  # data landing mid-validation re-runs it
         parent = (log_versions(table) or [0])[-1]
         g = table_generated_columns(table)
         g[col] = sql_expr
@@ -650,34 +681,27 @@ def tx_set_generated(
                     f"cannot declare {col!r} generated: {n_bad} existing "
                     f"row(s) violate {sql_expr!r}"
                 )
-        try:
-            return commit(
-                table, "set_generated", [], [], parent,
-                meta={"generated_columns": g},
-            )
-        except TxConflict:
-            continue  # data landed mid-validation; re-validate
-    raise TxConflict(
-        f"set_generated on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "set_generated", [], [], parent,
+            meta={"generated_columns": g},
+        )
+
+    return _retry(table, "set_generated", attempt)
 
 
-def tx_drop_generated(table: str, col: str, max_retries: int = 8) -> int:
+def tx_drop_generated(table: str, col: str) -> int:
     """Drop a column's GENERATED declaration (metadata-only)."""
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         g = table_generated_columns(table)
         g.pop(col, None)
-        try:
-            return commit(
-                table, "drop_generated", [], [], parent,
-                meta={"generated_columns": g},
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"drop_generated on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "drop_generated", [], [], parent,
+            meta={"generated_columns": g},
+        )
+
+    return _retry(table, "drop_generated", attempt)
 
 
 def table_cluster_by(table: str, version: int | None = None) -> list:
@@ -689,9 +713,7 @@ def table_cluster_by(table: str, version: int | None = None) -> list:
     return list(_meta_state(table, version)["cluster_by"])
 
 
-def tx_set_cluster_by(
-    table: str, cols: list, max_retries: int = 8
-) -> int:
+def tx_set_cluster_by(table: str, cols: list) -> int:
     """ALTER TABLE ... CLUSTER BY: declare the clustering columns as
     table metadata (an explicit [] undeclares). Declaration only —
     existing files re-lay on the next tx_optimize/tx_compact, which
@@ -702,18 +724,15 @@ def tx_set_cluster_by(
     missing = [c for c in cols if c not in schema.fieldNames()]
     if missing:
         raise ValueError(f"cluster columns {missing} not in {table}")
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
-        try:
-            return commit(
-                table, "set_cluster_by", [], [], parent,
-                meta={"cluster_by": list(cols)},
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"set_cluster_by on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "set_cluster_by", [], [], parent,
+            meta={"cluster_by": list(cols)},
+        )
+
+    return _retry(table, "set_cluster_by", attempt)
 
 
 def table_identity(table: str, version: int | None = None) -> dict:
@@ -815,7 +834,6 @@ def tx_copy_into(
     file_format: str = "parquet",
     pattern: str | None = None,
     force: bool = False,
-    max_retries: int = 8,
     **append_kwargs,
 ) -> tuple[int, int]:
     """Databricks' ``COPY INTO``: idempotent bulk file ingestion. Every
@@ -858,7 +876,8 @@ def tx_copy_into(
         raise ValueError(
             f"unsupported COPY INTO kwargs {sorted(append_kwargs)}"
         )
-    for _ in range(max_retries):
+
+    def attempt():  # a racing COPY landed: re-read its set, re-plan
         head = (log_versions(table) or [0])[-1]
         loaded = copy_into_sources(table)
         found = sorted(
@@ -910,35 +929,30 @@ def tx_copy_into(
             meta.update(
                 _ident_meta(table, idents, ident_assigned, stats, ident_wm)
             )
-        try:
-            # parent pinned at PLAN time (when the loaded set was
-            # read): a racing COPY INTO claiming a later version is
-            # then an interleaved commit the conflict loop validates —
-            # copy-vs-copy fires, this loser re-reads the winner's set
-            # and re-plans, so no file ever double-loads. (tx_append
-            # re-reads the parent per attempt, which would make racing
-            # copies invisible to each other — exactly the lost-update
-            # this pinning prevents.)
-            v = commit(
-                table, "copy_into", added, [], head,
-                schema_json=(
-                    schema.json() if schema is not None
-                    else df.schema.json()
-                ),
-                stats=stats, pv=pv or None, meta=meta,
-            )
-            return v, len(todo)
-        except TxConflict:
-            continue  # a racing COPY landed: re-read its set, re-plan
-    raise TxConflict(
-        f"copy_into on {table} lost {max_retries} straight races"
-    )
+        # parent pinned at PLAN time (when the loaded set was
+        # read): a racing COPY INTO claiming a later version is
+        # then an interleaved commit the conflict loop validates —
+        # copy-vs-copy fires, this loser re-reads the winner's set
+        # and re-plans, so no file ever double-loads. (tx_append
+        # re-reads the parent per attempt, which would make racing
+        # copies invisible to each other — exactly the lost-update
+        # this pinning prevents.)
+        v = commit(
+            table, "copy_into", added, [], head,
+            schema_json=(
+                schema.json() if schema is not None
+                else df.schema.json()
+            ),
+            stats=stats, pv=pv or None, meta=meta,
+        )
+        return v, len(todo)
+
+    return _retry(table, "copy_into", attempt)
 
 
 def tx_set_identity(
     spark: SparkSession, table: str, col: str,
     start: int = 1, step: int = 1, always: bool = True,
-    max_retries: int = 8,
 ) -> int:
     """ALTER TABLE: declare ``col`` GENERATED {ALWAYS | BY DEFAULT} AS
     IDENTITY (START WITH ``start`` INCREMENT BY ``step``). Metadata
@@ -972,7 +986,8 @@ def tx_set_identity(
             f"column {col!r} is GENERATED; drop that first — identity "
             "is its own generator"
         )
-    for _ in range(max_retries):
+
+    def attempt():  # data landed mid-scan: re-read the max
         parent = (log_versions(table) or [0])[-1]
         ids = table_identity(table)
         wm_map = identity_watermark(table)
@@ -988,43 +1003,35 @@ def tx_set_identity(
             "start": int(start), "step": int(step), "always": bool(always)
         }
         wm_map[col] = int(wm)
-        try:
-            return commit(
-                table, "set_identity", [], [], parent,
-                meta={"identity_columns": ids, "identity_watermark": wm_map},
-            )
-        except TxConflict:
-            continue  # data landed mid-scan: re-read the max
-    raise TxConflict(
-        f"set_identity on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "set_identity", [], [], parent,
+            meta={"identity_columns": ids, "identity_watermark": wm_map},
+        )
+
+    return _retry(table, "set_identity", attempt)
 
 
-def tx_drop_identity(table: str, col: str, max_retries: int = 8) -> int:
+def tx_drop_identity(table: str, col: str) -> int:
     """Drop a column's IDENTITY declaration (metadata-only). The
     column keeps its values and becomes an ordinary BIGINT; the
     watermark entry drops with it (a later re-declaration re-scans)."""
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         ids = table_identity(table)
         ids.pop(col, None)
         wm = identity_watermark(table)
         wm.pop(col, None)
-        try:
-            return commit(
-                table, "drop_identity", [], [], parent,
-                meta={"identity_columns": ids, "identity_watermark": wm},
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"drop_identity on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "drop_identity", [], [], parent,
+            meta={"identity_columns": ids, "identity_watermark": wm},
+        )
+
+    return _retry(table, "drop_identity", attempt)
 
 
 def tx_identity_sync(
     spark: SparkSession, table: str, col: str | None = None,
-    max_retries: int = 8,
 ) -> int:
     """ALTER TABLE ... SYNC IDENTITY: re-align the watermark with the
     column's actual extreme — after BY DEFAULT writers supplied their
@@ -1033,7 +1040,7 @@ def tx_identity_sync(
     moves it backward, so already-promised ranges stay promised)."""
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
+    def attempt():  # a generating append raced the scan: re-read
         parent = (log_versions(table) or [0])[-1]
         ids = table_identity(table)
         if col is not None and col not in ids:
@@ -1053,16 +1060,12 @@ def tx_identity_sync(
                 step = ids[c]["step"]
                 old = wm.get(c, ids[c]["start"] - step)
                 wm[c] = max(old, int(m)) if step > 0 else min(old, int(m))
-        try:
-            return commit(
-                table, "identity_sync", [], [], parent,
-                meta={"identity_watermark": wm},
-            )
-        except TxConflict:
-            continue  # a generating append raced the scan: re-read
-    raise TxConflict(
-        f"identity_sync on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "identity_sync", [], [], parent,
+            meta={"identity_watermark": wm},
+        )
+
+    return _retry(table, "identity_sync", attempt)
 
 
 def table_row_tracking(table: str, version: int | None = None) -> bool:
@@ -1101,7 +1104,7 @@ _ROW_ID_COL = "__row_id"
 _ROW_COMMIT_COL = "__row_commit"
 
 
-def tx_enable_row_tracking(table: str, max_retries: int = 8) -> int:
+def tx_enable_row_tracking(table: str) -> int:
     """ALTER TABLE: enable ROW TRACKING. One metadata commit: every
     LIVE file gets its ``base_row_id`` backfilled from the parquet
     footer's row count (one footer read per file, no data scan), and
@@ -1110,7 +1113,7 @@ def tx_enable_row_tracking(table: str, max_retries: int = 8) -> int:
     from this commit on; time travel BEFORE it has no row ids."""
     import pyarrow.parquet as pq
 
-    for _ in range(max_retries):
+    def attempt():  # files changed mid-backfill: recompute
         parent = (log_versions(table) or [0])[-1]
         if table_row_tracking(table):
             return parent  # idempotent
@@ -1137,20 +1140,16 @@ def tx_enable_row_tracking(table: str, max_retries: int = 8) -> int:
             n = pq.ParquetFile(os.path.join(table, f)).metadata.num_rows
             base[f] = [wm, added_at.get(f, parent)]
             wm += n
-        try:
-            return commit(
-                table, "enable_row_tracking", [], [], parent,
-                meta={
-                    "row_tracking": True,
-                    "base_row_id": base,
-                    "row_id_watermark": wm,
-                },
-            )
-        except TxConflict:
-            continue  # files changed mid-backfill: recompute
-    raise TxConflict(
-        f"enable_row_tracking on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "enable_row_tracking", [], [], parent,
+            meta={
+                "row_tracking": True,
+                "base_row_id": base,
+                "row_id_watermark": wm,
+            },
+        )
+
+    return _retry(table, "enable_row_tracking", attempt)
 
 
 def _apply_generated(df: DataFrame, table: str) -> tuple:
@@ -1464,7 +1463,7 @@ def _constraint_refs(sql: str, col: str) -> bool:
 
 
 def tx_add_column(
-    table: str, col: str, type_ddl: str, max_retries: int = 8
+    table: str, col: str, type_ddl: str
 ) -> int:
     """ALTER TABLE ... ADD COLUMN: additive schema evolution as ONE
     metadata-only commit — no file is touched; files written before
@@ -1476,7 +1475,8 @@ def tx_add_column(
     from pyspark.sql.types import _parse_datatype_string
 
     dt = _parse_datatype_string(type_ddl)
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         schema = table_schema(table)
         if schema is None:
@@ -1496,20 +1496,16 @@ def tx_add_column(
                 phys = f"{col}_{uuid.uuid4().hex[:8]}"
             mapping[col] = phys
             meta = {"column_mapping": mapping, "retired_physical": retired}
-        try:
-            return commit(
-                table, "add_column", [], [], parent,
-                schema_json=new_schema.json(), meta=meta or None,
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"add_column on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "add_column", [], [], parent,
+            schema_json=new_schema.json(), meta=meta or None,
+        )
+
+    return _retry(table, "add_column", attempt)
 
 
 def tx_alter_column_type(
-    table: str, col: str, type_ddl: str, max_retries: int = 8
+    table: str, col: str, type_ddl: str
 ) -> int:
     """ALTER TABLE ... ALTER COLUMN ... TYPE: explicit type WIDENING
     as a metadata-only commit — only the safe ladders merge_schema
@@ -1519,7 +1515,8 @@ def tx_alter_column_type(
     from pyspark.sql.types import _parse_datatype_string
 
     want = _parse_datatype_string(type_ddl)
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         schema = table_schema(table)
         if schema is None:
@@ -1542,21 +1539,16 @@ def tx_alter_column_type(
                         f.nullable, f.metadata)
             for f in schema.fields
         ])
-        try:
-            return commit(
-                table, "alter_column_type", [], [], parent,
-                schema_json=new_schema.json(),
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"alter_column_type on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "alter_column_type", [], [], parent,
+            schema_json=new_schema.json(),
+        )
+
+    return _retry(table, "alter_column_type", attempt)
 
 
 def tx_rename_column(
     spark: SparkSession, table: str, old: str, new: str,
-    max_retries: int = 8,
 ) -> int:
     """ALTER TABLE RENAME COLUMN without rewriting a byte: one
     metadata commit re-points the logical name at the column's stable
@@ -1567,7 +1559,8 @@ def tx_rename_column(
     rewrite to the new name, so enforcement continues uninterrupted.
     Reads at old versions (time travel) serve the old name; reads at
     or after this commit serve the new one."""
-    for _ in range(max_retries):
+
+    def attempt():  # interleaved commit: re-read schema and retry
         parent = (log_versions(table) or [0])[-1]
         schema = table_schema(table)
         if schema is None:
@@ -1637,23 +1630,19 @@ def tx_rename_column(
             meta["identity_watermark"] = {
                 (new if c == old else c): w for c, w in wm.items()
             }
-        try:
-            return commit(
-                table, "rename_column", [], [], parent,
-                schema_json=new_schema.json(),
-                meta=meta,
-                constraints=new_cons if new_cons != cons else None,
-                partition_by=new_pb if new_pb != pb else None,
-            )
-        except TxConflict:
-            continue  # interleaved commit: re-read schema and retry
-    raise TxConflict(
-        f"rename_column on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "rename_column", [], [], parent,
+            schema_json=new_schema.json(),
+            meta=meta,
+            constraints=new_cons if new_cons != cons else None,
+            partition_by=new_pb if new_pb != pb else None,
+        )
+
+    return _retry(table, "rename_column", attempt)
 
 
 def tx_drop_column(
-    spark: SparkSession, table: str, col: str, max_retries: int = 8,
+    spark: SparkSession, table: str, col: str,
 ) -> int:
     """ALTER TABLE DROP COLUMN without rewriting a byte: one metadata
     commit removes the logical column from the schema and the mapping
@@ -1664,7 +1653,8 @@ def tx_drop_column(
     resurrect. Declared partition columns cannot drop (repartition
     first), and a CHECK constraint referencing the column blocks the
     drop (drop the constraint first) — both Delta's rules."""
-    for _ in range(max_retries):
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         schema = table_schema(table)
         if schema is None:
@@ -1742,17 +1732,13 @@ def tx_drop_column(
                 c: w for c, w in identity_watermark(table).items()
                 if c != col
             }
-        try:
-            return commit(
-                table, "drop_column", [], [], parent,
-                schema_json=new_schema.json(),
-                meta=meta,
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"drop_column on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "drop_column", [], [], parent,
+            schema_json=new_schema.json(),
+            meta=meta,
+        )
+
+    return _retry(table, "drop_column", attempt)
 
 
 def _enforce_constraints(df: DataFrame, table: str) -> dict:
@@ -1797,7 +1783,6 @@ def _enforce_constraints(df: DataFrame, table: str) -> dict:
 
 def tx_set_constraint(
     spark: SparkSession, table: str, name: str, predicate_sql: str,
-    max_retries: int = 8,
 ) -> int:
     """ADD/replace a CHECK constraint (Delta's ALTER TABLE ADD
     CONSTRAINT): validated against the CURRENT snapshot first — a
@@ -1809,7 +1794,7 @@ def tx_set_constraint(
     lands unvalidated."""
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
+    def attempt():  # data landed mid-validation; re-validate
         parent = (log_versions(table) or [0])[-1]
         cons = table_constraints(table)
         cons[name] = predicate_sql
@@ -1823,35 +1808,28 @@ def tx_set_constraint(
                     f"cannot add constraint {name!r}: {n_bad} existing "
                     f"row(s) violate {predicate_sql!r}"
                 )
-        try:
-            return commit(
-                table, "set_constraint", [], [], parent,
-                constraints=cons,
-            )
-        except TxConflict:
-            continue  # data landed mid-validation; re-validate
-    raise TxConflict(
-        f"set_constraint on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "set_constraint", [], [], parent,
+            constraints=cons,
+        )
+
+    return _retry(table, "set_constraint", attempt)
 
 
-def tx_drop_constraint(table: str, name: str, max_retries: int = 8) -> int:
+def tx_drop_constraint(table: str, name: str) -> int:
     """DROP CONSTRAINT: metadata-only commit with the name removed
-    from the map (relaxing needs no data validation; the retry loop
-    just re-claims a version past interleaved writes)."""
-    for _ in range(max_retries):
+    from the map (relaxing needs no data validation; a racing
+    constraint commit re-plans it through :func:`_retry`)."""
+
+    def attempt():
         parent = (log_versions(table) or [0])[-1]
         cons = table_constraints(table)
         cons.pop(name, None)
-        try:
-            return commit(
-                table, "drop_constraint", [], [], parent, constraints=cons
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"drop_constraint on {table} lost {max_retries} straight races"
-    )
+        return commit(
+            table, "drop_constraint", [], [], parent, constraints=cons
+        )
+
+    return _retry(table, "drop_constraint", attempt)
 
 
 def snapshot_bloom_map(table: str, version: int | None = None) -> dict:
@@ -2304,7 +2282,6 @@ def commit(
     removed: list[str],
     parent_version: int,
     schema_json: str | None = None,
-    max_attempts: int = 64,
     meta: dict | None = None,
     stats: dict | None = None,
     dv: dict | None = None,
@@ -2320,9 +2297,9 @@ def commit(
 ) -> int:
     """Optimistic commit: claim ``parent+1``; on a lost race,
     re-validate against the interleaved commits and re-claim, or raise
-    :class:`TxConflict` if any of them removed a file this commit also
-    removes. ``meta`` (e.g. streaming txn identity) is stored verbatim
-    in the commit record."""
+    :class:`TxConflict` if any of them invalidated this commit's plan
+    (the conflict classes are listed there). ``meta`` (e.g. streaming
+    txn identity) is stored verbatim in the commit record."""
     _init_table(table)
     ours_removed = set(removed)
     v = parent_version + 1
@@ -2388,7 +2365,7 @@ def commit(
         "base_row_id" not in rec
     )
     rt_sizes: dict | None = None
-    for _ in range(max_attempts):
+    for _ in range(_MAX_CLAIMS):
         rec["version"] = v
         # IN-COMMIT timestamp (Delta's inCommitTimestamps): stamped by
         # the committing writer and clamped monotone against the actual
@@ -2424,7 +2401,11 @@ def commit(
             rec["row_id_watermark"] = wm
         if _try_create(_commit_path(table, v), rec):
             if v % CHECKPOINT_EVERY == 0:
-                _write_checkpoint(table, v)
+                # v is published: a failed checkpoint is only a missed
+                # optimization (readers fold from the older one), never
+                # a failed commit a caller would retry into a duplicate
+                with contextlib.suppress(OSError):
+                    _write_checkpoint(table, v)
             return v
         # lost the race: validate the interleaved commit, advance
         theirs = read_commit(table, v)
@@ -2509,21 +2490,6 @@ def commit(
                     f"version {v} added rows after our predicate scan "
                     f"({read_predicate!r}); re-scan and retry"
                 )
-        if (
-            partition_by is not None
-            and "partition_by" in theirs
-            and list(theirs["partition_by"]) != list(partition_by)
-        ):
-            # declaration write-write: two commits racing DIFFERENT
-            # partition declarations (repartition-vs-repartition, or a
-            # declaring append vs an evolution). Last-wins would leave
-            # the loser believing its layout landed — the loser re-lays
-            # against the fresh declaration instead.
-            raise TxConflict(
-                f"version {v} declared partitioning "
-                f"{theirs['partition_by']} after our snapshot; re-lay "
-                "and retry"
-            )
         if "row_tracking" in rec and (
             theirs["added"] or theirs["removed"]
         ):
@@ -2534,25 +2500,6 @@ def commit(
                 f"version {v} changed the file set after the row-"
                 "tracking backfill; recompute and retry"
             )
-        if "identity_watermark" in rec and "identity_watermark" in theirs:
-            # generator-vs-generator: both commits reserved id ranges
-            # from the same watermark read — last-wins would roll the
-            # other's reservation back and re-issue its values. The
-            # loser re-reads and retries (tx_set_identity/sync recompute
-            # in their loops; tx_append re-runs, its ids are baked in).
-            raise TxConflict(
-                f"version {v} advanced an identity watermark this "
-                "commit also records; re-read and retry"
-            )
-        if "copy_into_sources" in rec and "copy_into_sources" in theirs:
-            # copy-vs-copy: both commits recorded the full loaded-file
-            # set from the same read — last-wins would FORGET the
-            # other's files and a re-run would load them twice. The
-            # loser re-reads the set and re-plans (tx_copy_into).
-            raise TxConflict(
-                f"version {v} recorded COPY INTO sources this commit "
-                "also records; re-read and retry"
-            )
         if "identity_watermark" in rec and not rec["added"] and (
             theirs["added"]
         ):
@@ -2562,7 +2509,7 @@ def commit(
             # forward) raced a plain append. Writer-supplied BY DEFAULT
             # values in the interleaved rows can exceed the scanned
             # max WITHOUT recording a watermark of their own — the
-            # generator-vs-generator check above never fires, and the
+            # generator-vs-generator check below never fires, and the
             # stale watermark would let the generator re-issue the
             # racer's values. The loser re-reads and retries (every
             # caller recomputes its map from the fresh snapshot).
@@ -2570,21 +2517,28 @@ def commit(
                 f"version {v} added rows after our watermark "
                 "read; re-scan and retry"
             )
-        if schema_json and "schema" in theirs and not _schema_eq(
-            theirs["schema"], schema_json
-        ):
-            # metadata write-write conflict (Delta's protocol treats an
-            # interleaved schema change as a conflict): our schema was
-            # validated/widened against a pre-race snapshot; committing
-            # it now would silently overwrite the other writer's
-            # evolution. The caller (tx_append) re-validates against
-            # the fresh table schema and retries.
-            raise TxConflict(
-                f"version {v} changed the table schema after our "
-                "snapshot; re-validate and retry"
-            )
+        # newest-wins write-write: both commits recorded the FULL new
+        # value of a metadata plane planned from the same read (two
+        # ALTERs on different columns, two partition declarations, a
+        # widened schema), so landing ours would silently erase the
+        # other writer's change. Equal values commute, except
+        # reservations: two identity watermarks (generator-vs-
+        # generator) or COPY INTO source sets from the same read hand
+        # out the same ids or files twice. The row-id watermark is
+        # re-stamped on every claim above. The loser re-plans.
+        for k in _NEWEST_WINS:
+            if k == "row_id_watermark" or k not in rec or k not in theirs:
+                continue
+            if k in ("identity_watermark", "copy_into_sources") or not (
+                _schema_eq(rec[k], theirs[k]) if k == "schema"
+                else rec[k] == theirs[k]
+            ):
+                raise TxConflict(
+                    f"version {v} recorded the {k} plane this commit "
+                    "also records; re-read and retry"
+                )
         v += 1
-    raise RuntimeError(f"could not claim a version after {max_attempts} tries")
+    raise RuntimeError(f"could not claim a version after {_MAX_CLAIMS} tries")
 
 
 def _stage(df: DataFrame, table: str,
@@ -3150,7 +3104,9 @@ def tx_append(
             }
     else:
         distinct = None
-    for _ in range(16):
+
+    def attempt():
+        nonlocal enforced_cons, enforced_gen
         # read parent FIRST, then the schema: the schema we validate /
         # widen against is therefore at-or-after our parent. Any
         # schema commit landing after that read claims our target
@@ -3239,30 +3195,28 @@ def tx_append(
                 **(eff_meta or {}),
                 "identity_watermark": {**cur_wm, **ident_new_wm},
             }
-        try:
-            return commit(
-                table,
-                "append",
-                added,
-                [],
-                parent,
-                schema_json=schema_json,
-                meta=eff_meta,
-                stats=stats,
-                bloom=bloom,
-                distinct=distinct,
-                pv=pv,
-                # only an EXPLICIT partition_by records the declaration
-                # (the declaring append). Inherited appends must not
-                # re-record what they read: an append racing a
-                # tx_repartition_table would otherwise re-publish the
-                # stale declaration AFTER the evolution commit and
-                # silently revert it (newest-wins resolution).
-                partition_by=list(partition_by) if partition_by else None,
-            )
-        except TxConflict:
-            continue
-    raise TxConflict(f"append on {table} lost 16 straight schema races")
+        return commit(
+            table,
+            "append",
+            added,
+            [],
+            parent,
+            schema_json=schema_json,
+            meta=eff_meta,
+            stats=stats,
+            bloom=bloom,
+            distinct=distinct,
+            pv=pv,
+            # only an EXPLICIT partition_by records the declaration
+            # (the declaring append). Inherited appends must not
+            # re-record what they read: an append racing a
+            # tx_repartition_table would otherwise re-publish the
+            # stale declaration AFTER the evolution commit and
+            # silently revert it (newest-wins resolution).
+            partition_by=list(partition_by) if partition_by else None,
+        )
+
+    return _retry(table, "append", attempt)
 
 
 # Safe type-widening ladders (Delta 3.x's type widening, the subset
@@ -3908,7 +3862,6 @@ def _cow_rewrite(
     table: str,
     op: str,
     predicate_sql: str,
-    max_retries: int,
     image,
     stats_cols: list[str] | None = None,
     pure_ok: bool = False,
@@ -3936,7 +3889,8 @@ def _cow_rewrite(
 
     pf = _partition_only_equality(table, predicate_sql) if pure_ok else None
     pred = F.coalesce(F.expr(predicate_sql), F.lit(False))
-    for _ in range(max_retries):
+
+    def attempt():  # fresh snapshot, re-find affected files
         ins = insert() if insert is not None else None
         parent, files = snapshot_files(table)
         if not files and ins is None:
@@ -3985,31 +3939,28 @@ def _cow_rewrite(
             lm = _effective_mapping(table) or {}
             read_pf = {lm.get(c, c): w for c, w in pf.items()}
         removed = sorted(set(pure) | set(hit_rels))
-        try:
-            v = commit(
-                table, op, added, removed, parent,
-                schema_json=schema_json, stats=stats, cdc=cdc_rel,
-                pv=pv or None, meta=meta, read_predicate=read_predicate,
-                read_pf=read_pf,
-            )
-            return v, len(removed)
-        except TxConflict:
-            continue  # fresh snapshot, re-find affected files
-    raise TxConflict(f"{op} on {table} lost {max_retries} straight races")
+        v = commit(
+            table, op, added, removed, parent,
+            schema_json=schema_json, stats=stats, cdc=cdc_rel,
+            pv=pv or None, meta=meta, read_predicate=read_predicate,
+            read_pf=read_pf,
+        )
+        return v, len(removed)
+
+    return _retry(table, op, attempt)
 
 
 def tx_delete_where(
     spark: SparkSession,
     table: str,
     predicate_sql: str,
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
     write_cdc: bool = False,
 ) -> tuple[int, int]:
     """Transactional row-level delete: rewrite only the files that
     contain matching rows, commit (removed=affected, added=rewrites)
     against the snapshot parent; on :class:`TxConflict` retry the
-    whole read-rewrite-commit against a fresh snapshot.
+    whole read-rewrite-commit against a fresh snapshot (:func:`_retry`).
 
     NULL predicate rows survive (3VL: DELETE removes only
     predicate-true rows; the predicate is coalesced to FALSE).
@@ -4046,7 +3997,7 @@ def tx_delete_where(
         )
 
     return _cow_rewrite(
-        spark, table, "delete", predicate_sql, max_retries,
+        spark, table, "delete", predicate_sql,
         image=lambda src, pred: src.filter(~pred),
         stats_cols=stats_cols, pure_ok=not write_cdc,
         cdc=deleted if write_cdc else None,
@@ -4198,7 +4149,6 @@ def tx_replace_where(
     table: str,
     df: DataFrame,
     predicate_sql: str,
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
 ) -> tuple[int, int]:
     """Delta's ``replaceWhere``: ATOMICALLY replace exactly the rows
@@ -4258,7 +4208,7 @@ def tx_replace_where(
         return laws
 
     return _cow_rewrite(
-        spark, table, "replace_where", predicate_sql, max_retries,
+        spark, table, "replace_where", predicate_sql,
         image=lambda src, pred: src.filter(~pred),
         pure_ok=True, insert=insert, read_predicate=predicate_sql,
     )
@@ -4269,7 +4219,6 @@ def tx_update_where(
     table: str,
     predicate_sql: str,
     assignments: dict[str, str],
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
     write_cdc: bool = False,
 ) -> tuple[int, int]:
@@ -4290,7 +4239,8 @@ def tx_update_where(
 
     Same concurrency contract as :func:`tx_delete_where`: commit
     (removed=hit files, added=rewrites) against the snapshot parent,
-    retry the whole read-rewrite-commit on :class:`TxConflict`.
+    retry the whole read-rewrite-commit on :class:`TxConflict`
+    (:func:`_retry`).
     Returns (new_version, files_rewritten).
     """
     from pyspark.sql import functions as F
@@ -4375,7 +4325,7 @@ def tx_update_where(
         )
 
     return _cow_rewrite(
-        spark, table, "update", predicate_sql, max_retries,
+        spark, table, "update", predicate_sql,
         image=image, stats_cols=stats_cols,
         cdc=changes if write_cdc else None,
     )
@@ -4385,7 +4335,6 @@ def tx_delete_where_mor(
     spark: SparkSession,
     table: str,
     predicate_sql: str,
-    max_retries: int = 8,
     max_dv_rows: int = 1_000_000,
 ) -> tuple[int, int]:
     """MERGE-ON-READ row-level delete: record the matching rows'
@@ -4421,7 +4370,8 @@ def tx_delete_where_mor(
     from pyspark.sql import functions as F
 
     pf = _partition_only_equality(table, predicate_sql)
-    for _ in range(max_retries):
+
+    def attempt():  # positions went stale; re-find from fresh snapshot
         parent, files = snapshot_files(table)
         if not files:
             return parent, 0
@@ -4459,18 +4409,14 @@ def tx_delete_where_mor(
                 - len(dvs_now.get(f, ()))
                 for f in pure
             )
-        try:
-            v = commit(
-                table, "delete_mor", [], pure, parent,
-                schema_json=schema_json, dv=dv or None,
-                depends_on=sorted(dv) if dv else None,
-            )
-            return v, n
-        except TxConflict:
-            continue  # positions went stale; re-find from fresh snapshot
-    raise TxConflict(
-        f"mor-delete on {table} lost {max_retries} straight races"
-    )
+        v = commit(
+            table, "delete_mor", [], pure, parent,
+            schema_json=schema_json, dv=dv or None,
+            depends_on=sorted(dv) if dv else None,
+        )
+        return v, n
+
+    return _retry(table, "mor-delete", attempt)
 
 
 def tx_changes(
@@ -4725,7 +4671,6 @@ def tx_merge_upsert(
     table: str,
     source: DataFrame,
     keys: list[str],
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
     meta: dict | None = None,
     write_cdc: bool = False,
@@ -4752,8 +4697,7 @@ def tx_merge_upsert(
         spark, table, source, keys,
         matched=[{"cond": None, "action": "update", "set": None}],
         not_matched=[{"cond": None, "values": None}],
-        max_retries=max_retries, stats_cols=stats_cols, meta=meta,
-        write_cdc=write_cdc,
+        stats_cols=stats_cols, meta=meta, write_cdc=write_cdc,
     )
 
 
@@ -4765,7 +4709,6 @@ def tx_merge(
     matched: list[dict] | None = None,
     not_matched: list[dict] | None = None,
     not_matched_by_source: list[dict] | None = None,
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
     meta: dict | None = None,
     write_cdc: bool = False,
@@ -4898,7 +4841,7 @@ def tx_merge(
             return F.lit(True)
         return F.coalesce(F.expr(c), F.lit(False))
 
-    for _ in range(max_retries):
+    def attempt():  # fresh snapshot, re-find affected files
         parent, files = snapshot_files(table)
         schema = table_schema(table)
         if schema is None and files:
@@ -5182,25 +5125,22 @@ def tx_merge(
                 for part in cdc_parts[1:]:
                     all_cdc = all_cdc.unionByName(part)
                 cdc = _stage_cdc(all_cdc, table)
-        try:
-            v = commit(
-                table, "merge", added, hit_rels, parent,
-                schema_json=schema_json or (
-                    ins_df.schema.json() if ins_df is not None else None
-                ),
-                stats=stats, meta=eff_meta, cdc=cdc, pv=pv or None,
-            )
-            return v, len(hit_rels)
-        except TxConflict:
-            continue  # fresh snapshot, re-find affected files
-    raise TxConflict(f"merge on {table} lost {max_retries} straight races")
+        v = commit(
+            table, "merge", added, hit_rels, parent,
+            schema_json=schema_json or (
+                ins_df.schema.json() if ins_df is not None else None
+            ),
+            stats=stats, meta=eff_meta, cdc=cdc, pv=pv or None,
+        )
+        return v, len(hit_rels)
+
+    return _retry(table, "merge", attempt)
 
 
 def tx_compact(
     spark: SparkSession,
     table: str,
     num_files: int | None = 1,
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
     zorder_by: list[str] | None = None,
     sort_by: list[str] | None = None,
@@ -5257,7 +5197,8 @@ def tx_compact(
         stats_cols = sorted(set(stats_cols or []) | set(zorder_by))
     if sort_by:
         stats_cols = sorted(set(stats_cols or []) | {sort_by[0]})
-    for _ in range(max_retries):
+
+    def attempt():
         parent, files = snapshot_files(table)
         if partition_filter:
             declared = set(table_partition_by(table))
@@ -5333,21 +5274,18 @@ def tx_compact(
         stats = (
             collect_file_stats(table, added, stats_cols) if stats_cols else None
         )
-        try:
-            v = commit(
-                table, "compact", added, files, parent,
-                schema_json=schema_json, stats=stats, pv=pv or None,
-            )
-            return v, len(files)
-        except TxConflict:
-            continue
-    raise TxConflict(f"compact on {table} lost {max_retries} straight races")
+        v = commit(
+            table, "compact", added, files, parent,
+            schema_json=schema_json, stats=stats, pv=pv or None,
+        )
+        return v, len(files)
+
+    return _retry(table, "compact", attempt)
 
 
 def tx_reorg_purge(
     spark: SparkSession,
     table: str,
-    max_retries: int = 8,
     target_file_bytes: int = 128 << 20,
 ) -> tuple[int, int]:
     """Delta's ``REORG TABLE ... APPLY (PURGE)``: materialize the
@@ -5385,7 +5323,8 @@ def tx_reorg_purge(
     soft deletes at all (`/root/reference/src/main.cpp` rewrites CSVs
     whole); this is the lakehouse-native completion of its DELETE.
     """
-    for _ in range(max_retries):
+
+    def attempt():  # fresh snapshot: new vectors / rewritten files
         parent, files = snapshot_files(table)
         dvs = snapshot_dvs(table)
         live = set(files)
@@ -5409,24 +5348,19 @@ def tx_reorg_purge(
             collect_file_stats(table, added, stat_cols)
             if stat_cols and added else None
         )
-        try:
-            v = commit(
-                table, "reorg_purge", added, hit, parent,
-                schema_json=schema_json, stats=stats, pv=pv or None,
-            )
-            return v, len(hit)
-        except TxConflict:
-            continue  # fresh snapshot: new vectors / rewritten files
-    raise TxConflict(
-        f"reorg-purge on {table} lost {max_retries} straight races"
-    )
+        v = commit(
+            table, "reorg_purge", added, hit, parent,
+            schema_json=schema_json, stats=stats, pv=pv or None,
+        )
+        return v, len(hit)
+
+    return _retry(table, "reorg-purge", attempt)
 
 
 def tx_repartition_table(
     spark: SparkSession,
     table: str,
     partition_by: list[str],
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
 ) -> tuple[int, int]:
     """PARTITION EVOLUTION (eager): atomically re-lay the current
@@ -5453,7 +5387,8 @@ def tx_repartition_table(
             "partition_by must be non-empty (partition evolution "
             "declares a NEW layout; use tx_compact for plain bin-packing)"
         )
-    for _ in range(max_retries):
+
+    def attempt():
         parent, files = snapshot_files(table)
         if not files:
             raise FileNotFoundError(
@@ -5476,18 +5411,14 @@ def tx_repartition_table(
             collect_file_stats(table, added, stats_cols)
             if stats_cols else None
         )
-        try:
-            v = commit(
-                table, "repartition", added, files, parent,
-                schema_json=schema_json, stats=stats, pv=pv,
-                partition_by=list(partition_by),
-            )
-            return v, len(files)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"repartition on {table} lost {max_retries} straight races"
-    )
+        v = commit(
+            table, "repartition", added, files, parent,
+            schema_json=schema_json, stats=stats, pv=pv,
+            partition_by=list(partition_by),
+        )
+        return v, len(files)
+
+    return _retry(table, "repartition", attempt)
 
 
 def tx_sorted_file_order(
@@ -5557,7 +5488,6 @@ def tx_optimize(
     table: str,
     target_file_bytes: int = 128 << 20,
     min_files: int = 2,
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
     partition_filter: dict | None = None,
 ) -> tuple[int, int]:
@@ -5602,7 +5532,8 @@ def tx_optimize(
     eff_stats_cols = stats_cols
     if cluster_by:
         eff_stats_cols = sorted(set(stats_cols or []) | set(cluster_by))
-    for _ in range(max_retries):
+
+    def attempt():
         parent, files = snapshot_files(table)
         if partition_filter:
             declared = set(table_partition_by(table))
@@ -5660,15 +5591,13 @@ def tx_optimize(
             collect_file_stats(table, added, eff_stats_cols)
             if eff_stats_cols else None
         )
-        try:
-            v = commit(
-                table, "compact", added, small, parent,
-                schema_json=schema_json, stats=stats, pv=pv or None,
-            )
-            return v, len(small)
-        except TxConflict:
-            continue
-    raise TxConflict(f"optimize on {table} lost {max_retries} straight races")
+        v = commit(
+            table, "compact", added, small, parent,
+            schema_json=schema_json, stats=stats, pv=pv or None,
+        )
+        return v, len(small)
+
+    return _retry(table, "optimize", attempt)
 
 
 def tx_restore(
@@ -6196,7 +6125,6 @@ def tx_overwrite(
     table: str,
     df: DataFrame,
     overwrite_schema: bool = False,
-    max_retries: int = 8,
     stats_cols: list[str] | None = None,
 ) -> tuple[int, int]:
     """INSERT OVERWRITE (whole table): atomically replace EVERY live
@@ -6209,11 +6137,12 @@ def tx_overwrite(
     re-records the replacement's schema; time travel still serves old
     versions under their own schema). Returns
     (new_version, files_replaced)."""
-    src_df = df
     if overwrite_schema:
         _enforce_constraints(df, table)
-    for _ in range(max_retries):
+
+    def attempt():  # interleaved writer: re-list the live set
         if overwrite_schema:
+            new_df = df
             schema_json = df.schema.json()
             eff_stats, ident_assigned = stats_cols, []
             idents, ident_wm = {}, {}
@@ -6221,15 +6150,15 @@ def tx_overwrite(
             # append laws re-plan PER ATTEMPT (fresh identity
             # watermark; mirrors tx_replace_where/tx_copy_into) so a
             # racing generator's reservation is never recorded over
-            df, eff_stats, idents, ident_wm, ident_assigned = (
-                _complete_append_laws(src_df, table, stats_cols)
+            new_df, eff_stats, idents, ident_wm, ident_assigned = (
+                _complete_append_laws(df, table, stats_cols)
             )
             cur = table_schema(table)
             schema_json = (
-                cur.json() if cur is not None else df.schema.json()
+                cur.json() if cur is not None else new_df.schema.json()
             )
         parent, files = snapshot_files(table)
-        added, pv = _stage_for(df, table)
+        added, pv = _stage_for(new_df, table)
         stats = (
             collect_file_stats(table, added, eff_stats)
             if eff_stats and added else None
@@ -6239,22 +6168,18 @@ def tx_overwrite(
             meta = _ident_meta(
                 table, idents, ident_assigned, stats, ident_wm
             )
-        try:
-            # read_predicate='true': the overwrite's read-set is the
-            # WHOLE live file list — an interleaved add must conflict,
-            # or its rows would survive a "replace every row" commit
-            # (the retry re-lists files, sweeping the racer's in)
-            v = commit(
-                table, "overwrite", added, files, parent,
-                schema_json=schema_json, stats=stats, pv=pv or None,
-                meta=meta, read_predicate="true",
-            )
-            return v, len(files)
-        except TxConflict:
-            continue  # interleaved writer: re-list the live set
-    raise TxConflict(
-        f"overwrite on {table} lost {max_retries} straight races"
-    )
+        # read_predicate='true': the overwrite's read-set is the
+        # WHOLE live file list — an interleaved add must conflict,
+        # or its rows would survive a "replace every row" commit
+        # (the retry re-lists files, sweeping the racer's in)
+        v = commit(
+            table, "overwrite", added, files, parent,
+            schema_json=schema_json, stats=stats, pv=pv or None,
+            meta=meta, read_predicate="true",
+        )
+        return v, len(files)
+
+    return _retry(table, "overwrite", attempt)
 
 
 def tx_drop_table(table: str) -> int:
@@ -6304,7 +6229,7 @@ def tx_rename_table(table: str, new_table: str) -> None:
     os.rename(table, new_table)
 
 
-def tx_truncate(table: str, max_retries: int = 8) -> tuple[int, int]:
+def tx_truncate(table: str) -> tuple[int, int]:
     """TRUNCATE TABLE: drop every live file from the log as ONE
     metadata-only commit — no file is read or written, so truncating
     a 100 TB table costs O(files) driver metadata. History is intact
@@ -6312,18 +6237,15 @@ def tx_truncate(table: str, max_retries: int = 8) -> tuple[int, int]:
     vacuum + expiration reclaim the bytes on the normal schedule),
     and the change feed streams the drop as whole-file deletes.
     Returns (new_version, files_dropped)."""
-    for _ in range(max_retries):
+
+    def attempt():  # an interleaved rewrite: re-list and retry
         parent, files = snapshot_files(table)
         if not files:
             return parent, 0
-        try:
-            v = commit(table, "truncate", [], files, parent)
-            return v, len(files)
-        except TxConflict:
-            continue  # an interleaved rewrite: re-list and retry
-    raise TxConflict(
-        f"truncate on {table} lost {max_retries} straight races"
-    )
+        v = commit(table, "truncate", [], files, parent)
+        return v, len(files)
+
+    return _retry(table, "truncate", attempt)
 
 
 def tx_show_create_table(table: str) -> str:
@@ -6375,7 +6297,7 @@ def tx_show_create_table(table: str) -> str:
 
 
 def tx_fsck(
-    table: str, dry_run: bool = False, max_retries: int = 8
+    table: str, dry_run: bool = False
 ) -> list[str]:
     """Delta's ``FSCK REPAIR TABLE``: drop the log's references to
     live data files that no longer exist on disk (an external actor
@@ -6388,7 +6310,8 @@ def tx_fsck(
     ``dry_run`` reports the missing files without committing. Pure
     metadata: one os.path.exists per live file, never a data read.
     Returns the missing relpaths."""
-    for _ in range(max_retries):
+
+    def attempt():  # an interleaved rewrite touched them: re-scan
         parent, files = snapshot_files(table)
         missing = [
             f for f in files
@@ -6396,12 +6319,10 @@ def tx_fsck(
         ]
         if dry_run or not missing:
             return missing
-        try:
-            commit(table, "fsck", [], missing, parent)
-            return missing
-        except TxConflict:
-            continue  # an interleaved rewrite touched them: re-scan
-    raise TxConflict(f"fsck on {table} lost {max_retries} straight races")
+        commit(table, "fsck", [], missing, parent)
+        return missing
+
+    return _retry(table, "fsck", attempt)
 
 
 def tx_generate_manifest(table: str, version: int | None = None) -> str:
@@ -6447,7 +6368,6 @@ def tx_generate_manifest(table: str, version: int | None = None) -> str:
 def tx_analyze(
     table: str,
     cols: list[str] | None = None,
-    max_retries: int = 8,
 ) -> tuple[int, int]:
     """ANALYZE TABLE ... COMPUTE STATISTICS: retro-fit data-skipping
     stats onto live files that LACK them for the requested columns.
@@ -6480,7 +6400,8 @@ def tx_analyze(
         if schema is None:
             raise ValueError(f"{table} has no recorded schema")
         cols = [f.name for f in schema.fields]
-    for _ in range(max_retries):
+
+    def attempt():
         parent, files = snapshot_files(table)
         have = snapshot_stats(table)  # LOGICAL keys, like `cols`
         todo = [
@@ -6524,12 +6445,10 @@ def tx_analyze(
         if not stats:
             return parent, 0
         todo = sorted(stats)
-        try:
-            v = commit(table, "analyze", [], [], parent, stats=stats)
-            return v, len(todo)
-        except TxConflict:  # pragma: no cover - no removals, no dv
-            continue
-    raise TxConflict(f"analyze on {table} lost {max_retries} races")
+        v = commit(table, "analyze", [], [], parent, stats=stats)
+        return v, len(todo)
+
+    return _retry(table, "analyze", attempt)
 
 
 def tx_expire_versions(table: str, keep_from: int) -> list[int]:

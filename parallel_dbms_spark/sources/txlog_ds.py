@@ -1533,8 +1533,11 @@ class TxLogStreamWriter(DataSourceStreamWriter):
             if eff_stats and added
             else None
         )
-        for _ in range(16):
+
+        def attempt():
+            nonlocal validated
             parent = (txlog.log_versions(self.table) or [0])[-1]
+            batch_meta = meta
             if self.gen_idents and added:
                 # every task must have assigned from the watermark that
                 # is STILL current — a racing generator in between
@@ -1569,10 +1572,8 @@ class TxLogStreamWriter(DataSourceStreamWriter):
                     stats, cur_wm,
                     (txlog._effective_mapping(self.table) or {}).get,
                 )
-                meta = {
-                    "txn_app": self.app,
-                    "txn_batch": int(batchId),
-                    "identity_watermark": {**cur_wm, **new_wm},
+                batch_meta = {
+                    **meta, "identity_watermark": {**cur_wm, **new_wm},
                 }
             if added:
                 # a constraint commit may have raced the batch (landed
@@ -1604,20 +1605,15 @@ class TxLogStreamWriter(DataSourceStreamWriter):
             schema_json = txlog._widened_schema_json(
                 current, self.schema, merge_schema=self.merge_schema
             )
-            try:
-                txlog.commit(
-                    self.table, "append", added, [], parent,
-                    schema_json=schema_json, meta=meta, pv=pv or None,
-                    stats=stats,
-                )
-            except txlog.TxConflict:
-                continue
-            if self.auto_compact:
-                self._maybe_auto_compact()
-            return
-        raise txlog.TxConflict(
-            f"stream sink on {self.table} lost 16 straight schema races"
-        )
+            txlog.commit(
+                self.table, "append", added, [], parent,
+                schema_json=schema_json, meta=batch_meta, pv=pv or None,
+                stats=stats,
+            )
+
+        txlog._retry(self.table, "stream sink", attempt)
+        if self.auto_compact:
+            self._maybe_auto_compact()
 
     def _maybe_auto_compact(self):
         """Post-commit incremental compaction when the small-file tail

@@ -4265,3 +4265,212 @@ def test_pre_gregorian_dates_and_timestamps_are_found(spark, table):
             assert [r.i for r in got.collect()] == [i], (col, value)
             got, _, _ = txlog.tx_read_skipping(spark, table, {col: (value, None)})
             assert sorted(r.i for r in got.collect()) == list(range(i, 4))
+
+
+@pytest.mark.parametrize("plane", ["default", "constraint", "generated"])
+def test_racing_metadata_commits_keep_both_entries(
+    spark, table, monkeypatch, plane
+):
+    """Two metadata commits planned from the same head record the
+    same newest-wins plane: the loser must re-plan on the winner's
+    map, not land its stale one over it. A racer setting column ``a``
+    lands between the victim's read and its commit on column ``b``;
+    both entries survive."""
+    txlog.tx_append(
+        spark.createDataFrame([(1, 2, 3)], "k long, a long, b long"), table
+    )
+    set_op, read = {
+        "default": (
+            lambda c: txlog.tx_set_default(table, c, "7"),
+            txlog.table_column_defaults,
+        ),
+        "constraint": (
+            lambda c: txlog.tx_set_constraint(
+                spark, table, f"{c}_pos", f"{c} > 0"
+            ),
+            lambda t: {n.split("_")[0] for n in txlog.table_constraints(t)},
+        ),
+        "generated": (
+            lambda c: txlog.tx_set_generated(
+                spark, table, c, f"k + {1 if c == 'a' else 2}"
+            ),
+            txlog.table_generated_columns,
+        ),
+    }[plane]
+    orig = txlog.commit
+    state = {"raced": False}
+
+    def wrapped(table_, action, *a, **kw):
+        if action == f"set_{plane}" and not state["raced"]:
+            state["raced"] = True
+            set_op("a")  # the racer lands inside the victim's window
+        return orig(table_, action, *a, **kw)
+
+    monkeypatch.setattr(txlog, "commit", wrapped)
+    set_op("b")
+    assert state["raced"]
+    assert set(read(table)) == {"a", "b"}, (
+        f"a racing set_{plane} erased the other column's entry"
+    )
+
+
+def _checkpoint_history(table):
+    """Ten metadata-only commits, each recording a different plane mix."""
+    for v in range(1, 11):
+        txlog.commit(
+            table, "alter", [], [], v - 1,
+            meta={
+                "column_defaults": {f"c{v % 3}": str(v)},
+                "cluster_by": [f"c{v % 2}"],
+            },
+            constraints={f"k{v}": f"c{v % 3} > {v}"} if v % 4 else None,
+        )
+
+
+def test_failed_checkpoint_does_not_fail_published_commit(
+    tmp_path, monkeypatch
+):
+    """The v10 checkpoint write failing (os.replace ENOSPC) must not
+    fail the already-published commit v10 — a caller would retry it
+    into a duplicate — nor leave its tmp file in ``_txlog/``; readers
+    at v10 answer as on a table that never checkpointed."""
+    import errno
+
+    ref, t = str(tmp_path / "ref"), str(tmp_path / "t")
+    with monkeypatch.context() as m:
+        m.setattr(txlog, "CHECKPOINT_EVERY", 10**9)
+        _checkpoint_history(ref)
+    real_replace = os.replace
+
+    def failing_replace(src, dst, *a, **kw):
+        if ".checkpoint.json" in str(dst):
+            raise OSError(errno.ENOSPC, "No space left on device", dst)
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(txlog.os, "replace", failing_replace)
+    _checkpoint_history(t)
+    assert txlog.log_versions(t) == list(range(1, 11))
+    left = os.listdir(os.path.join(t, txlog.TXLOG))
+    assert not [f for f in left if ".tmp-" in f], left
+    assert not [f for f in left if f.endswith(".checkpoint.json")]
+    assert txlog._replay(t, 10) == txlog._replay(ref, 10)
+    for reader in (
+        txlog.snapshot_files, txlog.snapshot_stats, txlog.table_constraints,
+        txlog.table_column_defaults, txlog.table_cluster_by,
+        txlog.table_schema,
+    ):
+        args = (10,) if reader is not txlog.table_schema else ()
+        assert reader(t, *args) == reader(ref, *args), reader.__name__
+
+
+def test_failed_commit_write_leaves_no_tmp_file(tmp_path, monkeypatch):
+    """A commit whose record write fails before publishing raises and
+    removes its private tmp file; the version stays unclaimed."""
+    t = str(tmp_path / "t")
+
+    def failing_fsync(fd):
+        raise OSError("injected fsync failure")
+
+    monkeypatch.setattr(txlog.os, "fsync", failing_fsync)
+    with pytest.raises(OSError, match="injected"):
+        txlog.commit(t, "alter", [], [], 0, meta={"cluster_by": ["c"]})
+    assert os.listdir(os.path.join(t, txlog.TXLOG)) == []
+    assert txlog.log_versions(t) == []
+
+
+def _retry_writer(spark, table, op):
+    """One writer per former retry-loop family — metadata ALTER,
+    copy-on-write rewrite, MERGE, layout rewrite, whole-table metadata
+    drop, append — keyed by the op its commits and its give-up error
+    name."""
+    src = spark.createDataFrame([(2, "m"), (9, "n")], "k long, v string")
+    return {
+        "set_default": lambda: txlog.tx_set_default(table, "v", "'d'"),
+        "delete": lambda: txlog.tx_delete_where(spark, table, "k = 1"),
+        "merge": lambda: txlog.tx_merge(
+            spark, table, src, ["k"],
+            matched=[{"cond": None, "action": "update", "set": None}],
+            not_matched=[{"cond": None, "values": None}],
+        ),
+        "compact": lambda: txlog.tx_compact(spark, table),
+        "truncate": lambda: txlog.tx_truncate(table),
+        "append": lambda: txlog.tx_append(_df(spark, [(5, "e")]), table),
+    }[op]
+
+
+@pytest.mark.parametrize(
+    "op", ["set_default", "delete", "merge", "compact", "truncate",
+           "append"],
+)
+@pytest.mark.parametrize("n_conflicts", [3, txlog._MAX_RETRIES])
+def test_retry_policy_lands_or_names_the_op(
+    spark, table, monkeypatch, op, n_conflicts
+):
+    """Every writer retries through the one loop: a few injected lost
+    races still land the write; ``_MAX_RETRIES`` straight ones raise a
+    TxConflict naming the op, with nothing committed."""
+    txlog.tx_append(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), table)
+    txlog.tx_append(_df(spark, [(3, "c")]), table)
+    run = _retry_writer(spark, table, op)
+    head = txlog.log_versions(table)[-1]
+    orig = txlog.commit
+    state = {"injected": 0}
+
+    def wrapped(table_, action, *a, **kw):
+        if action == op and state["injected"] < n_conflicts:
+            state["injected"] += 1
+            raise txlog.TxConflict("injected lost race")
+        return orig(table_, action, *a, **kw)
+
+    monkeypatch.setattr(txlog, "commit", wrapped)
+    if n_conflicts < txlog._MAX_RETRIES:
+        run()
+        assert state["injected"] == n_conflicts
+        assert txlog.log_versions(table)[-1] == head + 1
+        assert txlog.read_commit(table, head + 1)["action"] == op
+    else:
+        with pytest.raises(
+            txlog.TxConflict,
+            match=f"^{op} on .* lost {txlog._MAX_RETRIES} straight races$",
+        ):
+            run()
+        assert state["injected"] == txlog._MAX_RETRIES
+        assert txlog.log_versions(table)[-1] == head
+
+
+def test_one_retry_loop_and_no_retry_knobs():
+    """The retry policy lives in one place: no public txlog callable
+    takes a retry-count knob, and ``except TxConflict`` appears only in
+    ``_retry`` and the stream sink's best-effort auto-compaction (a
+    lost race there abandons an optional pass; it is not a retry)."""
+    import ast
+    import inspect
+
+    from parallel_dbms_spark.sources import txlog_ds
+
+    public = [
+        obj for name, obj in vars(txlog).items()
+        if not name.startswith("_") and inspect.isfunction(obj)
+        and obj.__module__ == txlog.__name__
+    ]
+    assert len(public) > 30
+    for fn in public:
+        params = set(inspect.signature(fn).parameters)
+        assert not {"max_retries", "max_attempts"} & params, fn.__name__
+
+    def catchers(mod):
+        tree = ast.parse(inspect.getsource(mod))
+        found = []
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.ExceptHandler) and node.type and (
+                    "TxConflict" in ast.unparse(node.type)
+                ):
+                    found.append(fn.name)
+        # a handler inside a nested def is also seen from its outer def
+        return sorted(set(found))
+
+    assert catchers(txlog) == ["_retry"]
+    assert catchers(txlog_ds) == ["_maybe_auto_compact"]
