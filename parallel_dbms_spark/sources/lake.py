@@ -372,25 +372,44 @@ def bloom_probe_bits(
     n_hashes)`` config in ``cfgs``: ``{cfg: [pmod(xxhash64(CAST(value
     AS typ), i), n_bits) for i < n_hashes]}``, the positions
     :func:`bloom_words` sets for :func:`write_bloom_manifest` and the
-    txlog Bloom build.
+    txlog Bloom build. See :func:`bloom_probe`."""
+    return bloom_probe(spark, value, typ, cfgs)[0]
+
+
+def bloom_probe(
+    spark: SparkSession, value, typ: str, cfgs, with_key: bool = False
+) -> tuple[dict, object]:
+    """``(bits, key)``: the :func:`bloom_probe_bits` positions of
+    ``value`` per config in ``cfgs`` and, with ``with_key``, the key
+    ``CAST(value AS typ)`` exactly as Spark computed it (None without
+    ``with_key`` or ``cfgs``, or when the cast is NULL). A caller that
+    filters on the key compares against Spark's own cast, never a
+    Python re-cast. Ask for it only where the collected Python value
+    is exact (integral and string types): dates and timestamps collect
+    through PySpark's ``datetime`` conversion, which fails for year 1.
 
     The k seeded hashes ``xxhash64(v, i)``, ``i < max(n_hashes)``, are
     projected ONCE over a one-row ``VALUES`` relation (one ``select`` of
-    the literal, one ``selectExpr`` of the hashes) and collected; the
-    optimizer folds the projection into a local relation, so Spark's
-    own xxhash64 runs on the driver and no job starts. Every config
-    shares those hashes: its bits are ``h % n_bits`` on the driver,
-    which equals Spark's ``pmod`` for ``n_bits > 0``."""
+    the literal, one ``selectExpr`` of the hashes and the key) and
+    collected; the optimizer folds the projection into a local
+    relation, so Spark's own xxhash64 runs on the driver and no job
+    starts. Every config shares those hashes: its bits are
+    ``h % n_bits`` on the driver, which equals Spark's ``pmod`` for
+    ``n_bits > 0``."""
     if not cfgs:
-        return {}
+        return {}, None
     k = max(nh for _, nh in cfgs)
     row = (
         spark.sql("SELECT * FROM VALUES (0) AS t(__z)")
         .select(exact_lit(value).cast(typ).alias("__v"))
-        .selectExpr(*[f"xxhash64(__v, {i}) AS h{i}" for i in range(k)])
+        .selectExpr(
+            *[f"xxhash64(__v, {i}) AS h{i}" for i in range(k)],
+            *(["__v"] if with_key else []),
+        )
         .collect()[0]
     )
-    return {(nb, nh): [row[i] % nb for i in range(nh)] for nb, nh in cfgs}
+    bits = {(nb, nh): [row[i] % nb for i in range(nh)] for nb, nh in cfgs}
+    return bits, row["__v"] if with_key else None
 
 
 # Decoded Bloom sidecars per sidecar parquet file, keyed by (path,

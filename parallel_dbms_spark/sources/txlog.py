@@ -320,10 +320,26 @@ def _replay(table: str, v: int) -> dict:
     return state
 
 
+def _kept_versions(table: str, version: int | None) -> list[int]:
+    """The committed versions (:func:`log_versions`); raises
+    ``ValueError`` when ``version`` lies below the prefix
+    :func:`tx_expire_versions` deleted, whose state no reader can
+    resolve any more (a log that starts above 1 was truncated)."""
+    versions = log_versions(table)
+    truncated = bool(versions) and versions[0] > 1
+    if truncated and version is not None and version < versions[0]:
+        raise ValueError(
+            f"version {version} not in log of {table}: expired, the "
+            f"oldest kept version is {versions[0]}"
+        )
+    return versions
+
+
 def _snapshot_state(table: str, version: int | None) -> dict:
     """The state a per-file reader answers from: exactly ``version``
-    (latest when None; one outside the log raises)."""
-    versions = log_versions(table)
+    (latest when None). An expired version raises ``ValueError``, one
+    above the head ``FileNotFoundError``."""
+    versions = _kept_versions(table, version)
     if not versions:
         return _EMPTY_STATE
     return _replay(table, versions[-1] if version is None else version)
@@ -331,10 +347,10 @@ def _snapshot_state(table: str, version: int | None) -> dict:
 
 def _meta_state(table: str, version: int | None) -> dict:
     """The state a newest-wins metadata reader answers from: the newest
-    committed version at-or-before ``version`` (latest when None). A
-    version below an expired prefix, or an empty log, reads as the
-    empty state — every plane at its default."""
-    versions = log_versions(table)
+    committed version at-or-before ``version`` (latest when None). An
+    empty log reads as the empty state — every plane at its default;
+    an expired version raises ``ValueError``."""
+    versions = _kept_versions(table, version)
     if version is not None:
         versions = [x for x in versions if x <= version]
     return _replay(table, versions[-1]) if versions else _EMPTY_STATE
@@ -343,7 +359,7 @@ def _meta_state(table: str, version: int | None) -> dict:
 def snapshot_files(table: str, version: int | None = None) -> tuple[int, list[str]]:
     """(version, live file relpaths) — the live set of the
     checkpoint-plus-tail replay (:func:`_replay`) at ``version``."""
-    versions = log_versions(table)
+    versions = _kept_versions(table, version)
     if not versions:
         return 0, []
     v = versions[-1] if version is None else version
@@ -2201,6 +2217,116 @@ def tx_bloom(
     return commit(table, "bloom", [], [], v, bloom=bloom)
 
 
+# Kept files at most this many bytes on disk are read by the driver
+# itself in tx_point_lookup. Spark's default openCostInBytes: below the
+# cost Spark charges for opening ONE file, a scan job cannot pay for
+# itself.
+_DRIVER_READ_MAX_BYTES = 4 << 20
+
+# Key types whose Spark-cast value collects to an exact Python value
+# (dates and timestamps do not; floats compare NaN and -0.0 by Spark's
+# rules), so the driver read may drop non-matching rows itself.
+_EXACT_KEY_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
+
+# Footer keys of files written with Spark's LEGACY (Julian) datetime
+# rebase, which only Spark's reader undoes.
+_LEGACY_REBASE_KEYS = (
+    b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96",
+)
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, array element and map value nullable:
+    the type a Spark file scan serves under an explicit read schema
+    (Spark's ``DataType.asNullable``)."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True,
+                            f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
+def _driver_scan(
+    spark: SparkSession, table: str, phys, files: list[str], dvs: dict,
+    key_col: str | None = None, key=None,
+) -> DataFrame | None:
+    """The live rows of ``files`` read by the driver with pyarrow and
+    handed to Spark as a local relation under the physical serve
+    schema ``phys``, in the form a Spark scan of them serves: a column
+    a file lacks is all-NULL, every column is cast to ``phys``'s Arrow
+    type, every field is nullable, and the deletion-vector positions
+    in ``dvs`` are dropped by row index within the file (the
+    ``_metadata.row_index`` the Spark scan excludes). INT96 timestamps
+    (Spark's TIMESTAMP encoding) read at microseconds: pyarrow's
+    nanosecond default wraps years outside 1677..2262.
+
+    With ``key_col``, only rows whose ``key_col`` equals ``key`` pass
+    (a NULL key passes none): ``key`` must be Spark's own cast of the
+    probed value on an exact key type (:func:`lake.bloom_probe`), so
+    the rows dropped here are exactly rows Spark's equality drops.
+
+    Returns None when a file needs Spark's reader: a type with no
+    Arrow form, a cast pyarrow refuses, or a LEGACY-rebased footer."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    serve = _as_nullable(phys)
+    try:
+        target = to_arrow_schema(serve)
+    except PySparkTypeError:
+        return None
+    parts = []
+    for f in files:
+        t = pq.read_table(
+            os.path.join(table, f), coerce_int96_timestamp_unit="us"
+        )
+        if any(k in (t.schema.metadata or {}) for k in _LEGACY_REBASE_KEYS):
+            return None
+        live = np.ones(t.num_rows, dtype=bool)
+        live[np.asarray(dvs.get(f, []), dtype=np.int64)] = False
+        cols = []
+        try:
+            for field in target:
+                cols.append(
+                    t.column(field.name).cast(field.type)
+                    if field.name in t.column_names
+                    else pa.nulls(t.num_rows, field.type)
+                )
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError,
+                pa.ArrowTypeError):
+            return None
+        t = pa.Table.from_arrays(cols, schema=target)
+        if key_col is not None:
+            hit = pc.equal(
+                t.column(key_col), pa.scalar(key, t.schema.field(key_col).type)
+            )
+            live &= hit.fill_null(False).to_numpy(zero_copy_only=False)
+        # take, not filter: a filter left empty keeps zero chunks per
+        # column, which createDataFrame's nested-type pass rejects
+        parts.append(t.take(pa.array(np.flatnonzero(live))))
+    # one chunk per column: a local relation built from an Arrow table
+    # whose first chunks are two or more empty ones comes out empty
+    return spark.createDataFrame(
+        pa.concat_tables(parts).combine_chunks(), schema=serve
+    )
+
+
 def tx_point_lookup(
     spark: SparkSession,
     table: str,
@@ -2214,8 +2340,8 @@ def tx_point_lookup(
     of :func:`tx_read_skipping`'s range stats — ``WHERE id = ?`` on an
     unclustered 100 TB table prunes nothing by min/max, but a per-file
     Bloom filter kills almost every file. False positives cost one
-    pushed-down file scan each, never a wrong answer (the residual
-    equality filter still applies, as do deletion vectors).
+    file read each, never a wrong answer (the residual equality filter
+    still applies, as do deletion vectors).
 
     Each live file's filter comes from its sidecar, decoded once per
     sidecar file and cached under the file's stat
@@ -2224,15 +2350,33 @@ def tx_point_lookup(
     sidecar and a new commit's lookups decode only its new sidecar.
     The probe hashes are Spark's own xxhash64 over the value cast to
     the column's type, folded on the driver from a one-row ``VALUES``
-    projection (:func:`lake.bloom_probe_bits`, no job), so they are
+    projection (:func:`lake.bloom_probe`, no job), so they are
     bit-identical to the build hashes; membership is tested on the
-    driver (:func:`lake.bloom_admits`). Returns (DataFrame,
-    n_files_read, n_files_total)."""
+    driver (:func:`lake.bloom_admits`).
+
+    The kept files are read one of two ways, gated on their total
+    on-disk size (``os.stat``, known before any read):
+
+    - at most ``_DRIVER_READ_MAX_BYTES`` (Spark's default
+      ``openCostInBytes``, the cost Spark itself charges for opening
+      one file): the driver reads them with pyarrow
+      (:func:`_driver_scan`) and serves the live rows as a local
+      relation, so the lookup plans no file scan, broadcasts no
+      deletion-vector exclusion rows and its action starts no job. On
+      integral and string keys with Bloom filters the driver drops
+      rows whose key is not Spark's cast of ``value`` (collected with
+      the probe hashes); otherwise every live row goes to Spark.
+    - above it, or when a file needs Spark's reader: a Spark scan of
+      the kept files, deletion vectors anti-joined away
+      (:func:`_apply_dvs`). This is the branch that serves a read
+      larger than the driver should hold.
+
+    Both branches serve logical names and then apply the same
+    ``col == CAST(value AS type)`` filter, so Spark's equality decides
+    every answer. Returns (DataFrame, n_files_read, n_files_total)."""
     from pyspark.sql import functions as F
 
-    from .lake import (
-        bloom_admits, bloom_probe_bits, exact_lit, load_bloom_sidecar,
-    )
+    from .lake import bloom_admits, bloom_probe, exact_lit, load_bloom_sidecar
 
     v, files = snapshot_files(table, version)
     if not files:
@@ -2251,9 +2395,12 @@ def tx_point_lookup(
     typ = schema[col].dataType.simpleString()
     lit = exact_lit(value).cast(typ)
     # probe bit positions per distinct (n_bits, n_hashes) config —
-    # normally one config; a handful after resizing backfills
-    probe_bits = bloom_probe_bits(
-        spark, value, typ, {b[:2] for b in blooms.values()}
+    # normally one config; a handful after resizing backfills. The
+    # driver read's pre-filter key rides the same projection, so it
+    # exists only when there are filters to probe.
+    exact = bool(blooms) and typ in _EXACT_KEY_TYPES
+    probe_bits, key = bloom_probe(
+        spark, value, typ, {b[:2] for b in blooms.values()}, with_key=exact
     )
     keep = [
         f
@@ -2265,12 +2412,25 @@ def tx_point_lookup(
     if not keep:
         df = _empty_frame(spark, schema)
         return df.filter(F.col(col) == lit), 0, len(files)
-    df = _data_reader(spark, table, schema, mv).parquet(
-        *[os.path.join(table, f) for f in keep]
-    )
-    dvs = snapshot_dvs(table, v)
     keep_set = set(keep)
-    df = _apply_dvs(df, table, {f: p for f, p in dvs.items() if f in keep_set})
+    dvs = {f: p for f, p in snapshot_dvs(table, v).items() if f in keep_set}
+    try:
+        small = sum(
+            os.stat(os.path.join(table, f)).st_size for f in keep
+        ) <= _DRIVER_READ_MAX_BYTES
+    except FileNotFoundError:
+        small = False  # a vacuumed file fails in the scan, as before
+    df = None
+    if small:
+        df = _driver_scan(
+            spark, table, _physical_schema(table, schema, mv), keep, dvs,
+            _l2p_col(table, col, mv) if exact else None, key,
+        )
+    if df is None:
+        df = _data_reader(spark, table, schema, mv).parquet(
+            *[os.path.join(table, f) for f in keep]
+        )
+        df = _apply_dvs(df, table, dvs)
     df = _serve_logical(df, table, mv)
     return df.filter(F.col(col) == lit), len(keep), len(files)
 

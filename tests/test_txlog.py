@@ -238,7 +238,7 @@ def rich_table(spark, tmp_path_factory):
     return table
 
 
-def test_checkpoint_replay_matches_full_replay(rich_table, tmp_path):
+def test_checkpoint_replay_matches_full_replay(spark, rich_table, tmp_path):
     """Every public reader answers the same at every version whether
     the replay seeds from a checkpoint or folds the whole log — and,
     after tx_expire_versions truncates the prefix, the surviving
@@ -271,19 +271,21 @@ def test_checkpoint_replay_matches_full_replay(rich_table, tmp_path):
     assert txlog.log_versions(table) == list(range(15, 22))
     for v in range(15, 22):
         assert _answers(table, v) == want[v], v
-    # versions outside the log keep their answers: newest-wins planes
-    # read as their defaults below the horizon and as the head above
-    # it; per-file planes raise
-    assert txlog.table_constraints(table, 3) == {}
-    assert txlog.table_column_mapping(table, 3) is None
-    assert txlog._schema_at(table, 3) is None
+    # a version below the horizon raises one error from every reader,
+    # newest-wins and per-file alike (it used to read as the planes'
+    # defaults, or as a missing commit file); above the head,
+    # newest-wins planes read as the head and per-file planes raise
+    expired = (
+        "version 3 not in log of .*: expired, the oldest kept version is 15"
+    )
+    for name in _READERS:
+        with pytest.raises(ValueError, match=expired):
+            getattr(txlog, name)(table, 3)
+    with pytest.raises(ValueError, match=expired):
+        txlog.tx_point_lookup(spark, table, "k", 1, version=3)
     assert txlog.table_identity(table, 99) == want[21]["table_identity"]
-    with pytest.raises(ValueError):
-        txlog.snapshot_files(table, 3)
     for fold in (txlog.snapshot_stats, txlog.snapshot_dvs,
                  txlog.snapshot_txns, txlog.snapshot_base_row_ids):
-        with pytest.raises(FileNotFoundError):
-            fold(table, 3)
         with pytest.raises(FileNotFoundError):
             fold(table, 99)
 
