@@ -24,6 +24,7 @@ bitmaps live on the transactional log (sources/txlog.py).
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
 
@@ -252,6 +253,13 @@ def z_cluster(
 # parquet directories use. Its word builder, probe hashes and sidecar
 # decoder are shared with the log's per-commit Bloom sidecars.
 # ---------------------------------------------------------------------------
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty frame of ``schema``. ``limit(0)`` lets the optimizer
+    replace the list-built Python RDD with an empty local relation, so
+    collecting a read that pruned every file starts no job."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 def exact_lit(value):
     """``F.lit(value)`` with calendar-exact dates and timestamps.
 
@@ -344,6 +352,7 @@ def write_bloom_manifest(
     cost one pushed-down scan each, never a wrong answer (Bloom
     proves absence only).
     """
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(path).select(
@@ -362,7 +371,13 @@ def write_bloom_manifest(
     bloom_words(df, n_bits, n_hashes).coalesce(1).write.mode(
         "overwrite"
     ).parquet(out)
-    return spark.read.parquet(out).count()
+    # one filter row per data file, counted from the part footers
+    # (a Spark count would start three jobs)
+    return sum(
+        pq.ParquetFile(os.path.join(out, part)).metadata.num_rows
+        for part in os.listdir(out)
+        if part.endswith(".parquet")
+    )
 
 
 def bloom_probe_bits(
@@ -372,8 +387,52 @@ def bloom_probe_bits(
     n_hashes)`` config in ``cfgs``: ``{cfg: [pmod(xxhash64(CAST(value
     AS typ), i), n_bits) for i < n_hashes]}``, the positions
     :func:`bloom_words` sets for :func:`write_bloom_manifest` and the
-    txlog Bloom build. See :func:`bloom_probe`."""
+    txlog Bloom build. The hashes are always Spark's own XXH64 code:
+    called directly over the JVM gateway for a plain ``int`` in range
+    of an integral type, otherwise through a one-row Catalyst
+    projection. See :func:`bloom_probe`."""
     return bloom_probe(spark, value, typ, cfgs)[0]
+
+
+# Bit width of each integral column type. Spark's ``xxhash64`` hashes
+# the narrower three with XXH64.hashInt and bigint with hashLong: the
+# width is the column type's, never the Python value's.
+_INTEGRAL_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+_XXH64_SEED = 42  # the seed of Spark's xxhash64 expression
+
+
+@functools.lru_cache(maxsize=1)
+def _xxh64_class(jvm):
+    """The gateway JVM's ``XXH64`` class. Each package step of
+    ``jvm.org.apache...`` is a py4j round trip, so it is looked up
+    once per gateway, not per probe."""
+    return jvm.org.apache.spark.sql.catalyst.expressions.XXH64
+
+
+def _jvm_probe_hashes(spark: SparkSession, value, typ: str, k: int):
+    """Spark's ``[xxhash64(CAST(value AS typ), i) for i < k]``, called
+    straight on the JVM's ``XXH64`` class, or None unless ``typ`` is
+    integral and ``value`` a plain ``int`` in its range (so the cast
+    is the identity). None, bools, floats, decimals, numpy scalars,
+    strings and every other type or value go to :func:`bloom_probe`'s
+    projection.
+
+    The widths are those of Spark's ``XxHash64`` expression: ``bigint``
+    hashes with ``hashLong``; ``int``, ``smallint`` and ``tinyint``
+    with ``hashInt``. The seed is 42, and ``xxhash64(v, i)`` then
+    hashes the int ``i`` seeded by v's hash. Instance methods only:
+    py4j resolves the static overloads of the same names unreliably."""
+    width = _INTEGRAL_BITS.get(typ)
+    if width is None or type(value) is not int:
+        return None
+    half = 1 << (width - 1)
+    if not -half <= value < half:
+        return None
+    xxh64 = _xxh64_class(spark.sparkContext._jvm)
+    seeded = xxh64(_XXH64_SEED)
+    h = seeded.hashLong(value) if width == 64 else seeded.hashInt(value)
+    chained = xxh64(h)
+    return [chained.hashInt(i) for i in range(k)]
 
 
 def bloom_probe(
@@ -381,7 +440,7 @@ def bloom_probe(
 ) -> tuple[dict, object]:
     """``(bits, key)``: the :func:`bloom_probe_bits` positions of
     ``value`` per config in ``cfgs`` and, with ``with_key``, the key
-    ``CAST(value AS typ)`` exactly as Spark computed it (None without
+    ``CAST(value AS typ)`` exactly as Spark computes it (None without
     ``with_key`` or ``cfgs``, or when the cast is NULL). A caller that
     filters on the key compares against Spark's own cast, never a
     Python re-cast. Ask for it only where the collected Python value
@@ -389,27 +448,39 @@ def bloom_probe(
     through PySpark's ``datetime`` conversion, which fails for year 1.
 
     The k seeded hashes ``xxhash64(v, i)``, ``i < max(n_hashes)``, are
-    projected ONCE over a one-row ``VALUES`` relation (one ``select`` of
-    the literal, one ``selectExpr`` of the hashes and the key) and
-    collected; the optimizer folds the projection into a local
-    relation, so Spark's own xxhash64 runs on the driver and no job
-    starts. Every config shares those hashes: its bits are
-    ``h % n_bits`` on the driver, which equals Spark's ``pmod`` for
-    ``n_bits > 0``."""
+    Spark's own code either way:
+
+    - when the cast is the identity (a plain ``int`` in range of an
+      integral type; see :func:`_jvm_probe_hashes`), they are k+3
+      calls on the JVM's ``XXH64`` class over py4j, and the key is
+      ``value`` itself. No query is built, analyzed or planned.
+    - every other type and value is projected ONCE over a one-row
+      ``VALUES`` relation (one ``select`` of the literal, one
+      ``selectExpr`` of the hashes and the key) and collected; the
+      optimizer folds the projection into a local relation, so no job
+      starts, but Catalyst analysis, optimization and planning run.
+
+    Every config shares those hashes: its bits are ``h % n_bits`` on
+    the driver, which equals Spark's ``pmod`` for ``n_bits > 0``."""
     if not cfgs:
         return {}, None
     k = max(nh for _, nh in cfgs)
-    row = (
-        spark.sql("SELECT * FROM VALUES (0) AS t(__z)")
-        .select(exact_lit(value).cast(typ).alias("__v"))
-        .selectExpr(
-            *[f"xxhash64(__v, {i}) AS h{i}" for i in range(k)],
-            *(["__v"] if with_key else []),
+    hashes = _jvm_probe_hashes(spark, value, typ, k)
+    key = value
+    if hashes is None:
+        row = (
+            spark.sql("SELECT * FROM VALUES (0) AS t(__z)")
+            .select(exact_lit(value).cast(typ).alias("__v"))
+            .selectExpr(
+                *[f"xxhash64(__v, {i}) AS h{i}" for i in range(k)],
+                *(["__v"] if with_key else []),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
-    bits = {(nb, nh): [row[i] % nb for i in range(nh)] for nb, nh in cfgs}
-    return bits, row["__v"] if with_key else None
+        hashes = row[:k]
+        key = row["__v"] if with_key else None
+    bits = {(nb, nh): [hashes[i] % nb for i in range(nh)] for nb, nh in cfgs}
+    return bits, key if with_key else None
 
 
 # Decoded Bloom sidecars per sidecar parquet file, keyed by (path,
@@ -500,12 +571,19 @@ def read_point_lookup(
     The sidecar's part files are decoded on the driver
     (:func:`load_bloom_sidecar`, cached per file) and tested there
     (:func:`bloom_admits`), so pruning starts no job; the one job the
-    call starts is the data-schema read of ``path``. The probe hashes
-    must be bit-identical to the build hashes, so they are Spark's own
-    xxhash64 over the value cast to the data column's type, folded on
-    the driver from a one-row ``VALUES`` projection
-    (:func:`bloom_probe_bits`; a driver-side reimplementation would
-    silently diverge on type widths).
+    call starts is the data-schema read of ``path``; a value every
+    filter rejects gets an empty local relation (:func:`empty_frame`),
+    whose action starts none. The probe hashes must be bit-identical to
+    the build hashes, so they are Spark's own xxhash64 over the value
+    cast to the data column's type (:func:`bloom_probe_bits`): the
+    JVM's ``XXH64`` class called over py4j when the cast is the
+    identity, a one-row ``VALUES`` projection otherwise. A driver-side
+    reimplementation would silently diverge on type widths; the
+    direct calls take the width from the data column's type, never
+    from the Python value (``hashLong`` for ``bigint``, ``hashInt``
+    for the narrower integral types), and
+    ``test_txlog.py::test_bloom_probe_bits_match_build_hashes`` pins
+    them against Spark's own ``pmod(xxhash64(k, i), n_bits)``.
     """
     from pyspark.sql import functions as F
 
@@ -524,7 +602,7 @@ def read_point_lookup(
     )
     files = [f for f, b in blooms.items() if bloom_admits(b, probe[b[:2]])]
     if not files:
-        return spark.createDataFrame([], schema), 0, len(blooms)
+        return empty_frame(spark, schema), 0, len(blooms)
     df = spark.read.schema(schema).parquet(*files).filter(
         F.col(col) == exact_lit(value).cast(typ)
     )

@@ -63,6 +63,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
+from .lake import _INTEGRAL_BITS, empty_frame
+
 TXLOG = "_txlog"
 DATA = "data"
 STAGING = "_staging"
@@ -459,13 +461,6 @@ def _rel_frame(spark: SparkSession, rels: list[str], **longs) -> DataFrame:
             }
         )
     )
-
-
-def _empty_frame(spark: SparkSession, schema) -> DataFrame:
-    """An empty frame of ``schema``. ``limit(0)`` lets the optimizer
-    replace the list-built Python RDD with an empty local relation, so
-    collecting a read that pruned every file starts no job."""
-    return spark.createDataFrame([], schema).limit(0)
 
 
 def _dv_frame(spark: SparkSession, dvs: dict) -> DataFrame:
@@ -2226,7 +2221,7 @@ _DRIVER_READ_MAX_BYTES = 4 << 20
 # Key types whose Spark-cast value collects to an exact Python value
 # (dates and timestamps do not; floats compare NaN and -0.0 by Spark's
 # rules), so the driver read may drop non-matching rows itself.
-_EXACT_KEY_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
+_EXACT_KEY_TYPES = (*_INTEGRAL_BITS, "string")
 
 # Footer keys of files written with Spark's LEGACY (Julian) datetime
 # rebase, which only Spark's reader undoes.
@@ -2349,10 +2344,13 @@ def tx_point_lookup(
     commit names them), so lookups on an unchanged snapshot read no
     sidecar and a new commit's lookups decode only its new sidecar.
     The probe hashes are Spark's own xxhash64 over the value cast to
-    the column's type, folded on the driver from a one-row ``VALUES``
-    projection (:func:`lake.bloom_probe`, no job), so they are
-    bit-identical to the build hashes; membership is tested on the
-    driver (:func:`lake.bloom_admits`).
+    the column's type (:func:`lake.bloom_probe`, no job), so they are
+    bit-identical to the build hashes: when the cast is the identity (a
+    plain ``int`` in the range of an integral column) they are direct
+    py4j calls on the JVM's ``XXH64`` class and build no query; any
+    other type or value falls back to a one-row ``VALUES`` projection
+    through Catalyst. Membership is tested on the driver
+    (:func:`lake.bloom_admits`).
 
     The kept files are read one of two ways, gated on their total
     on-disk size (``os.stat``, known before any read):
@@ -2364,8 +2362,9 @@ def tx_point_lookup(
       relation, so the lookup plans no file scan, broadcasts no
       deletion-vector exclusion rows and its action starts no job. On
       integral and string keys with Bloom filters the driver drops
-      rows whose key is not Spark's cast of ``value`` (collected with
-      the probe hashes); otherwise every live row goes to Spark.
+      rows whose key is not Spark's cast of ``value`` (``value``
+      itself on the direct path, collected with the projection's
+      hashes otherwise); otherwise every live row goes to Spark.
     - above it, or when a file needs Spark's reader: a Spark scan of
       the kept files, deletion vectors anti-joined away
       (:func:`_apply_dvs`). This is the branch that serves a read
@@ -2396,8 +2395,8 @@ def tx_point_lookup(
     lit = exact_lit(value).cast(typ)
     # probe bit positions per distinct (n_bits, n_hashes) config —
     # normally one config; a handful after resizing backfills. The
-    # driver read's pre-filter key rides the same projection, so it
-    # exists only when there are filters to probe.
+    # driver read's pre-filter key comes with the probe, so it exists
+    # only when there are filters to probe.
     exact = bool(blooms) and typ in _EXACT_KEY_TYPES
     probe_bits, key = bloom_probe(
         spark, value, typ, {b[:2] for b in blooms.values()}, with_key=exact
@@ -2410,7 +2409,7 @@ def tx_point_lookup(
     ]
     mv = None if version is None else v
     if not keep:
-        df = _empty_frame(spark, schema)
+        df = empty_frame(spark, schema)
         return df.filter(F.col(col) == lit), 0, len(files)
     keep_set = set(keep)
     dvs = {f: p for f, p in snapshot_dvs(table, v).items() if f in keep_set}
@@ -3786,7 +3785,7 @@ def read_snapshot(
     if not files:
         if schema is None:
             raise FileNotFoundError(f"version {v} of {table} is empty, no schema")
-        df = _empty_frame(spark, schema)
+        df = empty_frame(spark, schema)
         if with_row_ids:
             from pyspark.sql import functions as F
 
@@ -3916,7 +3915,7 @@ def tx_read_skipping(
     if not keep:
         if schema is None:  # schema-less log: derive from one footer
             schema = spark.read.parquet(os.path.join(table, files[0])).schema
-        df = _empty_frame(spark, schema)
+        df = empty_frame(spark, schema)
     else:
         mv = None if version is None else v
         reader = _data_reader(spark, table, schema, mv)
@@ -4799,7 +4798,7 @@ def tx_changes(
         schema = _schema_at(table, hi)
         if schema is None:
             raise ValueError(f"no changes and no schema in ({from_version}, {hi}]")
-        empty = _empty_frame(spark, schema)
+        empty = empty_frame(spark, schema)
         return empty.withColumn("_change_type", F.lit("")).withColumn(
             "_commit_version", F.lit(0).cast("long")
         )

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_run
 
 from parallel_dbms_spark.catalog import load_table
 from parallel_dbms_spark.plans import formatted_plan
@@ -307,8 +307,11 @@ def test_bloom_manifest_point_lookup_prunes_and_matches(spark, tmp_path):
     # useless here; only the bloom filter can prune equality probes.
     df = spark.range(0, 6000).withColumn("val", F.col("id") % 7)
     df.repartition(12, "val").write.parquet(t)  # id spread across files
-    n = write_bloom_manifest(spark, t, "id")
+    # the build's jobs: the auto-size count and the sidecar write; the
+    # returned filter count is read from the sidecar's footers
+    n, jobs = jobs_run(spark, lambda: write_bloom_manifest(spark, t, "id"))
     assert n == spark.read.parquet(t).select("_metadata.file_path").distinct().count()
+    assert jobs == 7
 
     got, n_read, n_total = read_point_lookup(spark, t, "id", 4242)
     rows = got.collect()
@@ -321,6 +324,27 @@ def test_bloom_manifest_point_lookup_prunes_and_matches(spark, tmp_path):
     got2, n_read2, _ = read_point_lookup(spark, t, "id", 999_999)
     assert got2.count() == 0
     assert n_read2 <= max(2, n_total // 3)  # generous fp headroom
+
+
+def test_bloom_point_lookup_absent_key_starts_no_job(spark, tmp_path):
+    """A key every Bloom filter rejects is served as an empty local
+    relation: collecting it starts no job, and it keeps the table's
+    schema."""
+    from parallel_dbms_spark.sources.lake import (
+        read_point_lookup,
+        write_bloom_manifest,
+    )
+
+    t = str(tmp_path / "bloom")
+    spark.range(0, 200).withColumn("val", F.col("id") * 2).repartition(
+        2
+    ).write.parquet(t)
+    write_bloom_manifest(spark, t, "id")
+    got, n_read, n_total = read_point_lookup(spark, t, "id", 10**12)
+    assert (n_read, n_total) == (0, 2)
+    rows, jobs = jobs_run(spark, got.collect)
+    assert rows == [] and jobs == 0
+    assert got.schema == spark.read.parquet(t).schema
 
 
 def test_bloom_point_lookup_finds_every_key(spark, tmp_path):

@@ -9,10 +9,12 @@ import datetime as dt
 import json
 import os
 import threading
-import uuid
 from decimal import Decimal
 
+import numpy as np
 import pytest
+
+from conftest import jobs_run
 
 from parallel_dbms_spark.sources import txlog
 
@@ -4023,29 +4025,18 @@ def test_folded_append_int32_ids(spark, table):
     assert n_scanned == 0 and df.collect()[0].n_distinct == 7
 
 
-def _jobs_run(spark, fn):
-    """Run ``fn`` under a fresh job group; return its result and the
-    number of Spark jobs it started."""
-    sc = spark.sparkContext
-    group = "jobs-" + uuid.uuid4().hex
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "typ, keys",
     [
-        ("long", [0, -1, 7, 2**40 + 3, -(2**62), 2**63 - 1]),
+        ("long", [0, -1, 7, 2**40 + 3, -(2**62), 2**63 - 1, -(2**63)]),
         ("int", [0, -1, 7, 2**31 - 1, -(2**31), 123456]),
-        ("string", ["", "a", "é", "key 7", "x" * 40, "%20"]),
+        ("string", ["", "a", "é", "key 7", "x" * 40, "%20", "日本語",
+                    "🙂x", "a\x00b"]),
         ("date", [dt.date(1970, 1, 1), dt.date(1969, 12, 31),
                   dt.date(2024, 2, 29), dt.date(1000, 1, 1),
-                  dt.date(9999, 12, 31), dt.date(2000, 1, 1)]),
+                  dt.date(9999, 12, 31), dt.date(2000, 1, 1),
+                  dt.date(1, 1, 1), dt.date(1582, 10, 4),
+                  dt.date(1582, 10, 15)]),
         ("timestamp", [dt.datetime(1970, 1, 1),
                        dt.datetime(2024, 2, 29, 23, 59, 59, 999999),
                        dt.datetime(1969, 12, 31, 23, 59, 59),
@@ -4056,6 +4047,8 @@ def _jobs_run(spark, fn):
         ("decimal(10,2)", [Decimal("0.00"), Decimal("-0.01"),
                            Decimal("12.34"), Decimal("99999999.99"),
                            Decimal("-99999999.99"), Decimal("5.50")]),
+        ("smallint", [0, -1, 7, 2**15 - 1, -(2**15), 1234]),
+        ("tinyint", [0, -1, 7, 127, -128, 42]),
     ],
 )
 def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
@@ -4064,7 +4057,9 @@ def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
     the build hashes), the probe bits of every config, a
     non-power-of-two one included, equal Spark's own
     ``pmod(xxhash64(k, i), n_bits)`` over the stored column, and the
-    probe itself starts no Spark job."""
+    probe itself starts no Spark job. The probe is asked with the
+    column's ``simpleString`` type, as the lookups ask it, so the
+    integral cases take the direct XXH64 path."""
     from pyspark.sql import functions as F
 
     from parallel_dbms_spark.sources import lake
@@ -4072,6 +4067,7 @@ def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
     df = spark.createDataFrame(
         [(k, i) for i, k in enumerate(keys)], f"k {typ}, i int"
     ).repartition(3)
+    typ = df.schema["k"].dataType.simpleString()
     txlog.tx_append(df, table, bloom_cols=["k"])
     for i, k in enumerate(keys):
         got, nread, ntotal = txlog.tx_point_lookup(spark, table, "k", k)
@@ -4095,7 +4091,7 @@ def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
     }
     for i, k in enumerate(keys):
         assert lake.bloom_probe_bits(spark, k, typ, cfgs) == want[i], (typ, k)
-    bits, jobs = _jobs_run(
+    bits, jobs = jobs_run(
         spark,
         lambda: lake.bloom_probe_bits(
             spark, keys[2], typ, [(4096, 5), (8192, 3)]
@@ -4105,6 +4101,71 @@ def test_bloom_probe_bits_match_build_hashes(spark, table, typ, keys):
     assert sorted(bits) == [(4096, 5), (8192, 3)]
     assert [len(b) for b in bits.values()] == [5, 3]
     assert all(0 <= b < nb for (nb, _), bs in bits.items() for b in bs)
+
+
+@pytest.mark.parametrize(
+    "value, typ, n_sql",
+    [
+        (7, "bigint", 0),
+        (-(2**63), "bigint", 0),
+        (-128, "tinyint", 0),
+        ("日本語", "string", 1),
+        (dt.date(1582, 10, 4), "date", 1),
+        (None, "bigint", 1),
+        (True, "bigint", 1),
+        (7.0, "bigint", 1),
+        ("7", "bigint", 1),
+        (2**31, "int", 1),
+        (np.int64(7), "bigint", 1),
+        (dt.datetime(2024, 2, 29, 23, 59), "date", 1),
+    ],
+)
+def test_bloom_probe_fallback_matches_projection(
+    spark, monkeypatch, value, typ, n_sql
+):
+    """``bloom_probe`` returns the bits and key of Spark's own
+    ``pmod(xxhash64(CAST(value AS typ), i), n_bits)`` projection for
+    every value. Only a plain ``int`` in range of an integral column
+    takes the direct XXH64 path, which builds no query (``spark.sql``
+    is not called); None, bools, floats, strings, out-of-range ints,
+    numpy scalars, dates and datetimes go through the one-row
+    projection, exactly once."""
+    from pyspark.sql import functions as F
+
+    from parallel_dbms_spark.sources import lake
+
+    cfgs = [(1000, 7), (4096, 5)]
+    ref = spark.range(1).select(
+        lake.exact_lit(value).cast(typ).alias("v")
+    ).select(
+        "v",
+        *[
+            F.pmod(F.xxhash64("v", F.lit(h)), F.lit(nb)).alias(f"b{nb}_{h}")
+            for nb, nh in cfgs
+            for h in range(nh)
+        ],
+    )
+    calls = []
+    sql = spark.sql
+
+    def counting_sql(*args, **kwargs):
+        calls.append(args)
+        return sql(*args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", counting_sql)
+    try:
+        row = ref.collect()[0]
+    except Exception as e:  # ANSI cast overflow: the probe raises too
+        with pytest.raises(type(e)):
+            lake.bloom_probe(spark, value, typ, cfgs, with_key=True)
+        assert len(calls) == n_sql
+        return
+    bits, key = lake.bloom_probe(spark, value, typ, cfgs, with_key=True)
+    assert bits == {
+        (nb, nh): [row[f"b{nb}_{h}"] for h in range(nh)] for nb, nh in cfgs
+    }
+    assert key == row.v and type(key) is type(row.v)
+    assert len(calls) == n_sql
 
 
 def test_dv_point_lookup_starts_no_python_worker_job(spark, table):
@@ -4120,7 +4181,7 @@ def test_dv_point_lookup_starts_no_python_worker_job(spark, table):
         df, _, _ = txlog.tx_point_lookup(spark, table, "k", 101)
         return df.collect()
 
-    rows, jobs = _jobs_run(spark, lookup)
+    rows, jobs = jobs_run(spark, lookup)
     assert [(r.k, r.v) for r in rows] == [(101, 202)]
     assert jobs <= 2
     gone, _, _ = txlog.tx_point_lookup(spark, table, "k", 100)
@@ -4130,7 +4191,7 @@ def test_dv_point_lookup_starts_no_python_worker_job(spark, table):
         df, nread, _ = txlog.tx_point_lookup(spark, table, "k", 10**9)
         return nread, df.collect()
 
-    (nread, rows), jobs = _jobs_run(spark, miss)
+    (nread, rows), jobs = jobs_run(spark, miss)
     assert (nread, rows, jobs) == (0, [], 0)
 
 
@@ -4187,7 +4248,7 @@ def test_sidecar_reads_start_no_inference_job(spark, table, tmp_path):
     txlog.tx_append(_ranged(spark, 3000, 4000, parts=1), table,
                     distinct_cols=["k"])
     txlog.tx_delete_where_mor(spark, table, "k in (100, 3900)")
-    (df, n_scanned, n_total), jobs = _jobs_run(
+    (df, n_scanned, n_total), jobs = jobs_run(
         spark, lambda: txlog.tx_instant_distinct(spark, table, "k")
     )
     assert jobs == 0
@@ -4197,7 +4258,7 @@ def test_sidecar_reads_start_no_inference_job(spark, table, tmp_path):
     t = str(tmp_path / "plain")
     spark.range(0, 3000).repartition(4).write.parquet(t)
     lake.write_bloom_manifest(spark, t, "id")
-    (got, n_read, n_total), jobs = _jobs_run(
+    (got, n_read, n_total), jobs = jobs_run(
         spark, lambda: lake.read_point_lookup(spark, t, "id", 1234)
     )
     assert jobs <= 1

@@ -12,6 +12,8 @@ from decimal import Decimal
 
 import pytest
 
+from conftest import jobs_run
+
 from parallel_dbms_spark.sources import txlog
 
 
@@ -262,17 +264,6 @@ def test_driver_scan_keeps_rows_after_files_the_key_empties(spark, tmp_path):
     assert [r.k for r in got.collect()] == [3]
 
 
-def _jobs_of(spark, action) -> int:
-    sc = spark.sparkContext
-    group = f"lookup-{os.urandom(4).hex()}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("with_dvs", [False, True])
 def test_driver_lookup_plans_no_scan_and_starts_no_job(
     spark, tmp_path, monkeypatch, with_dvs
@@ -286,7 +277,7 @@ def test_driver_lookup_plans_no_scan_and_starts_no_job(
     assert n_read == 1
     plan = _plan(df)
     assert "FileScan" not in plan and "BroadcastExchange" not in plan
-    assert _jobs_of(spark, df.collect) == 0
+    assert jobs_run(spark, df.collect)[1] == 0
     assert [r.k for r in df.collect()] == [7]
     monkeypatch.setattr(txlog, "_DRIVER_READ_MAX_BYTES", 0)
     df, _, _ = txlog.tx_point_lookup(spark, t, "k", 7)
