@@ -325,6 +325,20 @@ def bloom_words(keyed: DataFrame, n_bits: int, n_hashes: int) -> DataFrame:
     )
 
 
+def bloom_auto_bits(paths) -> int:
+    """The auto-sized Bloom width for a filter per file of ``paths``:
+    ~10 bits per row of the LARGEST file, rounded up to a power of two,
+    floor 4096. Row counts come from the parquet footers, so sizing
+    reads no data and starts no job."""
+    import pyarrow.parquet as pq
+
+    rows = max((pq.ParquetFile(p).metadata.num_rows for p in paths), default=1)
+    n_bits = 4096
+    while n_bits < 10 * rows:
+        n_bits <<= 1
+    return n_bits
+
+
 def write_bloom_manifest(
     spark: SparkSession,
     path: str,
@@ -343,30 +357,28 @@ def write_bloom_manifest(
     file, so even million-file tables keep the sidecar
     driver-loadable.
 
-    ``n_bits=None`` auto-sizes to ~10 bits per row of the LARGEST
-    file (next power of two, floor 4096): a fixed bitset silently
-    saturates once rows/file outgrows it — every bit set, zero
-    pruning — which is a performance cliff, not a correctness bug,
-    and exactly the kind that only shows up at scale. False-positive
-    rate ~ (1-e^{-kn/m})^k ≈ 1% at 10 bits/key, k=5; false positives
-    cost one pushed-down scan each, never a wrong answer (Bloom
-    proves absence only).
+    ``n_bits=None`` auto-sizes with :func:`bloom_auto_bits`: a fixed
+    bitset silently saturates once rows/file outgrows it — every bit
+    set, zero pruning — which is a performance cliff, not a
+    correctness bug, and exactly the kind that only shows up at scale.
+    False-positive rate ~ (1-e^{-kn/m})^k ≈ 1% at 10 bits/key, k=5;
+    false positives cost one pushed-down scan each, never a wrong
+    answer (Bloom proves absence only).
     """
+    from urllib.parse import unquote, urlparse
+
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path).select(
+    src = spark.read.parquet(path)
+    df = src.select(
         F.col("_metadata.file_path").alias("file"), F.col(col).alias("__v")
     )
     if n_bits is None:
-        mx = (
-            df.groupBy("file").agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("m")).head()
+        # the files Spark scans, as URIs (listing them starts no job)
+        n_bits = bloom_auto_bits(
+            unquote(urlparse(u).path) for u in src.inputFiles()
         )
-        rows_per_file = int(mx.m or 1)
-        n_bits = 4096
-        while n_bits < 10 * rows_per_file:
-            n_bits <<= 1
     out = path + f"/_bloom_{col}"
     bloom_words(df, n_bits, n_hashes).coalesce(1).write.mode(
         "overwrite"

@@ -63,7 +63,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
-from .lake import _INTEGRAL_BITS, empty_frame
+from .lake import _INTEGRAL_BITS, empty_frame, z_cluster
 
 TXLOG = "_txlog"
 DATA = "data"
@@ -718,7 +718,8 @@ def tx_drop_generated(table: str, col: str) -> int:
 def table_cluster_by(table: str, version: int | None = None) -> list:
     """The table's declared CLUSTERING columns (Delta liquid-
     clustering-style declaration): maintenance passes z-order on them
-    by default and every append records their file stats
+    by default, and every append and every layout rewrite (compact,
+    optimize, purge, repartition) records their file stats
     automatically, so the table stays skippable on its access pattern
     without per-call arguments. Newest-wins; empty = undeclared."""
     return list(_meta_state(table, version)["cluster_by"])
@@ -728,7 +729,8 @@ def tx_set_cluster_by(table: str, cols: list) -> int:
     """ALTER TABLE ... CLUSTER BY: declare the clustering columns as
     table metadata (an explicit [] undeclares). Declaration only —
     existing files re-lay on the next tx_optimize/tx_compact, which
-    default their z-order to this."""
+    default their z-order to this; from this commit on, every append
+    and every layout rewrite records these columns' file stats."""
     schema = table_schema(table)
     if schema is None:
         raise FileNotFoundError(f"no schema committed under {table}")
@@ -2159,27 +2161,20 @@ def _build_bloom_sidecar(
     them as ONE immutable sidecar parquet under ``_sidecars/``;
     returns the commit-record entry ``{"sidecar": rel, "files":
     rels}``. The words are :func:`lake.bloom_words` (k xxhash64
-    probes -> sparse packed int64 words, auto-sized to ~10 bits/row of
-    the largest covered file, floor 4096), scoped to a commit's own
+    probes -> sparse packed int64 words, auto-sized by
+    :func:`lake.bloom_auto_bits`), scoped to a commit's own
     files so the filter RIDES the commit: a pinned snapshot sees
     exactly the filters of its own file set. Sidecars are invisible to
     scans (underscore dir) and, like data files, immutable once a
     commit names them. ``field`` is the staged PHYSICAL column when the
     caller knows it (a read with that schema starts no inference
     job)."""
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from .lake import bloom_words
+    from .lake import bloom_auto_bits, bloom_words
 
-    paths = [os.path.join(table, r) for r in rels]
     if n_bits is None:
-        rows = max(
-            (pq.ParquetFile(p).metadata.num_rows for p in paths), default=1
-        )
-        n_bits = 4096
-        while n_bits < 10 * rows:
-            n_bits <<= 1
+        n_bits = bloom_auto_bits(os.path.join(table, r) for r in rels)
     df = _staged_column(spark, table, rels, col, field).select(
         _rel_expr(table).alias("file"), F.col("__c").alias("__v")
     )
@@ -3169,8 +3164,6 @@ def tx_append(
         raise ValueError(f"partition columns {missing} not in the append")
     enforced_cons = _enforce_constraints(df, table)
     if cluster_by:
-        from .lake import z_cluster
-
         df = z_cluster(df, list(cluster_by), num_files=cluster_files)
     # COLUMN MAPPING: a mapped table stages physical names; a brand-new
     # logical column (merge_schema evolution) MINTS its physical name
@@ -3686,6 +3679,29 @@ def _pv_str(x) -> str | None:
     return str(x)
 
 
+def _partition_want(
+    table: str, partition_filter: dict, version: int | None = None
+) -> dict:
+    """``partition_filter`` ({col: value-or-list}) as {col: the set of
+    :func:`_pv_str` strings a recorded partition value must be one
+    of}. Filter keys MUST be declared partition columns: a
+    non-partition column can never match any recorded value map, so it
+    would silently prune (or scope out) EVERY value-pure file — wrong
+    results, not slow results; raise instead."""
+    declared = set(table_partition_by(table, version))
+    unknown = sorted(set(partition_filter) - declared)
+    if unknown:
+        raise ValueError(
+            f"partition_filter column(s) {unknown} are not partition "
+            f"columns of {table} (declared: {sorted(declared) or 'none'})"
+        )
+    return {
+        c: {_pv_str(x)
+            for x in (v if isinstance(v, (list, tuple, set)) else [v])}
+        for c, v in partition_filter.items()
+    }
+
+
 def prune_partition_files(
     table: str,
     files: list[str],
@@ -3698,26 +3714,11 @@ def prune_partition_files(
     pre-partitioning history) — conservative, never wrong. Pure log
     metadata; no file is touched. Values compare stringified via
     :func:`_pv_str`, exactly as :func:`_stage_partitioned` recorded
-    them (None matches a requested None — the null partition).
-
-    Filter keys MUST be declared partition columns: a non-partition
-    column can never match any recorded value map, so it would
-    silently prune EVERY value-pure file (wrong results, not slow
-    results) — raise instead."""
-    declared = set(table_partition_by(table, version))
-    unknown = sorted(set(partition_filter) - declared)
-    if unknown:
-        raise ValueError(
-            f"partition_filter column(s) {unknown} are not partition "
-            f"columns of {table} (declared: {sorted(declared) or 'none'}); "
-            "filter them row-level instead"
-        )
+    them (None matches a requested None — the null partition). Filter
+    keys MUST be declared partition columns (:func:`_partition_want`
+    raises otherwise)."""
+    want = _partition_want(table, partition_filter, version)
     pv = snapshot_pv(table, version)
-    want = {
-        c: {_pv_str(x)
-            for x in (v if isinstance(v, (list, tuple, set)) else [v])}
-        for c, v in partition_filter.items()
-    }
     kept = []
     for f in files:
         vals = pv.get(f)
@@ -5296,6 +5297,89 @@ def tx_merge(
     return _retry(table, "merge", attempt)
 
 
+# tx_optimize leaves fewer small files than this alone (unless one
+# carries deletion vectors): packing one file into one is pure churn.
+_OPTIMIZE_MIN_FILES = 2
+
+
+def _partition_scope(
+    table: str, files: list[str], partition_filter: dict | None
+) -> list[str]:
+    """Delta's ``OPTIMIZE ... WHERE`` scoping: the ``files`` PROVABLY
+    pure on ``partition_filter`` (recorded partitionValues match on
+    every filter column; unrecorded or mixed-declaration files are
+    left out). No filter = every file."""
+    if not partition_filter:
+        return files
+    return _pure_split(
+        table, files, _partition_want(table, partition_filter)
+    )[0]
+
+
+def _files_per_target(
+    table: str, files: list[str], target_file_bytes: int
+) -> int:
+    """Output file count for rewriting ``files`` into ~``target_file_bytes``
+    files: their on-disk bytes over the target, rounded up, at least 1.
+    One ``os.path.getsize`` per file, driver-side."""
+    total = sum(os.path.getsize(os.path.join(table, f)) for f in files)
+    return max(1, -(-total // target_file_bytes))
+
+
+def _layout_rewrite(
+    spark: SparkSession,
+    table: str,
+    op: str,
+    action: str,
+    pick,
+    pack,
+    stage,
+    stats_cols,
+    **commit_extra,
+) -> tuple[int, int]:
+    """The one kernel behind every layout rewrite (:func:`tx_compact`,
+    :func:`tx_optimize`, :func:`tx_reorg_purge`,
+    :func:`tx_repartition_table`): content never changes, only which
+    files hold it. Each attempt reads a fresh snapshot;
+    ``pick(files, dvs)`` chooses the live files to rewrite and an
+    output file count (no file picked = nothing to do, ``(parent,
+    0)``). Their :func:`_live_rows` — only their own deletion vectors
+    applied, read under the RECORDED schema, not footer inference (a
+    mixed-schema live set inferred from one footer would drop the
+    evolved columns, and the removal makes the loss permanent) — go
+    through ``pack(df, n)`` and ``stage(df, table)`` -> (added, pv).
+    Footer stats are recorded for ``stats_cols(picked)`` plus the
+    declared clustering columns, so no rewrite strips the skipping an
+    append recorded. One commit removes exactly the picked files (a
+    racing rewrite of any of them conflicts and :func:`_retry` redoes
+    the attempt; appends commute); ``commit_extra`` rides it. Returns
+    (new_version, files_replaced)."""
+
+    def attempt():
+        parent, files = snapshot_files(table)
+        dvs = snapshot_dvs(table)
+        picked, n = pick(files, dvs)
+        if not picked:
+            return parent, 0
+        schema = table_schema(table)
+        picked_set = set(picked)
+        live_df = _live_rows(
+            spark, table, schema, picked,
+            {f: p for f, p in dvs.items() if f in picked_set},
+        )
+        added, pv = stage(pack(live_df, n), table)
+        cols = sorted(set(stats_cols(picked)) | set(table_cluster_by(table)))
+        v = commit(
+            table, action, added, picked, parent,
+            schema_json=schema.json() if schema is not None else None,
+            stats=collect_file_stats(table, added, cols) if cols else None,
+            pv=pv, **commit_extra,
+        )
+        return v, len(picked)
+
+    return _retry(table, op, attempt)
+
+
 def tx_compact(
     spark: SparkSession,
     table: str,
@@ -5349,97 +5433,45 @@ def tx_compact(
         raise ValueError("zorder_by and sort_by are mutually exclusive")
     if zorder_by is None and not sort_by:
         # declared clustering is the table's standing OPTIMIZE order
-        declared = table_cluster_by(table)
-        if declared:
-            zorder_by = declared
-    if zorder_by:
-        stats_cols = sorted(set(stats_cols or []) | set(zorder_by))
+        zorder_by = table_cluster_by(table) or None
+    ordered = bool(zorder_by or sort_by)
+    cols = set(stats_cols or []) | set(zorder_by or [])
     if sort_by:
-        stats_cols = sorted(set(stats_cols or []) | {sort_by[0]})
+        cols.add(sort_by[0])
 
-    def attempt():
-        parent, files = snapshot_files(table)
-        if partition_filter:
-            declared = set(table_partition_by(table))
-            unknown = sorted(set(partition_filter) - declared)
-            if unknown:
-                raise ValueError(
-                    f"partition_filter column(s) {unknown} are not "
-                    f"partition columns of {table} "
-                    f"(declared: {sorted(declared) or 'none'})"
-                )
-            pv = snapshot_pv(table)
-            want = {
-                c: {
-                    _pv_str(x)
-                    for x in (
-                        v if isinstance(v, (list, tuple, set)) else [v]
-                    )
-                }
-                for c, v in partition_filter.items()
-            }
-            files = [
-                f
-                for f in files
-                if f in pv
-                and all(
-                    c in pv[f] and pv[f][c] in w for c, w in want.items()
-                )
-            ]
-            if not files:
-                return parent, 0
-        eff_num = num_files
-        if eff_num is None:
-            total = sum(
-                os.path.getsize(os.path.join(table, f)) for f in files
-            )
-            eff_num = max(1, -(-total // target_file_bytes))  # ceil
-        if len(files) <= eff_num and not zorder_by and not sort_by:
-            return parent, 0
-        # RECORDED schema, not footer inference: a mixed-schema live set
-        # (post merge_schema evolution) inferred from one footer would
-        # rewrite the table WITHOUT the evolved columns — and compact
-        # removes the old files, making the loss permanent.
-        schema = table_schema(table)
-        schema_json = schema.json() if schema is not None else None
-        # row tracking: the bin-pack carries every row's materialized
-        # id and commit version — compaction is pure layout, a row's
-        # identity and "last modified" commit must not change
-        live_df = _live_rows(spark, table, schema, files, snapshot_dvs(table))
+    def pick(files, dvs):
+        files = _partition_scope(table, files, partition_filter)
+        n = num_files
+        if n is None:
+            n = _files_per_target(table, files, target_file_bytes)
+        if len(files) <= n and not ordered:
+            return [], n  # already at most n files: nothing to bin-pack
+        return files, n
+
+    def pack(df, n):
         if zorder_by:
-            from .lake import z_cluster
-
-            packed = z_cluster(live_df, zorder_by, num_files=eff_num)
-        elif sort_by:
+            return z_cluster(df, zorder_by, num_files=n)
+        if sort_by:
             from pyspark.sql import functions as F
 
             keys = [
                 F.col(c).asc() if ascending else F.col(c).desc()
                 for c in sort_by
             ]
-            packed = live_df.repartitionByRange(
-                eff_num, *keys
-            ).sortWithinPartitions(*keys)
-        else:
-            packed = live_df.coalesce(eff_num)
-        if zorder_by or sort_by:
-            # these layouts ORDER files by the clustering key — routing
-            # them through partition-pure staging would break the
-            # sorted-export file-order contract; their outputs carry no
-            # partition values (pruned reads still scan them, exactly)
-            added, pv = _stage(packed, table), None
-        else:
-            added, pv = _stage_for(packed, table)
-        stats = (
-            collect_file_stats(table, added, stats_cols) if stats_cols else None
-        )
-        v = commit(
-            table, "compact", added, files, parent,
-            schema_json=schema_json, stats=stats, pv=pv or None,
-        )
-        return v, len(files)
+            return df.repartitionByRange(n, *keys).sortWithinPartitions(
+                *keys
+            )
+        return df.coalesce(n)
 
-    return _retry(table, "compact", attempt)
+    # ordered layouts ORDER files by the clustering key — routing them
+    # through partition-pure staging would break the sorted-export
+    # file-order contract; their outputs carry no partition values
+    # (pruned reads still scan them, exactly)
+    stage = (lambda df, t: (_stage(df, t), None)) if ordered else _stage_for
+    return _layout_rewrite(
+        spark, table, "compact", "compact", pick, pack, stage,
+        lambda picked: cols,
+    )
 
 
 def tx_reorg_purge(
@@ -5483,37 +5515,19 @@ def tx_reorg_purge(
     whole); this is the lakehouse-native completion of its DELETE.
     """
 
-    def attempt():  # fresh snapshot: new vectors / rewritten files
-        parent, files = snapshot_files(table)
-        dvs = snapshot_dvs(table)
-        live = set(files)
-        hit = sorted(f for f, pos in dvs.items() if pos and f in live)
-        if not hit:
-            return parent, 0
-        schema = table_schema(table)
-        schema_json = schema.json() if schema is not None else None
-        # stats parity: whatever was skippable before stays skippable
-        prior = snapshot_stats(table)
-        stat_cols = sorted(
-            {c for f in hit for c in prior.get(f, {}).get("c", {})}
-            | set(table_cluster_by(table))
-        )
-        live_df = _live_rows(spark, table, schema, hit, dvs)
+    def pick(files, dvs):
+        hit = sorted(f for f in files if dvs.get(f))
         # output sizing from the HIT bytes (upper bound on survivors)
-        total = sum(os.path.getsize(os.path.join(table, f)) for f in hit)
-        eff = max(1, -(-total // target_file_bytes))  # ceil
-        added, pv = _stage_for(live_df.coalesce(eff), table)
-        stats = (
-            collect_file_stats(table, added, stat_cols)
-            if stat_cols and added else None
-        )
-        v = commit(
-            table, "reorg_purge", added, hit, parent,
-            schema_json=schema_json, stats=stats, pv=pv or None,
-        )
-        return v, len(hit)
+        return hit, _files_per_target(table, hit, target_file_bytes)
 
-    return _retry(table, "reorg-purge", attempt)
+    def prior_stats(hit):  # whatever was skippable before stays so
+        prior = snapshot_stats(table)
+        return {c for f in hit for c in prior.get(f, {}).get("c", {})}
+
+    return _layout_rewrite(
+        spark, table, "reorg-purge", "reorg_purge", pick,
+        lambda df, n: df.coalesce(n), _stage_for, prior_stats,
+    )
 
 
 def tx_repartition_table(
@@ -5547,8 +5561,7 @@ def tx_repartition_table(
             "declares a NEW layout; use tx_compact for plain bin-packing)"
         )
 
-    def attempt():
-        parent, files = snapshot_files(table)
+    def pick(files, dvs):
         if not files:
             raise FileNotFoundError(
                 f"no live files under {table}; declare partitioning on "
@@ -5563,21 +5576,15 @@ def tx_repartition_table(
                 raise ValueError(
                     f"partition column(s) {missing} not in table schema"
                 )
-        schema_json = schema.json() if schema is not None else None
-        live_df = _live_rows(spark, table, schema, files, snapshot_dvs(table))
-        added, pv = _stage_partitioned(live_df, table, list(partition_by))
-        stats = (
-            collect_file_stats(table, added, stats_cols)
-            if stats_cols else None
-        )
-        v = commit(
-            table, "repartition", added, files, parent,
-            schema_json=schema_json, stats=stats, pv=pv,
-            partition_by=list(partition_by),
-        )
-        return v, len(files)
+        return files, None
 
-    return _retry(table, "repartition", attempt)
+    return _layout_rewrite(
+        spark, table, "repartition", "repartition", pick,
+        lambda df, n: df,
+        lambda df, t: _stage_partitioned(df, t, list(partition_by)),
+        lambda picked: stats_cols or [],
+        partition_by=list(partition_by),
+    )
 
 
 def tx_sorted_file_order(
@@ -5646,7 +5653,6 @@ def tx_optimize(
     spark: SparkSession,
     table: str,
     target_file_bytes: int = 128 << 20,
-    min_files: int = 2,
     stats_cols: list[str] | None = None,
     partition_filter: dict | None = None,
 ) -> tuple[int, int]:
@@ -5670,7 +5676,7 @@ def tx_optimize(
     the selected files): a racing delete/compact of the same files
     conflicts and this retries from a fresh snapshot; racing appends
     commute. Returns (version, files_replaced) — (current, 0) when
-    fewer than ``min_files`` qualify and no vectors need folding.
+    fewer than two files qualify and no vectors need folding.
 
     ``partition_filter``: Delta's ``OPTIMIZE ... WHERE`` on the
     incremental path — only files PROVABLY pure on the requested
@@ -5688,75 +5694,29 @@ def tx_optimize(
     ONLY the selected small files' rows, not the table.
     """
     cluster_by = table_cluster_by(table)
-    eff_stats_cols = stats_cols
-    if cluster_by:
-        eff_stats_cols = sorted(set(stats_cols or []) | set(cluster_by))
 
-    def attempt():
-        parent, files = snapshot_files(table)
-        if partition_filter:
-            declared = set(table_partition_by(table))
-            unknown = sorted(set(partition_filter) - declared)
-            if unknown:
-                raise ValueError(
-                    f"partition_filter column(s) {unknown} are not "
-                    f"partition columns of {table} "
-                    f"(declared: {sorted(declared) or 'none'})"
-                )
-            pv = snapshot_pv(table)
-            want = {
-                c: {
-                    _pv_str(x)
-                    for x in (
-                        v if isinstance(v, (list, tuple, set)) else [v]
-                    )
-                }
-                for c, v in partition_filter.items()
-            }
-            files = [
-                f
-                for f in files
-                if f in pv
-                and all(
-                    c in pv[f] and pv[f][c] in w for c, w in want.items()
-                )
-            ]
-        dvs = snapshot_dvs(table)
+    def pick(files, dvs):
         small = [
             f
-            for f in files
+            for f in _partition_scope(table, files, partition_filter)
             if f in dvs
             or os.path.getsize(os.path.join(table, f)) < target_file_bytes
         ]
-        if len(small) < min_files and not any(f in dvs for f in small):
-            return parent, 0
-        total = sum(os.path.getsize(os.path.join(table, f)) for f in small)
-        n_out = max(1, -(-total // target_file_bytes))  # ceil
-        schema = table_schema(table)
-        schema_json = schema.json() if schema is not None else None
-        small_set = set(small)
-        live_df = _live_rows(
-            spark, table, schema, small,
-            {f: p for f, p in dvs.items() if f in small_set},
-        )
+        if len(small) < _OPTIMIZE_MIN_FILES and not any(
+            f in dvs for f in small
+        ):
+            return [], None
+        return small, _files_per_target(table, small, target_file_bytes)
+
+    def pack(df, n):
         if cluster_by:
-            from .lake import z_cluster
+            return z_cluster(df, cluster_by, num_files=n)
+        return df.coalesce(n)
 
-            packed = z_cluster(live_df, cluster_by, num_files=int(n_out))
-        else:
-            packed = live_df.coalesce(int(n_out))
-        added, pv = _stage_for(packed, table)
-        stats = (
-            collect_file_stats(table, added, eff_stats_cols)
-            if eff_stats_cols else None
-        )
-        v = commit(
-            table, "compact", added, small, parent,
-            schema_json=schema_json, stats=stats, pv=pv or None,
-        )
-        return v, len(small)
-
-    return _retry(table, "optimize", attempt)
+    return _layout_rewrite(
+        spark, table, "optimize", "compact", pick, pack, _stage_for,
+        lambda picked: stats_cols or [],
+    )
 
 
 def tx_restore(

@@ -4,6 +4,8 @@ that carry the 100 TB case."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE, jobs_run
@@ -307,11 +309,13 @@ def test_bloom_manifest_point_lookup_prunes_and_matches(spark, tmp_path):
     # useless here; only the bloom filter can prune equality probes.
     df = spark.range(0, 6000).withColumn("val", F.col("id") % 7)
     df.repartition(12, "val").write.parquet(t)  # id spread across files
-    # the build's jobs: the auto-size count and the sidecar write; the
-    # returned filter count is read from the sidecar's footers
+    # the build's jobs: the schema read and the sidecar write; the
+    # auto-size reads the data files' footers and the returned filter
+    # count the sidecar's, so neither starts a job (4 jobs, the same
+    # as with n_bits given)
     n, jobs = jobs_run(spark, lambda: write_bloom_manifest(spark, t, "id"))
     assert n == spark.read.parquet(t).select("_metadata.file_path").distinct().count()
-    assert jobs == 7
+    assert jobs == 4
 
     got, n_read, n_total = read_point_lookup(spark, t, "id", 4242)
     rows = got.collect()
@@ -448,6 +452,46 @@ def test_bloom_autosize_prevents_saturation_on_big_files(spark, tmp_path):
     got, n_read, n_total = read_point_lookup(spark, t, "id", 31_337)
     assert [r.id for r in got.collect()] == [31_337]
     assert n_read < n_total  # still prunes at this density
+
+
+def test_bloom_autosize_is_one_footer_rule(spark, tmp_path):
+    """The manifest and the txlog sidecar size their filters with one
+    rule: ~10 bits per row of the largest file (next power of two,
+    floor 4096), rows read from the footers, which gives the width a
+    Spark per-file count would."""
+    import pyarrow.parquet as pq
+
+    from parallel_dbms_spark.sources import txlog
+    from parallel_dbms_spark.sources.lake import (
+        bloom_auto_bits,
+        write_bloom_manifest,
+    )
+
+    t = str(tmp_path / "sized")
+    df = spark.range(0, 6000).withColumn("val", F.col("id") % 7)
+    df.repartition(12, "val").write.parquet(t)
+    largest = (
+        spark.read.parquet(t).groupBy("_metadata.file_path").count()
+        .agg(F.max("count")).head()[0]
+    )
+    want = 4096
+    while want < 10 * largest:
+        want <<= 1
+    write_bloom_manifest(spark, t, "id")
+
+    def widths(path):
+        return set(pq.read_table(path).column("n_bits").to_pylist())
+
+    assert widths(t + "/_bloom_id") == {want}
+
+    tt = str(tmp_path / "tx")
+    txlog.tx_append(df.repartition(12, "val"), tt, bloom_cols=["id"])
+    _, files = txlog.snapshot_files(tt)
+    (sidecar,) = set(txlog.snapshot_bloom_map(tt)["id"].values())
+    assert widths(os.path.join(tt, sidecar)) == {want} == {
+        bloom_auto_bits(os.path.join(tt, f) for f in files)
+    }
+    assert bloom_auto_bits([]) == 4096
 
 
 def test_zorder_manifest_2d_prunes_tighter_than_1d_sort(spark, tmp_path):

@@ -1807,7 +1807,7 @@ def test_optimize_binpacks_only_small_files(spark, table):
     assert len(after) == 2  # big + one packed file
     got = {r.k for r in txlog.read_snapshot(spark, table).collect()}
     assert got == {1, 2} | set(range(2000))
-    # below min_files nothing qualifies -> no-op commit-free
+    # a lone small file does not qualify -> no-op commit-free
     assert txlog.tx_optimize(spark, table, target_file_bytes=target) == (v, 0)
 
 
@@ -4537,3 +4537,124 @@ def test_one_retry_loop_and_no_retry_knobs():
 
     assert catchers(txlog) == ["_retry"]
     assert catchers(txlog_ds) == ["_maybe_auto_compact"]
+
+
+def _layout_table(spark, table):
+    """A table carrying every plane a layout rewrite must keep:
+    value-pure partitions on ``g``, row tracking, a renamed (column-
+    mapped) column ``val`` with declared clustering on it, and a
+    merge-on-read delete."""
+    def rows(lo, hi):
+        return [(i, "ab"[i % 2], i % 3, float(i % 11)) for i in range(lo, hi)]
+
+    txlog.tx_append(
+        spark.createDataFrame(rows(0, 60), "k long, g string, h long, x double")
+        .repartition(3),
+        table, partition_by=["g"],
+    )
+    txlog.tx_enable_row_tracking(table)
+    txlog.tx_rename_column(spark, table, "x", "val")
+    txlog.tx_set_cluster_by(table, ["val"])
+    txlog.tx_append(
+        spark.createDataFrame(
+            rows(60, 80), "k long, g string, h long, val double"
+        ),
+        table,
+    )
+    txlog.tx_delete_where_mor(spark, table, "k % 7 = 0")
+
+
+# verb -> (call, the partition column its outputs are staged value-pure
+# on or None, the Spark jobs it starts on _layout_table)
+_LAYOUT_VERBS = {
+    "compact": (lambda spark, t: txlog.tx_compact(spark, t), None, 6),
+    "optimize": (lambda spark, t: txlog.tx_optimize(spark, t), "g", 6),
+    "reorg_purge": (lambda spark, t: txlog.tx_reorg_purge(spark, t), "g", 3),
+    "repartition": (
+        lambda spark, t: txlog.tx_repartition_table(spark, t, ["h"]), "h", 3,
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_LAYOUT_VERBS))
+def test_layout_rewrite_invariants(spark, table, verb):
+    """Every layout rewrite changes only which files hold the rows: the
+    snapshot keeps the same rows, each with its ``_row_id`` and
+    ``_row_commit_version``; no rewritten file keeps a deletion vector;
+    value-pure outputs record their partition values; the declared
+    clustering column has stats on every added file."""
+    import pyarrow.parquet as pq
+
+    run, part, want_jobs = _LAYOUT_VERBS[verb]
+    _layout_table(spark, table)
+
+    def rows():
+        return sorted(
+            tuple(r) for r in
+            txlog.read_snapshot(spark, table, with_row_ids=True).collect()
+        )
+
+    before = rows()
+    assert txlog.snapshot_dvs(table)
+    _, old = txlog.snapshot_files(table)
+    (_, replaced), jobs = jobs_run(spark, lambda: run(spark, table))
+    _, new = txlog.snapshot_files(table)
+    added = sorted(set(new) - set(old))
+    assert added and replaced == len(set(old) - set(new))
+    assert rows() == before
+    assert txlog.snapshot_dvs(table) == {}
+    stats, pv = txlog.snapshot_stats(table), txlog.snapshot_pv(table)
+    assert all("val" in stats[f]["c"] for f in added)
+    for f in added:
+        if part is None:
+            assert f not in pv
+            continue
+        vals = pq.read_table(os.path.join(table, f), columns=[part])
+        assert {txlog._pv_str(x) for x in vals.column(part).to_pylist()} == {
+            pv[f][part]
+        }
+    assert jobs == want_jobs
+
+
+def test_repartition_keeps_declared_clustering_stats(spark, table):
+    """tx_repartition_table records the declared clustering columns'
+    stats like every other layout rewrite, so skipping on them
+    survives a partition evolution."""
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(i // 20, i) for i in range(lo, hi)], "g long, v long"
+        )
+
+    txlog.tx_append(rows(0, 30), table)
+    txlog.tx_set_cluster_by(table, ["v"])
+    txlog.tx_append(rows(30, 60), table)
+    txlog.tx_repartition_table(spark, table, ["g"])
+    _, files = txlog.snapshot_files(table)
+    stats = txlog.snapshot_stats(table)
+    assert all("v" in stats[f]["c"] for f in files)
+    df, n_read, n_total = txlog.tx_read_skipping(spark, table, "v", 0, 5)
+    assert sorted(r.v for r in df.collect()) == list(range(6))
+    assert n_read < n_total
+
+
+def test_layout_rewrites_share_one_kernel():
+    """The four layout verbs are file choices over ``_layout_rewrite``:
+    ``_live_rows`` (the rewrite's read) is called only by it and by the
+    copy-on-write kernel, so a new layout verb reuses the attempt
+    instead of copying it; and no public txlog function takes a
+    ``min_files`` knob."""
+    import ast
+    import inspect
+
+    callers = {
+        fn.name  # module-level defs: a nested attempt() counts as its outer
+        for fn in ast.parse(inspect.getsource(txlog)).body
+        if isinstance(fn, ast.FunctionDef) and any(
+            isinstance(n, ast.Call) and ast.unparse(n.func) == "_live_rows"
+            for n in ast.walk(fn)
+        )
+    }
+    assert callers == {"_layout_rewrite", "_cow_rewrite"}
+    for name, obj in vars(txlog).items():
+        if not name.startswith("_") and inspect.isfunction(obj):
+            assert "min_files" not in inspect.signature(obj).parameters, name
